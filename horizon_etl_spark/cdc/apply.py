@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from horizon_etl_spark.cdc import schema as S
 from horizon_etl_spark.cdc.lww import lww_reduce, lww_reduce_salted
-from horizon_etl_spark.tables.lake import LakeTable
+from horizon_etl_spark.tables.lake import LakeTable, observe_counts
 
 
 @dataclass
@@ -147,8 +147,6 @@ def apply_batch(
     maintenance folds the row-level images merge_attrs also returns —
     both with the same exactly-once batch-watermark guards as the
     whole-row path."""
-    from pyspark.sql import Observation
-
     started = _now()
     spark = batch.sparkSession
     attr_mode = bool(pipe.target.snapshot().get("attr_lww"))
@@ -168,17 +166,12 @@ def apply_batch(
     #           the raw batch twice)
     # Everything downstream (metrics, MERGE, rollup, stats) reads only
     # `winners` / the target — never the raw feed again.
-    obs = Observation(f"apply_batch_{batch_id}")
     reason = _reason(
         "fields" if attr_mode and "fields" in batch.columns else None,
         whitelist,
         vocab_size,
     )
-    tagged = batch.withColumn("_reason", reason).observe(
-        obs,
-        F.count(F.lit(1)).alias("input_rows"),
-        F.sum(F.when(F.col("_reason").isNull(), 1).otherwise(0)).alias("valid_rows"),
-    )
+    tagged, counts = _tag_and_count(batch, reason, f"apply_batch_{batch_id}")
     if persist_source:
         tagged = tagged.persist()
     winners = None
@@ -222,13 +215,11 @@ def apply_batch(
             _write_bucket_metrics(pipe, winners, batch_id)
 
         pre_merge_version = pipe.target.current_version() if with_rollup else None
-        # cache the merge join when anything re-reads it: the change-log
-        # sink append, or rollup maintenance evaluating the returned
-        # change images right after the merge.  Passing True makes US
-        # the cache owner — merge returns the handle in
-        # stats["persisted_join"] and the finally below releases it
-        # after the last consumer (_maintain_rollup) has run
-        persist_join = with_change_log or with_rollup
+        # rollup maintenance evaluates the returned change images after
+        # the merge, so it asks merge to keep the join cached: WE own
+        # that cache (stats["persisted_join"]) and the finally below
+        # releases it after _maintain_rollup has run
+        persist_join = with_rollup
         if attr_mode:
             stats = pipe.target.merge_attrs(
                 winners.drop("_key_events"),
@@ -247,19 +238,9 @@ def apply_batch(
                 persist_join=persist_join,
             )
 
-        # counts rode the winners materialization; fall back to a
-        # direct pass for degenerate plans where Catalyst optimized the
-        # CollectMetrics node away (e.g. provably-empty local batches)
-        try:
-            counts = obs.get
-            input_rows = int(counts["input_rows"])
-            valid_rows = int(counts["valid_rows"] or 0)
-        except Exception:
-            row = tagged.agg(
-                F.count(F.lit(1)).alias("i"),
-                F.sum(F.when(F.col("_reason").isNull(), 1).otherwise(0)).alias("v"),
-            ).collect()[0]
-            input_rows, valid_rows = int(row["i"]), int(row["v"] or 0)
+        # counts rode the winners materialization
+        c = counts()
+        input_rows, valid_rows = c["input_rows"], c["valid_rows"]
         quarantined_rows = input_rows - valid_rows
         if quarantined_rows > 0:
             _write_quarantine(pipe, tagged, batch_id, attr_mode, input_rows)
@@ -401,6 +382,20 @@ def _write_quarantine(
         )
     finally:
         cached.unpersist()
+
+
+def _tag_and_count(frame: DataFrame, reason, name: str):
+    """Tag each row with its quarantine ``_reason`` (null = valid).
+    Returns the tagged frame and the function that reads back its
+    input/valid row counts, which ride the first action over it."""
+    return observe_counts(
+        frame.withColumn("_reason", reason),
+        name,
+        {
+            "input_rows": F.count(F.lit(1)),
+            "valid_rows": F.sum(F.when(F.col("_reason").isNull(), 1).otherwise(0)),
+        },
+    )
 
 
 def _reason(
@@ -736,8 +731,6 @@ def bootstrap(
     ``reprocess_quarantine``.  In attr-LWW mode every column's
     assertion lsn starts at ``as_of_lsn`` (the snapshot asserts the
     whole row)."""
-    from pyspark.sql import Observation
-
     from horizon_etl_spark.tables.lake import (
         DEL_LSN_COL,
         LSN_COL,
@@ -761,14 +754,7 @@ def bootstrap(
     )
     if "ts" not in feed_shape.columns:  # quarantine rows carry the feed shape
         feed_shape = feed_shape.withColumn("ts", F.lit(None).cast("timestamp"))
-    obs = Observation("bootstrap")
-    tagged = feed_shape.withColumn(
-        "_reason", _reason(None, whitelist)
-    ).observe(
-        obs,
-        F.count(F.lit(1)).alias("input_rows"),
-        F.sum(F.when(F.col("_reason").isNull(), 1).otherwise(0)).alias("valid_rows"),
-    )
+    tagged, counts = _tag_and_count(feed_shape, _reason(None, whitelist), "bootstrap")
 
     payload = [f.name for f in S.TARGET_SCHEMA.fields]
     meta = [
@@ -789,20 +775,11 @@ def bootstrap(
         operation="bootstrap",
         props={"bootstrap_lsn": as_of_lsn},
     )
-    # same degenerate-plan fallback as apply_batch/merge: if Catalyst
-    # elided the CollectMetrics node, recompute directly — this runs
-    # AFTER the overwrite commit, so raising here would strand a
-    # non-empty target behind bootstrap's empty-target precondition
-    try:
-        counts = obs.get
-        input_rows = int(counts["input_rows"] or 0)
-        loaded = int(counts["valid_rows"] or 0)
-    except Exception:
-        row = tagged.agg(
-            F.count(F.lit(1)).alias("i"),
-            F.sum(F.when(F.col("_reason").isNull(), 1).otherwise(0)).alias("v"),
-        ).collect()[0]
-        input_rows, loaded = int(row["i"] or 0), int(row["v"] or 0)
+    # this runs AFTER the overwrite commit, so it must not raise (that
+    # would strand a non-empty target behind bootstrap's empty-target
+    # precondition) — counts() falls back to a direct pass instead
+    c = counts()
+    input_rows, loaded = c["input_rows"], c["valid_rows"]
     if input_rows > loaded:
         _write_quarantine(pipe, tagged, BOOTSTRAP_BATCH_ID, attr_mode, input_rows)
     if with_rollup:

@@ -1,0 +1,72 @@
+"""Job budget per clean batch: one ``apply_batch`` must start exactly the
+Spark jobs pinned below, in whole-row and per-attribute mode, with the
+change log on and off.
+
+Per-batch fixed cost dominates small batches, so an extra job per batch
+is a regression that host noise hides in wall-clock numbers; counting
+jobs catches it deterministically.  Jobs are counted with the
+scheduler's next-job-id counter (one client thread, so every id issued
+during the call belongs to it), the same counter the benchmark's span
+recorder reads.  The pins were measured under this suite's session
+config (local[4], 8 shuffle partitions, AQE on): if a change lowers a
+count, lower its pin; a rise fails here instead of hiding in noise.
+"""
+
+import os
+
+import pytest
+from pyspark.sql import functions as F
+
+from horizon_etl_spark.cdc.apply import CdcPipeline, apply_batch
+from horizon_etl_spark.cdc.generator import change_feed
+
+# (attr_mode, with_change_log) -> Spark jobs for one warm, clean batch
+JOB_BUDGET = {
+    (False, False): 9,
+    (False, True): 11,
+    (True, False): 9,
+    (True, True): 11,
+}
+
+
+def _next_job_id(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+@pytest.fixture(scope="module")
+def staged_feed(spark, tmp_path_factory):
+    """Two batches staged as one parquet file each (the stream's input
+    shape), with a ``fields`` column for the per-attribute runs."""
+    root = str(tmp_path_factory.mktemp("job_budget") / "feed")
+    feed = change_feed(spark, 2_000, 400, seed=11, num_batches=2, max_len=8)
+    m = F.pmod(F.xxhash64(F.col("lsn"), F.lit("fields")), F.lit(3))
+    feed = feed.withColumn(
+        "fields",
+        F.when(F.col("op") == "delete", F.lit(None).cast("array<string>"))
+        .when(m == 0, F.lit(None).cast("array<string>"))
+        .when(m == 1, F.array(F.lit("tokens"), F.lit("n_tok")))
+        .otherwise(F.array(F.lit("source"))),
+    )
+    feed.repartition("batch").write.partitionBy("batch").parquet(root)
+    return root
+
+
+@pytest.mark.parametrize("attr_mode", [False, True], ids=["whole_row", "attr"])
+@pytest.mark.parametrize("with_change_log", [False, True], ids=["log_off", "log_on"])
+def test_clean_batch_job_budget(spark, tmp_path, staged_feed, attr_mode, with_change_log):
+    def batch(b):
+        df = spark.read.parquet(os.path.join(staged_feed, f"batch={b}"))
+        return df if attr_mode else df.drop("fields")
+
+    pipe = CdcPipeline.create(str(tmp_path / "p"), bucket_count=4, attr_lww=attr_mode)
+    # warm batch: the first merge into an empty target has no files to
+    # prune or scan, so it is not the steady-state shape
+    apply_batch(pipe, batch(0), batch_id=0, with_change_log=with_change_log)
+    b1 = batch(1)
+    j0 = _next_job_id(spark)
+    run = apply_batch(pipe, b1, batch_id=1, with_change_log=with_change_log)
+    jobs = _next_job_id(spark) - j0
+    assert run["status"] == "success" and run["quarantined"] == 0
+    assert jobs == JOB_BUDGET[(attr_mode, with_change_log)], (
+        f"clean batch started {jobs} Spark jobs"
+    )
