@@ -437,13 +437,15 @@ def run_bloom_bench(
         cur = {f["path"] for f in t.snapshot()["files"]}
         return sum(r for p, r in prev.items() if p not in cur)
 
-    out: dict = {"keys": num_keys, "strata": strata, "trickle_keys": trickle_keys}
     # loaded keys are EVEN ids; odd ids are the never-loaded interleaved
     # keyspace the insert trickle draws from
     pop = spark.range(num_keys).select((F.col("id") * 2).alias("id"))
     rand = ((F.col("id") * 2654435761) % num_keys) * 2
     upd_ids = spark.range(trickle_keys).select(rand.alias("id")).distinct()
     ins_ids = spark.range(trickle_keys).select((rand + 1).alias("id")).distinct()
+    # the multiplicative hash can collide: report the distinct keys the
+    # trickles actually carry (both use the same ids), not the request
+    out: dict = {"keys": num_keys, "strata": strata, "trickle_keys": upd_ids.count()}
     for mode, props in (("bloom", {BLOOM_PROP: "true"}), ("range", None)):
         t = LakeTable.create(
             f"{root}/{mode}", S.TARGET_SCHEMA, key_col="doc_id",
@@ -525,14 +527,16 @@ def run_cluster_bench(
         cur = {f["path"] for f in t.snapshot()["files"]}
         return sum(r for p, r in prev.items() if p not in cur)
 
-    out: dict = {
-        "keys": num_keys,
-        "trickle_keys": trickle_keys,
-        "target_file_rows": target_rows,
-    }
     pop = spark.range(num_keys)
     rand = (F.col("id") * 2654435761) % num_keys
     upd_ids = spark.range(trickle_keys).select(rand.alias("id")).distinct()
+    out: dict = {
+        "keys": num_keys,
+        # the multiplicative hash can collide: report the distinct keys
+        # the trickle actually carries, not the number requested
+        "trickle_keys": upd_ids.count(),
+        "target_file_rows": target_rows,
+    }
     for mode, cluster in (("plain", False), ("clustered", True)):
         t = LakeTable.create(
             f"{root}/{mode}", S.TARGET_SCHEMA, key_col="doc_id", bucket_count=buckets

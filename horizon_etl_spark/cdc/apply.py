@@ -28,11 +28,11 @@ from dataclasses import dataclass
 from datetime import datetime, timezone
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from horizon_etl_spark.cdc import schema as S
 from horizon_etl_spark.cdc.lww import lww_reduce, lww_reduce_salted
-from horizon_etl_spark.tables.lake import LakeTable, observe_counts
+from horizon_etl_spark.tables.lake import KEY_EVENTS_COL, LakeTable, observe_counts
 
 
 @dataclass
@@ -206,14 +206,13 @@ def apply_batch(
             ).persist()
 
         # No explicit materialize: the FIRST downstream action over the
-        # persisted winners — the metrics aggregation, or the merge's
-        # bucket-prune scan — runs the reduction, fills the cache every
-        # later step reuses, and fires the Observation.  (A dedicated
-        # winners.count() here was one whole extra job per batch for
-        # work the next action repeats from cache anyway.)
-        if collect_metrics:
-            _write_bucket_metrics(pipe, winners, batch_id)
-
+        # persisted winners — the merge's per-bucket aggregation, which
+        # also evaluates the bucket metrics (``bucket_aggs``) — runs the
+        # reduction, fills the cache every later step reuses, and fires
+        # the Observation.  (A dedicated winners.count() here was one
+        # whole extra job per batch for work the next action repeats
+        # from cache anyway.)
+        bucket_aggs = _bucket_metric_aggs() if collect_metrics else None
         pre_merge_version = pipe.target.current_version() if with_rollup else None
         # rollup maintenance evaluates the returned change images after
         # the merge, so it asks merge to keep the join cached: WE own
@@ -222,21 +221,25 @@ def apply_batch(
         persist_join = with_rollup
         if attr_mode:
             stats = pipe.target.merge_attrs(
-                winners.drop("_key_events"),
+                winners,
                 change_log_sink=pipe.change_log if with_change_log else None,
                 change_log_extra={"batch_id": batch_id},
                 persist_join=persist_join,
+                bucket_aggs=bucket_aggs,
             )
         else:
             stats = pipe.target.merge(
-                winners.drop("_key_events"),
+                winners,
                 op_col="op",
                 lsn_col="lsn",
                 delete_op="delete",
                 change_log_sink=pipe.change_log if with_change_log else None,
                 change_log_extra={"batch_id": batch_id},
                 persist_join=persist_join,
+                bucket_aggs=bucket_aggs,
             )
+        if collect_metrics:
+            _write_bucket_metrics(pipe, stats["bucket_aggs"], batch_id)
 
         # counts rode the winners materialization
         c = counts()
@@ -565,27 +568,38 @@ def _maintain_rollup(
     )
 
 
-def _write_bucket_metrics(pipe: CdcPipeline, winners: DataFrame, batch_id: int) -> None:
+def _bucket_metric_aggs() -> dict[str, Column]:
     """Per-partition lineage (north_rule 'per-partition lineage + metrics'):
     per target bucket — events in, distinct keys, hottest-key event
     count (the skew signal that motivates salted LWW), winner payload
-    bytes.  Computed entirely from the already-reduced ``winners``
-    (whose ``_key_events`` rode the LWW shuffle) — zero extra passes
-    over the raw feed."""
-    from horizon_etl_spark.tables.lake import bucket_expr
+    bytes.  Aggregates over the already-reduced winners (whose
+    ``_key_events`` rode the LWW shuffle), evaluated by the merge's one
+    per-bucket aggregation — no pass of their own."""
+    return {
+        "rows_in": F.sum(KEY_EVENTS_COL),
+        "distinct_keys": F.count(F.lit(1)),
+        "max_key_rows": F.max(KEY_EVENTS_COL),
+        "winner_bytes": F.sum(F.coalesce(F.col("n_tok"), F.lit(0)) * 4 + 64),
+    }
 
-    nb = pipe.target.bucket_count or 16
-    m = winners.groupBy(bucket_expr("doc_id", nb).alias("bucket_id")).agg(
-        F.sum("_key_events").alias("rows_in"),
-        F.count(F.lit(1)).alias("distinct_keys"),
-        F.max("_key_events").alias("max_key_rows"),
-        F.sum(F.coalesce(F.col("n_tok"), F.lit(0)) * 4 + 64).alias("winner_bytes"),
+
+def _write_bucket_metrics(
+    pipe: CdcPipeline, per_bucket: dict[int, dict[str, Any]], batch_id: int
+) -> None:
+    """Append the merge's ``bucket_aggs`` (see :func:`_bucket_metric_aggs`)
+    as the batch's metrics rows: O(buckets) rows, driver-side parquet
+    append, no Spark job.  Idempotent per batch like the change-log
+    sink: the append records ``last_batch_id`` and a redelivery of
+    exactly that batch (a crash after this append, before the runs row)
+    appends nothing."""
+    if pipe.metrics.props.get("last_batch_id") == batch_id:
+        return
+    rows = [
+        {"batch_id": batch_id, "bucket_id": b, **v} for b, v in sorted(per_bucket.items())
+    ]
+    pipe.metrics.append_rows(
+        rows, operation=f"metrics(batch={batch_id})", props={"last_batch_id": batch_id}
     )
-    # O(buckets) rows: collect + driver-side parquet append (no second
-    # Spark job for the write); this collect is also the action that
-    # materializes the winners cache and fires the apply Observation
-    rows = [{**r.asDict(), "batch_id": batch_id} for r in m.collect()]
-    pipe.metrics.append_rows(rows, operation=f"metrics(batch={batch_id})")
 
 
 def reprocess_quarantine(

@@ -73,6 +73,10 @@ DEFAULT_TARGET_FILE_ROWS = 4_000_000
 # per payload column plus the row's delete watermark.
 DEL_LSN_COL = "_del_lsn"
 ALSN_PREFIX = "_alsn_"
+# The LWW reductions' per-key collapsed-event count (``with_counts``).
+# A merge batch may carry it for its ``bucket_aggs``; it never evolves
+# the table schema and is never written.
+KEY_EVENTS_COL = "_key_events"
 
 
 def alsn_col(c: str) -> str:
@@ -112,6 +116,18 @@ class FileEntry:
             d.get("max_key"),
             d.get("bloom"),
         )
+
+
+@dataclass
+class _BucketSummary:
+    """Per-bucket facts about one merge batch, all from one aggregation
+    (:meth:`LakeTable._bucket_summary`)."""
+
+    ranges: dict[int, tuple[Any, Any]]  # bucket -> (min key, max key)
+    rows: dict[int, int]  # bucket -> batch rows (= keys: one row per key)
+    probed: dict[int, set[int]]  # bucket -> files whose bloom joined the probe
+    hits: dict[int, set[int]]  # bucket -> probed files some batch key hit
+    aggs: dict[int, dict[str, Any]]  # bucket -> the caller's bucket_aggs values
 
 
 def bucket_expr(key_col: str, bucket_count: int):
@@ -173,21 +189,25 @@ BLOOM_PROP = "key_bloom"
 # bucket+range-only pruning instead of failing or crawling
 READ_KEYS_ISIN_MAX = 10_000
 # Exact-key prune refinement (trickle merges): when the per-bucket
-# interval test keeps >1 un-probed file in a bucket whose batch holds
-# at most this many distinct keys, collect those keys (one extra SMALL
-# Spark action) and carry every file whose [min,max] contains none —
-# on a key-clustered table this isolates ~1 file per point key with
-# no bloom sidecars (and no load tax).  Dense/bulk batches blow the
-# gate (their HLL count is large) and skip the second action entirely.
+# interval test keeps an un-probed file in a bucket whose batch holds
+# at most this many keys, collect those keys (one extra SMALL Spark
+# action: a shuffle-free projection of the refined buckets) and carry
+# every file whose [min,max] contains none — on a key-clustered table
+# this isolates ~1 file per point key with no bloom sidecars (and no
+# load tax).  The key count is the batch's exact per-bucket row count
+# (one row per key by the merge contract; a batch breaking it only
+# counts higher, so the gate gets stricter and pruning stays sound).
+# Dense/bulk batches blow the gate and skip the second action.
 PRUNE_REFINE_BUCKET_KEYS = 4_096
 PRUNE_REFINE_TOTAL_KEYS = 65_536
-# ...and the refinement must PAY: the second action re-executes the
-# batch lineage (the src frame is typically an unstaged
-# validate/dedup pipeline, not a cached scan), so a bucket only
-# qualifies when the rows it might avoid rewriting dwarf the batch
-# keys it holds — steady-state replay batches sit at amp ≈ 1 and must
-# never pay the extra pass (measured: an ungated refinement cost the
-# sf0.1 CDC bench ~40% of its apply throughput for zero carried files).
+# ...and the refinement must PAY: the second action re-reads the
+# batch (a cached frame under apply_batch, but a direct caller may
+# pass an unstaged validate/dedup pipeline it re-executes), so a
+# bucket only qualifies when the rows it might avoid rewriting dwarf
+# the batch keys it holds — steady-state replay batches sit at amp ≈ 1
+# and must never pay the extra pass (measured: an ungated refinement
+# cost the sf0.1 CDC bench ~40% of its apply throughput for zero
+# carried files).
 PRUNE_REFINE_MIN_AMP = 8
 # Clustering advisory (merge-time, consumed by job_maintain
 # --cluster-by-key auto): fires when a merge's copy-on-write rewrite
@@ -1154,23 +1174,36 @@ class LakeTable:
         return str(snap.get("props", {}).get(BLOOM_PROP, "")).lower() in ("true", "1")
 
     # ------------------------------------------------- shared merge plumbing
-    def _prune_for_batch(
-        self, src: DataFrame, snap: dict[str, Any]
-    ) -> tuple[list[FileEntry], list[FileEntry]]:
-        """Bucket + min/max-key (+ optional key-Bloom) file pruning for
-        a bucketed batch, decided driver-side over O(buckets) rows:
-        files whose bucket/key range can contain batch keys are
-        rewritten, the rest carry.  Files carrying a Bloom sidecar are
-        additionally membership-probed — the probes ride the SAME
-        single aggregation as the range stats (batch ⋈ broadcast
+    def _bucket_summary(
+        self,
+        src: DataFrame,
+        snap: dict[str, Any],
+        bucket_aggs: dict[str, Column] | None = None,
+    ) -> _BucketSummary:
+        """The merge's one per-bucket aggregation over a bucketed batch:
+        each touched bucket's key range and row count (the pruner's
+        inputs) plus the caller's ``bucket_aggs`` (``apply_batch``'s
+        bucket metrics), collected as O(buckets) rows by a single
+        ``groupBy``.
+
+        Files carrying a Bloom sidecar are additionally membership-
+        probed inside the SAME aggregation (batch ⋈ broadcast
         bloom-meta, unrolled ``bit_get`` tests, ``collect_set`` of hit
         file ids per bucket), so a point-key trickle against a
-        compacted table carries every file the batch provably misses
-        at no extra Spark action.  Both tests are free of false
-        negatives (range: disjoint intervals share no key; bloom: every
-        inserted key sets all its probe bits), so intersecting them is
-        sound and prunes strictly more than either alone."""
+        compacted table learns every file the batch provably misses at
+        no extra Spark action.  That join repeats each batch row once
+        per probed sidecar in its bucket, so on a bloom table the row
+        count is divided back by the bucket's probed-file count, and
+        the caller's aggregates — arbitrary, so not divisible — run as
+        their own aggregation over the batch rows themselves."""
         key = self.key_col
+        names = list(bucket_aggs or {})
+        aggs = [bucket_aggs[n].alias(n) for n in names]
+        bounds = [
+            F.min(key).alias("_mn"),
+            F.max(key).alias("_mx"),
+            F.count(F.lit(1)).alias("_n"),
+        ]
         all_files = [FileEntry.from_json(f) for f in snap["files"]]
         # files with a k-compatible sidecar get membership probes; the
         # sidecars are one-row parquet files scanned JVM-SIDE inside the
@@ -1213,18 +1246,11 @@ class LakeTable:
         # mis-sized sidecar silently drops out of the scan
         # (ignoreMissing/ignoreCorrupt + the m/k filter), its file is
         # then NOT in `probed`, and the range-only verdict stands.
-        probed_fids: dict[int, set[int]] = {}
-        hit_fids: dict[int, set[int]] = {}
+        probed: dict[int, set[int]] = {}
+        hits: dict[int, set[int]] = {}
         if not bloomed:
-            touched = (
-                src.groupBy(BUCKET_COL)
-                .agg(
-                    F.min(key).alias("mn"),
-                    F.max(key).alias("mx"),
-                    F.approx_count_distinct(key).alias("ndk"),
-                )
-                .collect()
-            )
+            touched = src.groupBy(BUCKET_COL).agg(*bounds, *aggs).collect()
+            agg_rows = touched if names else []
         else:
             spark = src.sparkSession
             lk = spark.createDataFrame(
@@ -1274,19 +1300,51 @@ class LakeTable:
             touched = (
                 probe.groupBy(BUCKET_COL)
                 .agg(
-                    F.min(key).alias("mn"),
-                    F.max(key).alias("mx"),
-                    F.approx_count_distinct(key).alias("ndk"),
+                    *bounds,
                     F.collect_set(F.col("_fid")).alias("probed"),
                     F.collect_set(F.when(hit, F.col("_fid"))).alias("hits"),
                 )
                 .collect()
             )
-            probed_fids = {r[BUCKET_COL]: set(r["probed"]) for r in touched}
-            hit_fids = {r[BUCKET_COL]: set(r["hits"]) for r in touched}
+            probed = {r[BUCKET_COL]: set(r["probed"]) for r in touched}
+            hits = {r[BUCKET_COL]: set(r["hits"]) for r in touched}
+            agg_rows = src.groupBy(BUCKET_COL).agg(*aggs).collect() if names else []
 
-        touched_range = {r[BUCKET_COL]: (r["mn"], r["mx"]) for r in touched}
-        touched_ndk = {r[BUCKET_COL]: int(r["ndk"]) for r in touched}
+        return _BucketSummary(
+            ranges={r[BUCKET_COL]: (r["_mn"], r["_mx"]) for r in touched},
+            # the left join pads a bucket without probed sidecars to one
+            # row per batch row, and repeats each row once per probed
+            # sidecar otherwise
+            rows={
+                r[BUCKET_COL]: r["_n"] // max(1, len(probed.get(r[BUCKET_COL], ())))
+                for r in touched
+            },
+            probed=probed,
+            hits=hits,
+            aggs={r[BUCKET_COL]: {n: r[n] for n in names} for r in agg_rows},
+        )
+
+    def _prune_for_batch(
+        self,
+        src: DataFrame,
+        snap: dict[str, Any],
+        summary: _BucketSummary | None = None,
+    ) -> tuple[list[FileEntry], list[FileEntry]]:
+        """Bucket + min/max-key (+ optional key-Bloom) file pruning for
+        a bucketed batch, decided driver-side from the batch's
+        :meth:`_bucket_summary` (computed here when ``summary`` is
+        None): files whose bucket/key range can contain batch keys are
+        rewritten, the rest carry, and a bloom-probed file is rewritten
+        only when some batch key hit it.  Both tests are free of false
+        negatives (range: disjoint intervals share no key; bloom: every
+        inserted key sets all its probe bits), so intersecting them is
+        sound and prunes strictly more than either alone."""
+        if summary is None:
+            summary = self._bucket_summary(src, snap)
+        key = self.key_col
+        all_files = [FileEntry.from_json(f) for f in snap["files"]]
+        touched_range = summary.ranges
+        touched_keys = summary.rows
         rewrite_files: list[FileEntry] = []
         carry_files: list[FileEntry] = []
         # bucket -> rewrite_files positions the interval test ALONE kept
@@ -1306,9 +1364,9 @@ class LakeTable:
                 and f.min_key is not None
                 and (f.max_key < rng[0] or f.min_key > rng[1])
             )
-            probed = idx in probed_fids.get(f.bucket, set())
+            probed = idx in summary.probed.get(f.bucket, set())
             if overlaps and probed:
-                overlaps = idx in hit_fids.get(f.bucket, set())
+                overlaps = idx in summary.hits.get(f.bucket, set())
             if overlaps:
                 if not probed and f.min_key is not None and f.max_key is not None:
                     refinable.setdefault(f.bucket, []).append(len(rewrite_files))
@@ -1319,39 +1377,41 @@ class LakeTable:
         # Exact-key refinement: the interval [batch-min, batch-max] per
         # bucket sweeps in every file BETWEEN two batch keys, even on a
         # key-clustered table whose file ranges are pairwise disjoint.
-        # For trickle-shaped buckets (HLL distinct-key estimate under
-        # the gate) a second SMALL action collects the actual batch
-        # keys and carries every un-probed file whose [min,max] holds
-        # none of them.  Sound (no false carries): file stats are true
-        # bounds and collect_set is exact, so a file containing a batch
-        # key always has some collected key inside its range.  Dense
-        # batches skip this entirely — they rewrite broadly regardless,
-        # and the gate keeps the driver's key copy O(refined buckets ×
-        # PRUNE_REFINE_BUCKET_KEYS) at worst.
+        # For trickle-shaped buckets (key count under the gate) a
+        # second SMALL action collects the actual batch keys — a plain
+        # projection of the refined buckets, no shuffle, sorted
+        # driver-side — and carries every un-probed file whose
+        # [min,max] holds none of them.  Sound (no false carries): file
+        # stats are true bounds and the collected keys are exact, so a
+        # file containing a batch key always has some collected key
+        # inside its range.  Dense batches skip this entirely — they
+        # rewrite broadly regardless, and the gate keeps the driver's
+        # key copy O(refined buckets × PRUNE_REFINE_BUCKET_KEYS) at
+        # worst (the gate counts rows, never fewer than the keys).
         # single-file buckets stay eligible: a sparse INSERT batch whose
         # keys straddle a lone file's range (but live in its gaps) is
         # exactly the wasted-rewrite case the refinement exists for
         refine = [
             b
             for b, ps in refinable.items()
-            if 0 < touched_ndk.get(b, 0) <= PRUNE_REFINE_BUCKET_KEYS
+            if 0 < touched_keys.get(b, 0) <= PRUNE_REFINE_BUCKET_KEYS
             # trickle-shaped only: the avoidable rewrite must dwarf the
             # bucket's batch keys, else the extra pass can't pay for
             # itself (see PRUNE_REFINE_MIN_AMP)
             and sum(int(rewrite_files[p].rows or 0) for p in ps)
-            > PRUNE_REFINE_MIN_AMP * touched_ndk[b]
+            > PRUNE_REFINE_MIN_AMP * touched_keys[b]
         ]
-        if refine and sum(touched_ndk[b] for b in refine) <= PRUNE_REFINE_TOTAL_KEYS:
-            keys_by_bucket = {
-                r[BUCKET_COL]: r["ks"]
-                for r in src.filter(F.col(BUCKET_COL).isin(refine))
-                .groupBy(BUCKET_COL)
-                .agg(F.sort_array(F.collect_set(key)).alias("ks"))
+        if refine and sum(touched_keys[b] for b in refine) <= PRUNE_REFINE_TOTAL_KEYS:
+            keys_by_bucket: dict[int, list[Any]] = {b: [] for b in refine}
+            for b, k in (
+                src.filter(F.col(BUCKET_COL).isin(refine) & F.col(key).isNotNull())
+                .select(BUCKET_COL, key)
                 .collect()
-            }
+            ):
+                keys_by_bucket[b].append(k)
             dropped: set[int] = set()
             for b in refine:
-                ks = keys_by_bucket.get(b) or []
+                ks = sorted(keys_by_bucket[b])
                 for pos in refinable[b]:
                     f = rewrite_files[pos]
                     i = bisect.bisect_left(ks, f.min_key)
@@ -1413,6 +1473,7 @@ class LakeTable:
         change_log_sink: "LakeTable | None" = None,
         change_log_extra: dict[str, Any] | None = None,
         persist_join: bool = False,
+        bucket_aggs: dict[str, Column] | None = None,
     ) -> dict[str, Any]:
         """Copy-on-write keyed MERGE — the engine's `MERGE INTO`.
 
@@ -1437,9 +1498,9 @@ class LakeTable:
 
         Returns stats + a lazily-evaluated ``change_log`` DataFrame of
         before/after images (valid as long as the pre-merge snapshot
-        files are retained).  Pruning, the join, stats, the write, the
-        lineage sink, ``persist_join`` and the commit are shared with
-        :meth:`merge_attrs` — see :meth:`_merge_core`.
+        files are retained).  Pruning, ``bucket_aggs``, the join, stats,
+        the write, the lineage sink, ``persist_join`` and the commit are
+        shared with :meth:`merge_attrs` — see :meth:`_merge_core`.
         """
         return self._merge_core(
             self.snapshot(),
@@ -1447,6 +1508,7 @@ class LakeTable:
             change_log_sink,
             change_log_extra,
             persist_join,
+            bucket_aggs,
         )
 
     # ----------------------------------------------------------- merge_attrs
@@ -1456,6 +1518,7 @@ class LakeTable:
         change_log_sink: "LakeTable | None" = None,
         change_log_extra: dict[str, Any] | None = None,
         persist_join: bool = False,
+        bucket_aggs: dict[str, Column] | None = None,
     ) -> dict[str, Any]:
         """Field-level (per-attribute) LWW MERGE for partial-update
         change events — the reference's core conflict resolution:
@@ -1507,6 +1570,7 @@ class LakeTable:
             change_log_sink,
             change_log_extra,
             persist_join,
+            bucket_aggs,
         )
 
     def _merge_core(
@@ -1516,6 +1580,7 @@ class LakeTable:
         change_log_sink: "LakeTable | None",
         change_log_extra: dict[str, Any] | None,
         persist_join: bool,
+        bucket_aggs: dict[str, Column] | None,
     ) -> dict[str, Any]:
         """The one keyed-MERGE skeleton behind :meth:`merge` and
         :meth:`merge_attrs`: evolve → prune + scan → one full-outer join
@@ -1528,6 +1593,13 @@ class LakeTable:
         projection over the join, then the written columns in file
         order); the six stat predicates; and the lineage frames (the
         sink frame and the row-image ``change_log``).
+
+        Per-bucket aggregates: ``bucket_aggs`` maps names to aggregate
+        columns over the batch; they are evaluated by the pruner's one
+        per-bucket aggregation (:meth:`_bucket_summary`) and come back
+        as ``bucket_aggs`` — ``{bucket: {name: value}}`` for every
+        bucket the batch touches.  The batch may carry
+        ``KEY_EVENTS_COL`` for them.
 
         Determinism: the batch (``strategy.batch``) must be deterministic.  The pruner, the
         optional exact-key refinement and the data write each evaluate
@@ -1557,7 +1629,7 @@ class LakeTable:
 
         # --- additive schema evolution from the batch's new columns
         table_schema = StructType.fromJson(snap["schema"])
-        add = strategy.new_fields({f.name for f in table_schema.fields})
+        add = strategy.new_fields({f.name for f in table_schema.fields} | {KEY_EVENTS_COL})
         if add:
             self.evolve_schema(
                 StructType(list(table_schema.fields) + add),
@@ -1568,7 +1640,8 @@ class LakeTable:
         strategy.bind(table_schema, key)
 
         src = batch.withColumn(BUCKET_COL, bucket_expr(key, nb))
-        rewrite_files, carry_files = self._prune_for_batch(src, snap)
+        buckets = self._bucket_summary(src, snap, bucket_aggs)
+        rewrite_files, carry_files = self._prune_for_batch(src, snap, buckets)
         cur = self._scan(spark, rewrite_files, table_schema).withColumn(
             BUCKET_COL, bucket_expr(key, nb)
         )
@@ -1674,6 +1747,7 @@ class LakeTable:
             # non-None iff the caller passed persist_join=True: the
             # still-cached join backing change_log
             "persisted_join": j if persist_join else None,
+            "bucket_aggs": buckets.aggs,
         }
 
     # ------------------------------------------------------------ overwrite

@@ -1,6 +1,6 @@
 """Job budget per clean batch: one ``apply_batch`` must start exactly the
-Spark jobs pinned below, in whole-row and per-attribute mode, with the
-change log on and off.
+Spark jobs pinned below, in whole-row and per-attribute mode and into a
+``key_bloom`` whole-row target, with the change log on and off.
 
 Per-batch fixed cost dominates small batches, so an extra job per batch
 is a regression that host noise hides in wall-clock numbers; counting
@@ -20,12 +20,16 @@ from pyspark.sql import functions as F
 from horizon_etl_spark.cdc.apply import CdcPipeline, apply_batch
 from horizon_etl_spark.cdc.generator import change_feed
 
-# (attr_mode, with_change_log) -> Spark jobs for one warm, clean batch
+# (target, with_change_log) -> Spark jobs for one warm, clean batch.  A
+# key_bloom target pays for the bloom probe, the bloom build and the
+# bucket metrics, which cannot ride the probe's per-sidecar join.
 JOB_BUDGET = {
-    (False, False): 9,
-    (False, True): 11,
-    (True, False): 9,
-    (True, True): 11,
+    ("whole_row", False): 7,
+    ("whole_row", True): 9,
+    ("attr", False): 7,
+    ("attr", True): 9,
+    ("key_bloom", False): 14,
+    ("key_bloom", True): 16,
 }
 
 
@@ -51,14 +55,18 @@ def staged_feed(spark, tmp_path_factory):
     return root
 
 
-@pytest.mark.parametrize("attr_mode", [False, True], ids=["whole_row", "attr"])
+@pytest.mark.parametrize("target", ["whole_row", "attr", "key_bloom"])
 @pytest.mark.parametrize("with_change_log", [False, True], ids=["log_off", "log_on"])
-def test_clean_batch_job_budget(spark, tmp_path, staged_feed, attr_mode, with_change_log):
+def test_clean_batch_job_budget(spark, tmp_path, staged_feed, target, with_change_log):
+    attr_mode = target == "attr"
+
     def batch(b):
         df = spark.read.parquet(os.path.join(staged_feed, f"batch={b}"))
         return df if attr_mode else df.drop("fields")
 
     pipe = CdcPipeline.create(str(tmp_path / "p"), bucket_count=4, attr_lww=attr_mode)
+    if target == "key_bloom":
+        pipe.target.set_props({"key_bloom": "true"})
     # warm batch: the first merge into an empty target has no files to
     # prune or scan, so it is not the steady-state shape
     apply_batch(pipe, batch(0), batch_id=0, with_change_log=with_change_log)
@@ -67,6 +75,6 @@ def test_clean_batch_job_budget(spark, tmp_path, staged_feed, attr_mode, with_ch
     run = apply_batch(pipe, b1, batch_id=1, with_change_log=with_change_log)
     jobs = _next_job_id(spark) - j0
     assert run["status"] == "success" and run["quarantined"] == 0
-    assert jobs == JOB_BUDGET[(attr_mode, with_change_log)], (
+    assert jobs == JOB_BUDGET[(target, with_change_log)], (
         f"clean batch started {jobs} Spark jobs"
     )

@@ -10,12 +10,15 @@ and counts must reconcile input == applied-side + deduped + quarantined.
 """
 
 import os
+from collections import defaultdict
 
+import pytest
 from pyspark.sql import functions as F
 
 from horizon_etl_spark.cdc.apply import CdcPipeline, apply_batch, replay
 from horizon_etl_spark.cdc.generator import change_feed, corrupt_feed
 from horizon_etl_spark.cdc.oracle import assert_frames_equal, expected_final
+from horizon_etl_spark.tables.lake import bucket_expr
 
 E, K = 4000, 200
 
@@ -111,6 +114,20 @@ def test_change_log_append_idempotent_on_redelivery(spark, tmp_table_dir):
     assert pipe.change_log.props["last_batch_id"] == 1
 
 
+def test_metrics_append_idempotent_on_redelivery(spark, tmp_table_dir):
+    """A redelivered batch id (a crash after the metrics append, before
+    the runs row) appends no second copy of its bucket metrics."""
+    feed = _feed(spark, 2)
+    pipe = CdcPipeline.create(os.path.join(tmp_table_dir, "p"), bucket_count=8)
+    replay(pipe, feed)
+    before = pipe.metrics.read(spark).count()
+    version = pipe.metrics.current_version()
+    apply_batch(pipe, feed.filter(F.col("batch") == 1).drop("batch"), batch_id=1)
+    assert pipe.metrics.read(spark).count() == before
+    assert pipe.metrics.current_version() == version
+    assert pipe.metrics.props["last_batch_id"] == 1
+
+
 def test_change_log_new_feed_restarting_batch_ids_still_logged(spark, tmp_table_dir):
     """The redelivery dedup must only skip an append for EXACTLY the
     last batch id — a fresh batch-mode replay whose numbering restarts
@@ -184,6 +201,78 @@ def test_lineage_tables_written(spark, tmp_table_dir):
     upd = cl.filter(F.col("op_applied") == "update")
     if upd.count() > 0:
         assert upd.filter(F.col("after_n_tok").isNull()).count() == 0
+
+
+def _asserts_n_tok(e):
+    return e["op"] != "delete" and (e["fields"] is None or "n_tok" in e["fields"])
+
+
+@pytest.mark.parametrize("mode", ["whole_row", "attr", "key_bloom"])
+def test_bucket_metrics_equal_batch_recompute(spark, tmp_table_dir, mode):
+    """Every (batch_id, bucket_id) metrics row equals a recomputation
+    from the batch's own events: events in, distinct keys, hottest-key
+    events and winner bytes (n_tok of the key's LWW winner — the latest
+    event in whole-row mode, the latest event asserting n_tok in
+    per-attribute mode).  On a key_bloom target, range-split into
+    several bloomed files per bucket, the later batches run the
+    bloom-probe path, whose join repeats batch rows per sidecar."""
+    nb, num_batches = 4, 3
+    feed = change_feed(spark, 1_200, 150, seed=5, num_batches=num_batches, max_len=8)
+    if mode == "attr":
+        m = F.pmod(F.xxhash64(F.col("lsn"), F.lit("fields")), F.lit(3))
+        feed = feed.withColumn(
+            "fields",
+            F.when(m == 0, F.lit(None).cast("array<string>"))
+            .when(m == 1, F.array(F.lit("tokens"), F.lit("n_tok")))
+            .otherwise(F.array(F.lit("source"))),
+        )
+    pipe = CdcPipeline.create(
+        os.path.join(tmp_table_dir, "p"), bucket_count=nb, attr_lww=mode == "attr"
+    )
+    if mode == "key_bloom":
+        pipe.target.set_props({"key_bloom": "true"})
+    for b in range(num_batches):
+        run = apply_batch(pipe, feed.filter(F.col("batch") == b), batch_id=b)
+        assert run["quarantined"] == 0
+        if mode == "key_bloom" and b == 0:
+            # several bloomed files per bucket, so the probe join repeats
+            # each later batch row once per sidecar
+            pipe.target.compact(
+                spark, cluster_by_key=True, target_file_rows=10, drop_tombstones=False
+            )
+    # the merge batch carries the metrics' per-key event counts; they
+    # must never reach the target's schema
+    assert "_key_events" not in pipe.target.read(spark).columns
+
+    events = defaultdict(list)  # (batch, bucket, key) -> events
+    for e in feed.withColumn("_b", bucket_expr("doc_id", nb)).collect():
+        events[(e["batch"], e["_b"], e["doc_id"])].append(e.asDict())
+    expected = defaultdict(lambda: [0, 0, 0, 0])
+    for (b, bucket, _key), evs in events.items():
+        if mode == "attr":
+            asserting = [e for e in evs if _asserts_n_tok(e)]
+            winner = max(asserting, key=lambda e: e["lsn"]) if asserting else None
+        else:
+            winner = max(evs, key=lambda e: e["lsn"])
+        n_tok = (winner or {}).get("n_tok") or 0
+        acc = expected[(b, bucket)]
+        acc[0] += len(evs)
+        acc[1] += 1
+        acc[2] = max(acc[2], len(evs))
+        acc[3] += n_tok * 4 + 64
+
+    rows = pipe.metrics.read(spark).collect()
+    got = {
+        (r["batch_id"], r["bucket_id"]): [
+            r["rows_in"], r["distinct_keys"], r["max_key_rows"], r["winner_bytes"]
+        ]
+        for r in rows
+    }
+    assert len(got) == len(rows)
+    assert got == dict(expected)
+    valid = {r["batch_id"]: r["input_rows"] - r["quarantined"] for r in pipe.runs.read(spark).collect()}
+    for b in range(num_batches):
+        assert sum(v[0] for (bb, _), v in got.items() if bb == b) == valid[b]
 
 
 def test_change_log_incremental_subscription(spark, tmp_table_dir):
