@@ -731,7 +731,7 @@ def bootstrap(
 
     Scale story (the reason this is not just ``apply_batch`` with
     insert events): the initial load of a 100 TB table through MERGE
-    would pay a full-outer join + change-image machinery against an
+    would pay the merge's key co-group + change-image machinery against an
     empty side.  This path is one validated pass: filter → bucket
     repartition → partitioned parquet write — no join, no window, the
     same single-shuffle shape as a plain bucketed CTAS.  Row counts

@@ -1043,12 +1043,19 @@ class LakeTable:
         bucketed: bool,
         with_blooms: bool = False,
         cluster_files: int | None = None,
+        repartition: bool = True,
     ) -> list[FileEntry]:
         """Write df to a fresh commit directory; return file entries.
 
         When ``bucketed``, df must carry BUCKET_COL; output is
         partitioned by it so each file belongs to exactly one bucket,
         and per-file row counts + min/max key are collected for pruning.
+        It is hash-repartitioned by bucket first, so each bucket is one
+        write task and one file; ``repartition=False`` skips that
+        exchange for a df whose every bucket already sits in exactly one
+        partition (the merge's co-group, placed by bucket id, which
+        Spark cannot match to the hash clustering and would shuffle
+        again).
         With ``with_blooms`` a per-file key Bloom sidecar is also built
         (one column-pruned read-back job over the just-written files —
         only callers on the bulk/opt-in paths pass it).
@@ -1064,10 +1071,10 @@ class LakeTable:
         (≤1 file per bucket per key) with zero read-side changes —
         Iceberg's sort-ordered ``rewrite_data_files``
         expressed as one extra exchange on the O(table) job that
-        compaction already is.  The default hash ``repartition`` stays
-        on the merge hot path: a range exchange there would add a
-        sampling pass per micro-batch for ranges the next merge
-        immediately fragments.
+        compaction already is.  The merge hot path keeps its one
+        bucket exchange: a range exchange there would add a sampling
+        pass per micro-batch for ranges the next merge immediately
+        fragments.
         """
         rel_dir = os.path.join("data", f"commit-{version:08d}-{uuid.uuid4().hex[:8]}")
         out_dir = os.path.join(self.path, rel_dir)
@@ -1077,8 +1084,10 @@ class LakeTable:
                 shuffled = df.repartitionByRange(
                     int(cluster_files), F.col(BUCKET_COL), F.col(key)
                 ).sortWithinPartitions(BUCKET_COL, key)
-            else:
+            elif repartition:
                 shuffled = df.repartition(F.col(BUCKET_COL))
+            else:
+                shuffled = df
             (
                 shuffled
                 .write.partitionBy(BUCKET_COL)
@@ -1583,16 +1592,24 @@ class LakeTable:
         bucket_aggs: dict[str, Column] | None,
     ) -> dict[str, Any]:
         """The one keyed-MERGE skeleton behind :meth:`merge` and
-        :meth:`merge_attrs`: evolve → prune + scan → one full-outer join
-        on the key → stats riding the data write → lineage sink → commit.
+        :meth:`merge_attrs`: evolve → prune + scan → one bucket-clustered
+        co-group of table and batch rows → stats riding the data write →
+        lineage sink → commit.
+
+        The co-group is the merge's only shuffle: both sides are
+        repartitioned by bucket id together and grouped per key, which
+        yields the rows of a full-outer join on the key (each key has at
+        most one table row and one batch row) already clustered the way
+        the write needs them — one task and one key-sorted file per
+        touched bucket.
 
         ``strategy`` is the conflict rule (:class:`_RowLww`,
         :class:`_AttrLww`).  It supplies only what differs between the
         two: the columns a batch adds to the schema and the ``_s_*`` /
-        ``_t_*`` join projections; the resolution (an optional
-        projection over the join, then the written columns in file
-        order); the six stat predicates; and the lineage frames (the
-        sink frame and the row-image ``change_log``).
+        ``_t_*`` row projections; the resolution (an optional
+        projection over the joined rows, then the written columns in
+        file order); the six stat predicates; and the lineage frames
+        (the sink frame and the row-image ``change_log``).
 
         Per-bucket aggregates: ``bucket_aggs`` maps names to aggregate
         columns over the batch; they are evaluated by the pruner's one
@@ -1601,13 +1618,21 @@ class LakeTable:
         bucket the batch touches.  The batch may carry
         ``KEY_EVENTS_COL`` for them.
 
-        Determinism: the batch (``strategy.batch``) must be deterministic.  The pruner, the
-        optional exact-key refinement and the data write each evaluate
-        it separately, so a batch whose rows differ between evaluations
-        could be pruned for one set of keys and written for another.
-        ``apply_batch`` passes persisted winners; direct callers
-        (consolidation, outbox replication, the cdc_feed queries) pass
-        unpersisted frames and must build them deterministically.
+        Determinism: the pruner, the optional exact-key refinement and
+        the co-group each evaluate the batch, so a batch whose rows
+        differ between evaluations could be pruned for one set of keys
+        and written for another.  A batch whose plan Spark marks
+        non-deterministic (``rand``, ``uuid``, a UDF declared
+        ``asNondeterministic`` ...), once cached data is substituted, is
+        therefore local-checkpointed first and every pass reads the same
+        rows.  The checkpoint runs the batch's own shuffle stages when it
+        is taken; its blocks live on the executors, so losing one before
+        the write fails the merge instead of recomputing different rows,
+        and they are released with the frames that reference them.
+        Deterministic batches — ``apply_batch``'s persisted winners, the
+        table reads of consolidation, outbox replication and the
+        cdc_feed queries — are evaluated as they are.  A Python UDF is
+        deterministic to Spark unless declared otherwise.
 
         Join cache ownership: the join is cached only when something
         re-reads it.  ``persist_join=True`` caches it for the caller,
@@ -1626,6 +1651,8 @@ class LakeTable:
         if key is None:
             # ValueError, not assert: asserts vanish under `python -O`
             raise ValueError(f"{strategy.operation} requires a keyed table")
+        if not batch._jdf.queryExecution().withCachedData().deterministic():
+            batch = batch.localCheckpoint(eager=False)
 
         # --- additive schema evolution from the batch's new columns
         table_schema = StructType.fromJson(snap["schema"])
@@ -1646,20 +1673,41 @@ class LakeTable:
             BUCKET_COL, bucket_expr(key, nb)
         )
 
-        # --- single full-outer join on the key: yields both the merged
-        # rows and the before/after change images in one shuffle.
+        # --- one bucket-clustered co-group: table rows and batch rows
+        # meet in the bucket shuffle the write needs anyway.  Each side
+        # is (bucket, key, its own row struct); the union fills the
+        # other side's slot with a typed null.  A key has at most one
+        # row per side, so the per-key first-non-null of each slot
+        # rebuilds the full-outer join row.  Bucket b goes to partition
+        # b mod parts rather than to a hash of b, which would put 4 of 8
+        # buckets in one of 4 tasks.  Every bucket still sits in one
+        # partition, so the write skips its own exchange (Spark would
+        # keep it: it does not match a by-id partitioning to a hash one).
         s_cols, t_cols = strategy.projections()
+        parts = min(nb, int(spark.conf.get("spark.sql.shuffle.partitions")))
         s = src.select(
-            F.col(key).alias("_s_key"), F.col(BUCKET_COL).alias("_s_bucket"), *s_cols
+            BUCKET_COL, key, F.struct(F.col(key).alias("_s_key"), *s_cols).alias("_s")
         )
         t = cur.select(
-            F.col(key).alias("_t_key"),
-            F.col(BUCKET_COL).alias("_t_bucket"),
-            F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)).alias("_t_tomb"),
-            *t_cols,
+            BUCKET_COL,
+            key,
+            F.struct(
+                F.col(key).alias("_t_key"),
+                F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)).alias("_t_tomb"),
+                *t_cols,
+            ).alias("_t"),
+        )
+        cogrouped = (
+            t.unionByName(s, allowMissingColumns=True)
+            .repartitionById(parts, F.col(BUCKET_COL))
+            .groupBy(BUCKET_COL, key)
+            .agg(
+                F.first("_t", ignorenulls=True).alias("_t"),
+                F.first("_s", ignorenulls=True).alias("_s"),
+            )
         )
         persist = persist_join or change_log_sink is not None
-        j = strategy.resolve(t.join(s, t["_t_key"] == s["_s_key"], "full_outer"))
+        j = strategy.resolve(cogrouped.select(BUCKET_COL, key, "_t.*", "_s.*"))
         if persist:
             j = j.persist()  # consumed by merged write + change images
 
@@ -1673,14 +1721,11 @@ class LakeTable:
             },
         )
         new_files = self._write_data(
-            jo.select(
-                F.coalesce(F.col("_t_bucket"), F.col("_s_bucket")).alias(BUCKET_COL),
-                F.coalesce(F.col("_t_key"), F.col("_s_key")).alias(key),
-                *strategy.written_columns(),
-            ),
+            jo.select(BUCKET_COL, key, *strategy.written_columns()),
             version,
             bucketed=True,
             with_blooms=self._bloom_enabled(snap),
+            repartition=False,
         )
         files = carry_files + new_files
 
@@ -2138,8 +2183,8 @@ class LakeTable:
 
 # --------------------------------------------------------- merge strategies
 # The two conflict rules LakeTable._merge_core runs; their expressions
-# read its _s_key/_s_bucket, _t_key/_t_bucket/_t_tomb join columns plus
-# their own _s_*/_t_* projections.
+# read its _s_key, _t_key/_t_tomb co-group columns plus their own
+# _s_*/_t_* projections.
 
 
 def _is_container(dt) -> bool:

@@ -24,12 +24,12 @@ from horizon_etl_spark.cdc.generator import change_feed
 # key_bloom target pays for the bloom probe, the bloom build and the
 # bucket metrics, which cannot ride the probe's per-sidecar join.
 JOB_BUDGET = {
-    ("whole_row", False): 7,
-    ("whole_row", True): 9,
-    ("attr", False): 7,
-    ("attr", True): 9,
-    ("key_bloom", False): 14,
-    ("key_bloom", True): 16,
+    ("whole_row", False): 6,
+    ("whole_row", True): 8,
+    ("attr", False): 6,
+    ("attr", True): 8,
+    ("key_bloom", False): 13,
+    ("key_bloom", True): 15,
 }
 
 
