@@ -32,7 +32,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from horizon_etl_spark.cdc import schema as S
 from horizon_etl_spark.cdc.lww import lww_reduce, lww_reduce_salted
-from horizon_etl_spark.tables.lake import KEY_EVENTS_COL, LakeTable, observe_counts
+from horizon_etl_spark.tables.lake import (
+    BUCKET_COL,
+    KEY_EVENTS_COL,
+    LakeTable,
+    observe_counts,
+)
 
 
 @dataclass
@@ -255,9 +260,10 @@ def apply_batch(
             # rollup is maintained from the batch's change images, so a
             # replayed batch — whose changes all report skipped_stale —
             # contributes zero delta: exactly-once extends to the MV).
-            # the lazy change-image frame recomputes from the pre-merge
-            # snapshot + still-cached winners — O(batch), unlike a scan
-            # of the ever-growing change_log table
+            # the change images are read from the merge's still-cached
+            # co-group — O(batch), unlike a scan of the ever-growing
+            # change_log table, and placed by bucket, so the delta
+            # collect needs no shuffle
             _maintain_rollup(
                 pipe, stats["change_log"], pre_merge_version, stats["version"]
             )
@@ -489,15 +495,81 @@ def _rebuild_rollup(
 ) -> None:
     """Full rollup rebuild from current target state — the ONE
     definition shared by bootstrap and crash-recovery maintenance, so
-    the two paths can never diverge on the aggregate's semantics."""
+    the two paths can never diverge on the aggregate's semantics.  One
+    aggregation collected to the driver, then the same driver commit
+    as incremental maintenance."""
     rebuilt = pipe.target.read(spark).groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(F.coalesce(F.col("n_tok"), F.lit(0))).cast("long").alias("total_tokens"),
     )
-    pipe.rollup.overwrite(
-        rebuilt,
-        operation=operation,
-        props={"synced_target_version": synced_version},
+    _commit_rollup(
+        pipe,
+        {r["source"]: (r["n_docs"], r["total_tokens"]) for r in rebuilt.collect()},
+        synced_version,
+        operation,
+    )
+
+
+def _commit_rollup(
+    pipe: CdcPipeline,
+    groups: dict[str | None, tuple[int, int]],
+    synced_version: int,
+    operation: str,
+) -> None:
+    """Replace the rollup with ``groups`` (source → (n_docs,
+    total_tokens)) from the driver: groups with no live doc left are
+    dropped, and the commit records the target version it reflects."""
+    rows = [
+        {"source": src, "n_docs": n, "total_tokens": tok}
+        for src, (n, tok) in groups.items()
+        if n > 0
+    ]
+    pipe.rollup.overwrite_rows(
+        rows, operation=operation, props={"synced_target_version": synced_version}
+    )
+
+
+def _rollup_deltas(changes: DataFrame) -> DataFrame:
+    """Per (bucket, source) signed deltas of one batch's change images.
+
+    Each applied change contributes up to two — a retraction against
+    the before-image's source and an addition for the after-image's
+    (sources can differ when a doc moves) — the standard
+    retract/accumulate shape of incremental view maintenance.  The
+    before image counts for an ``update``/``delete``, the after image
+    for an ``insert``/``update``, whatever their ``source``: a
+    per-attribute key can be live without ever asserting it, and the
+    rebuild counts such docs under a null source too.
+    ``skipped_stale``/``delete_noop`` changes contribute nothing.
+
+    Both deltas come out of one ``explode`` (a Generate, which keeps
+    its input's partitioning), and the aggregation groups by the
+    images' ``BUCKET_COL`` first: the cached co-group is already placed
+    by bucket, so Spark plans no exchange and the collect is one job at
+    bucket parallelism returning O(buckets × sources) rows."""
+    op = F.col("op_applied")
+    retract = F.when(
+        op.isin("update", "delete"),
+        F.struct(
+            F.col("before_source").alias("source"),
+            F.lit(-1).cast("long").alias("d_docs"),
+            (-F.coalesce(F.col("before_n_tok"), F.lit(0))).cast("long").alias("d_tokens"),
+        ),
+    )
+    accumulate = F.when(
+        op.isin("insert", "update"),
+        F.struct(
+            F.col("after_source").alias("source"),
+            F.lit(1).cast("long").alias("d_docs"),
+            F.coalesce(F.col("after_n_tok"), F.lit(0)).cast("long").alias("d_tokens"),
+        ),
+    )
+    return (
+        changes.select(
+            BUCKET_COL, F.explode(F.array_compact(F.array(retract, accumulate))).alias("_d")
+        )
+        .groupBy(BUCKET_COL, "_d.source")
+        .agg(F.sum("_d.d_docs").alias("d_docs"), F.sum("_d.d_tokens").alias("d_tokens"))
     )
 
 
@@ -510,62 +582,33 @@ def _maintain_rollup(
     """Fold one batch's change images into the per-source rollup table
     (source → n_docs, total_tokens).
 
-    Each applied change contributes up to two signed deltas — a
-    retraction against the before-image's source and an addition for
-    the after-image's (sources can differ when a doc moves) — which is
-    the standard retract/accumulate shape of incremental view
-    maintenance.  ``skipped_stale``/``delete_noop`` changes contribute
-    nothing, so re-delivered batches leave the rollup untouched.
+    One Spark job collects the batch's :func:`_rollup_deltas`; the
+    driver folds them into the current rollup rows (a pyarrow read) and
+    commits the result with ``overwrite_rows`` — no Spark job.  The
+    rollup's cardinality is |sources| (tiny), so the whole fold is
+    driver work; a high-cardinality derived table would use a keyed
+    additive MERGE instead (same delta feed).  Re-delivered batches
+    report only ``skipped_stale`` changes and leave the rollup as it is.
 
     Exactly-once across the two non-atomic commits (target merge, then
-    rollup overwrite): the rollup snapshot's props record the target
+    rollup commit): the rollup snapshot's props record the target
     version it reflects (``synced_target_version``).  If that doesn't
     equal the pre-merge target version, the rollup missed one or more
     committed merges — a crash landed between the two commits, or the
     rollup was enabled late — and the redelivered batch's change images
     are all ``skipped_stale`` (zero delta), so incremental folding
     would lose the gap forever.  Detection → rebuild the rollup from
-    the post-merge target state (O(target), rare) instead of folding.
-
-    The rollup's cardinality is |sources| (tiny), so the update is a
-    read + union + overwrite; a high-cardinality derived table would
-    use a keyed additive MERGE instead (same delta feed)."""
-    spark = changes.sparkSession
+    the post-merge target state (O(target), rare) instead of folding."""
     synced = pipe.rollup.props.get("synced_target_version")
     if synced != pre_merge_version:
-        _rebuild_rollup(pipe, spark, post_merge_version, "rollup(rebuild)")
+        _rebuild_rollup(pipe, changes.sparkSession, post_merge_version, "rollup(rebuild)")
         return
-    applied = changes.filter(F.col("op_applied").isin("insert", "update", "delete"))
-    before = applied.filter(F.col("before_source").isNotNull()).select(
-        F.col("before_source").alias("source"),
-        F.lit(-1).cast("long").alias("d_docs"),
-        (-F.coalesce(F.col("before_n_tok"), F.lit(0))).cast("long").alias("d_tokens"),
-    )
-    after = applied.filter(F.col("after_source").isNotNull()).select(
-        F.col("after_source").alias("source"),
-        F.lit(1).cast("long").alias("d_docs"),
-        F.coalesce(F.col("after_n_tok"), F.lit(0)).cast("long").alias("d_tokens"),
-    )
-    deltas = (
-        before.unionByName(after)
-        .groupBy("source")
-        .agg(F.sum("d_docs").alias("n_docs"), F.sum("d_tokens").alias("total_tokens"))
-    )
-    cur = pipe.rollup.read(spark)
-    merged = (
-        cur.unionByName(deltas)
-        .groupBy("source")
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("total_tokens").cast("long").alias("total_tokens"),
-        )
-        .filter(F.col("n_docs") > 0)
-    )
-    pipe.rollup.overwrite(
-        merged,
-        operation="rollup",
-        props={"synced_target_version": post_merge_version},
-    )
+    deltas = _rollup_deltas(changes).collect()
+    groups = {r["source"]: (r["n_docs"], r["total_tokens"]) for r in pipe.rollup.read_rows()}
+    for d in deltas:
+        n, tok = groups.get(d["source"], (0, 0))
+        groups[d["source"]] = (n + d["d_docs"], tok + d["d_tokens"])
+    _commit_rollup(pipe, groups, post_merge_version, "rollup")
 
 
 def _bucket_metric_aggs() -> dict[str, Column]:

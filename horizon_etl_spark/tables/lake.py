@@ -839,43 +839,83 @@ class LakeTable:
         props: dict[str, Any] | None = None,
     ) -> int:
         """Driver-side small append for control-plane tables (runs,
-        metrics): writes the rows as ONE parquet file with pyarrow — no
-        Spark job — then commits exactly like :meth:`append`.  A Spark
+        metrics): :meth:`_write_rows` adds the rows as one pyarrow file —
+        no Spark job — and commits exactly like :meth:`append`.  A Spark
         write of a handful of lineage rows per batch was pure fixed
-        overhead (one full job each at ~0.5-1 s); the pyarrow file uses
-        the table's own arrow schema so Spark reads it back
-        bit-identically (session + system tz are UTC, matching the
-        engine's naive-UTC timestamps).  Missing keys land as null."""
+        overhead (one full job each at ~0.5-1 s)."""
+        return self._write_rows(rows, operation, props, replace=False)
+
+    def overwrite_rows(
+        self,
+        rows: list[dict[str, Any]],
+        operation: str = "overwrite_rows",
+        props: dict[str, Any] | None = None,
+    ) -> int:
+        """Driver-side :meth:`overwrite` of a small unkeyed table (the
+        per-source rollup): the rows become the table's only file, with
+        no Spark job."""
+        return self._write_rows(rows, operation, props, replace=True)
+
+    def _write_rows(
+        self,
+        rows: list[dict[str, Any]],
+        operation: str,
+        props: dict[str, Any] | None,
+        replace: bool,
+    ) -> int:
+        """The one pyarrow rows-writer behind :meth:`append_rows` and
+        :meth:`overwrite_rows`: ONE parquet file in the table's own arrow
+        schema, so Spark reads it back bit-identically (session + system
+        tz are UTC, matching the engine's naive-UTC timestamps), then a
+        commit that keeps (append) or drops (replace) the current files.
+        Missing keys land as null."""
         import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
         snap = self.snapshot()
+        if replace and snap["key_col"] is not None:
+            raise ValueError("overwrite_rows requires an unkeyed table")
         version = snap["version"] + 1
         schema = StructType.fromJson(snap["schema"])
         cols = {f.name: [r.get(f.name) for r in rows] for f in schema.fields}
         table = pa.Table.from_pydict(cols, schema=to_arrow_schema(schema))
         rel_dir = os.path.join("data", f"commit-{version:08d}-{uuid.uuid4().hex[:8]}")
-        out_dir = os.path.join(self.path, rel_dir)
-        os.makedirs(out_dir)
-        pq.write_table(table, os.path.join(out_dir, "part-00000.parquet"))
-        new_files = [
-            FileEntry(os.path.join(rel_dir, "part-00000.parquet"), -1, len(rows), None, None)
-        ]
-        files = [FileEntry.from_json(f) for f in snap["files"]] + new_files
+        os.makedirs(os.path.join(self.path, rel_dir))
+        rel_path = os.path.join(rel_dir, "part-00000.parquet")
+        pq.write_table(table, os.path.join(self.path, rel_path))
+        kept = [] if replace else [FileEntry.from_json(f) for f in snap["files"]]
         self._commit(
             version,
             {
                 **snap,
                 "version": version,
                 "parent": snap["version"],
-                "files": [f.to_json() for f in files],
+                "files": [
+                    f.to_json() for f in kept + [FileEntry(rel_path, -1, len(rows), None, None)]
+                ],
                 "props": {**snap.get("props", {}), **(props or {})},
                 "operation": operation,
-                "summary": {"appended_files": 1},
+                "summary": {} if replace else {"appended_files": 1},
             },
         )
         return version
+
+    def read_rows(self) -> list[dict[str, Any]]:
+        """Driver-side read of a small unkeyed table (pyarrow, no Spark
+        job) — the counterpart of :meth:`overwrite_rows`.  Columns a
+        file lacks (written before a schema evolution) read as null."""
+        import pyarrow.parquet as pq
+
+        snap = self.snapshot()
+        if snap["key_col"] is not None:
+            raise ValueError("read_rows requires an unkeyed table")
+        names = [f.name for f in StructType.fromJson(snap["schema"]).fields]
+        out: list[dict[str, Any]] = []
+        for f in snap["files"]:
+            for r in pq.read_table(os.path.join(self.path, f["path"])).to_pylist():
+                out.append({n: r.get(n) for n in names})
+        return out
 
     # ---------------------------------------------------- schema evolution
     @staticmethod
@@ -2273,11 +2313,15 @@ class _RowLww:
     def lineage(self, j: DataFrame, extra: dict[str, Any]) -> tuple[DataFrame, DataFrame]:
         """Before/after images per atomic payload column — both the sink
         frame and the returned change_log (reference: entity_change_log
-        before/after JSON, src/tracking/entities/entity_change_log.py:8-42)."""
+        before/after JSON, src/tracking/entities/entity_change_log.py:8-42).
+        The images carry ``BUCKET_COL``, so a consumer grouping by bucket
+        keeps the co-group's placement; the sink's append projects it
+        away."""
         fresh, is_del = self.fresh, self.is_del
         atomic_cols = [c for c in self.cols if not _is_container(self.schema[c].dataType)]
         change_log = j.filter(F.col("_s_key").isNotNull()).select(
             F.col("_s_key").alias(self.key),
+            BUCKET_COL,
             F.col("_s_lsn").alias("lsn"),
             F.when(~fresh, F.lit("skipped_stale"))
             .when(is_del & (F.col("_t_key").isNull() | F.col("_t_tomb")), F.lit("delete_noop"))
@@ -2485,7 +2529,8 @@ class _AttrLww:
         )
 
         # --- row-level before/after images (same shape as the whole-row
-        # change_log) so rollup maintenance is mode-agnostic
+        # change_log, BUCKET_COL included) so rollup maintenance is
+        # mode-agnostic
         before, alive = self.t_alive_before, self.alive
         atomic_cols = [c for c in self.cols if not _is_container(self.schema[c].dataType)]
         row_op = (
@@ -2497,6 +2542,7 @@ class _AttrLww:
         )
         row_images = j.filter(self.in_batch).select(
             F.coalesce(F.col("_t_key"), F.col("_s_key")).alias(key),
+            BUCKET_COL,
             self.row_lsn.alias("lsn"),
             row_op.alias("op_applied"),
             *[F.when(before, F.col(f"_t_{c}")).alias(f"before_{c}") for c in atomic_cols],

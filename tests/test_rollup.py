@@ -5,10 +5,16 @@ change images, with exactly-once extending to the derived table."""
 
 from __future__ import annotations
 
+import dataclasses
+import itertools
+import os
+
 from pyspark.sql import functions as F
 
-from horizon_etl_spark.cdc.apply import CdcPipeline, apply_batch, replay
+from horizon_etl_spark.cdc import schema as S
+from horizon_etl_spark.cdc.apply import CdcPipeline, _rebuild_rollup, apply_batch, replay
 from horizon_etl_spark.cdc.generator import change_feed
+from horizon_etl_spark.tables.lake import LakeTable
 
 
 def _recomputed(pipe, spark):
@@ -85,3 +91,80 @@ def test_rollup_handles_deletes(spark, tmp_table_dir):
     pipe = CdcPipeline.create(f"{tmp_table_dir}/pipe")
     replay(pipe, feed, with_rollup=True)
     _assert_rollup_consistent(pipe, spark)
+
+
+def partial_feed(spark, events=2000, keys=300, seed=11, num_batches=4):
+    """A per-attribute feed: each non-delete event asserts every column
+    (no ``fields``), only ``tokens``/``n_tok``, or only ``source`` — so
+    some keys go live without ever asserting ``source``, and some set it
+    later."""
+    feed = change_feed(spark, events, keys, seed=seed, num_batches=num_batches, max_len=8)
+    m = F.pmod(F.xxhash64(F.col("lsn"), F.lit("fields")), F.lit(3))
+    return feed.withColumn(
+        "fields",
+        F.when(F.col("op") == "delete", F.lit(None).cast("array<string>"))
+        .when(m == 0, F.lit(None).cast("array<string>"))
+        .when(m == 1, F.array(F.lit("tokens"), F.lit("n_tok")))
+        .otherwise(F.array(F.lit("source"))),
+    )
+
+
+def rollup_rows(df):
+    """(source, n_docs, total_tokens) rows, null source first."""
+    rows = [(r["source"], r["n_docs"], r["total_tokens"]) for r in df.collect()]
+    return sorted(rows, key=lambda t: (t[0] is not None, t[0] or ""))
+
+
+def recomputed_rows(pipe, spark):
+    return rollup_rows(
+        pipe.target.read(spark)
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum(F.coalesce(F.col("n_tok"), F.lit(0))).cast("long").alias("total_tokens"),
+        )
+    )
+
+
+def test_attr_rollup_matches_rebuild_with_sourceless_docs(spark, tmp_path):
+    """Per-attribute mode: a key can be live without ever asserting
+    ``source``.  The rebuild counts it under a null source, so the
+    incremental fold must too — after every batch, through a
+    redelivery and a crash between the merge and rollup commits."""
+    feed = partial_feed(spark)
+    batches = [feed.filter(F.col("batch") == b).drop("batch") for b in range(4)]
+    pipe = CdcPipeline.create(str(tmp_path / "p"), bucket_count=4, attr_lww=True)
+    scratch = itertools.count()
+
+    def check(step):
+        got = rollup_rows(pipe.rollup.read(spark))
+        assert got == recomputed_rows(pipe, spark), step
+        rebuilt = dataclasses.replace(
+            pipe,
+            rollup=LakeTable.create(
+                os.path.join(str(tmp_path), f"rebuilt{next(scratch)}"), S.ROLLUP_SCHEMA
+            ),
+        )
+        _rebuild_rollup(rebuilt, spark, pipe.target.current_version(), "rollup(rebuild)")
+        assert got == rollup_rows(rebuilt.rollup.read(spark)), step
+        return got
+
+    apply_batch(pipe, batches[0], batch_id=0, with_rollup=True)
+    check("batch 0")
+    apply_batch(pipe, batches[1], batch_id=1, with_rollup=True)
+    after_1 = check("batch 1")
+    assert pipe.rollup.snapshot()["operation"] == "rollup"  # folded, not rebuilt
+    # redelivery: every change is skipped_stale, the rollup is unchanged
+    apply_batch(pipe, batches[1], batch_id=1, with_rollup=True)
+    assert check("redelivered batch 1") == after_1
+    # crash: batch 2's merge commits, its rollup commit is lost; the
+    # redelivery detects the lag and rebuilds
+    apply_batch(pipe, batches[2], batch_id=2, with_rollup=False)
+    apply_batch(pipe, batches[2], batch_id=2, with_rollup=True)
+    assert pipe.rollup.snapshot()["operation"] == "rollup(rebuild)"
+    check("recovered batch 2")
+    apply_batch(pipe, batches[3], batch_id=3, with_rollup=True)
+    assert pipe.rollup.snapshot()["operation"] == "rollup"
+    final = check("batch 3")
+    # the feed really exercised the null-source group
+    assert final[0][0] is None and final[0][1] > 0
