@@ -37,6 +37,7 @@ from horizon_etl_spark.tables.lake import (
     KEY_EVENTS_COL,
     LakeTable,
     observe_counts,
+    place_by_bucket,
 )
 
 
@@ -128,13 +129,18 @@ def apply_batch(
 ) -> dict[str, Any]:
     """Apply one micro-batch of change events; returns the run stats row.
 
-    ``salted_lww``: False (plain max_by — partial agg is already the
-    skew mitigation), True (explicit two-phase salted reduction), or
-    ``"auto"`` — consult the PREVIOUS batch's skew metrics (hottest-key
-    event share, which ride the LWW shuffle for free) and salt when it
-    exceeded ``HOT_KEY_SHARE_THRESHOLD``; change feeds have temporal
-    locality, so last batch's skew is the best available predictor
-    (requires ``collect_metrics``; first batch runs plain).
+    ``salted_lww``: False (plain max_by), True (explicit two-phase
+    salted reduction), or ``"auto"`` — salt when the batch is predicted
+    skewed: the PREVIOUS batch's hottest-key event share (which rides
+    the LWW shuffle for free) exceeded ``HOT_KEY_SHARE_THRESHOLD``, or
+    the feed's plan is already hash-partitioned on the key.  Change
+    feeds have temporal locality, so last batch's skew is the best
+    available predictor (requires ``collect_metrics``; a first batch
+    with no such plan runs plain).  The same prediction chooses the
+    plain reduce's shape: a batch predicted not skewed is placed by
+    target bucket before its reduce (one shuffle fewer in the merge's
+    summary); a skewed one keeps the unplaced reduce, whose partial
+    aggregation combines a hot key's events map-side.
 
     ``persist_source``: cache the decoded+tagged batch.  Clean feeds
     make exactly one pass either way (the quarantine scan only runs
@@ -154,18 +160,23 @@ def apply_batch(
     whole-row path."""
     started = _now()
     spark = batch.sparkSession
-    attr_mode = bool(pipe.target.snapshot().get("attr_lww"))
+    target_snap = pipe.target.snapshot()
+    attr_mode = bool(target_snap.get("attr_lww"))
     if "batch" in batch.columns:
         batch = batch.drop("batch")
 
     # Bandwidth-lean plan: ONE full pass over the raw batch on the
     # clean-feed fast path (whole-batch caching only when the decode is
     # the dominant cost, see ``persist_source``):
-    #   pass 1: LWW reduction (partial+final agg) materialized into the
-    #           persisted `winners` (≤1 small row per key); input/valid
-    #           counts ride the SAME job via an Observation placed
-    #           below the validity filter, and per-key event counts for
-    #           the skew metrics ride the same shuffle (`with_counts`)
+    #   pass 1: LWW reduction materialized into the persisted
+    #           `winners` (≤1 small row per key); input/valid counts
+    #           ride the SAME job via an Observation placed below the
+    #           validity filter, and per-key event counts for the skew
+    #           metrics ride the same shuffle (`with_counts`).  Unless
+    #           salted, the valid events are placed by target bucket
+    #           first (`place_by_bucket`) and reduced per (bucket, key):
+    #           the winners keep that placement, so the merge's
+    #           per-bucket summary starts no shuffle of its own
     #   pass 2: quarantine write — ONLY when the observed counts say
     #           bad rows exist (dirty batches; clean feeds never scan
     #           the raw batch twice)
@@ -185,15 +196,24 @@ def apply_batch(
         # within-batch dedup + LWW collapse in one reduction: duplicate
         # (doc_id, lsn) rows are byte-identical, so max_by keeps exactly
         # one; cross-batch dups are killed by the merge lsn-guard.
-        valid = tagged.filter(F.col("_reason").isNull()).drop("_reason")
+        valid = tagged.filter(F.col("_reason").isNull()).drop("_reason", "ts")
+        # skew predictors, both free of Spark jobs: the metrics one
+        # (temporal locality: last batch's hot-key share) OR'd with the
+        # PLAN-level one, so the FIRST batch of a key-partitioned feed
+        # is already caught — the metrics signal needs one skewed batch
+        # to exist first
+        skewed = _last_batch_was_skewed(pipe) or _feed_defeats_partial_agg(valid)
         if salted_lww == "auto":
-            # metrics-based predictor (temporal locality: last batch's
-            # hot-key share), OR'd with the PLAN-level predictor so the
-            # FIRST batch of a key-partitioned feed already salts — the
-            # metrics signal needs one degraded batch to exist first
-            salted_lww = _last_batch_was_skewed(pipe, spark) or _feed_defeats_partial_agg(
-                valid
-            )
+            salted_lww = skewed
+        # the bucket placement runs before the reduce, so it ships every
+        # raw event of a hot key to one task with no map-side combine:
+        # a skewed feed keeps the unplaced reduce (whose partial
+        # aggregation does combine, or which the existing key
+        # partitioning already serves), and the merge tags its winners
+        # with the bucket instead, as it does for the salted reductions
+        placed = not (salted_lww or skewed)
+        if placed:
+            valid = place_by_bucket(valid, target_snap["bucket_count"], "doc_id")
         if attr_mode:
             from horizon_etl_spark.cdc.attrs import (
                 attr_lww_reduce,
@@ -202,12 +222,12 @@ def apply_batch(
 
             reducer = attr_lww_reduce_salted if salted_lww else attr_lww_reduce
             kwargs = {"salt_buckets": salt_buckets} if salted_lww else {}
-            winners = reducer(valid.drop("ts"), with_counts=True, **kwargs).persist()
+            winners = reducer(valid, with_counts=True, **kwargs).persist()
         else:
             reducer = lww_reduce_salted if salted_lww else lww_reduce
             kwargs = {"salt_buckets": salt_buckets} if salted_lww else {}
             winners = reducer(
-                valid.drop("ts"), key="doc_id", order="lsn", with_counts=True, **kwargs
+                valid, key="doc_id", order="lsn", with_counts=True, **kwargs
             ).persist()
 
         # No explicit materialize: the FIRST downstream action over the
@@ -288,7 +308,8 @@ def apply_batch(
             "notes": (
                 f"v{stats['version']} ins={stats['inserted']} upd={stats['updated']} "
                 f"del={stats['deleted']} rewrote={stats['rewritten_files']} "
-                f"carried={stats['carried_files']} salted={bool(salted_lww)}"
+                f"carried={stats['carried_files']} salted={bool(salted_lww)} "
+                f"placed={placed}"
             ),
             # per-table snapshot anchor for rollback_to_batch (cheap:
             # driver-side directory listings, no data scan)
@@ -425,16 +446,20 @@ def _feed_defeats_partial_agg(df: DataFrame, key: str = "doc_id") -> bool:
     """PLAN-level skew predictor — covers batch 0, where the metrics
     predictor has no history yet.
 
-    The degradation case (measured 2.7× in BENCH.md's skew table) is a
-    feed whose in-session lineage is already hash-partitioned on the
-    key (upstream ``repartition(key)``, or a prior groupBy/join on it):
-    the LWW aggregation's required distribution is then satisfied, so
+    The unplaced plain reduce combines a hot key map-side: its partial
+    aggregate runs before the key shuffle.  The degradation case
+    (measured 2.7× in BENCH.md's skew table) is a feed whose in-session
+    lineage is already hash-partitioned on the key (upstream
+    ``repartition(key)``, or a prior groupBy/join on it): the LWW
+    aggregation's required distribution is then satisfied, so
     EnsureRequirements inserts no pre-agg Exchange and the partial
     aggregate runs AFTER the existing shuffle — every event of a hot
     key flows through one task with no cross-partition map-side
-    combine.  Plain parquet/stream reads report Unknown/range
-    partitioning (Spark doesn't trust on-disk layout), so normal feeds
-    keep the plain fast path.
+    combine.  The bucket placement would add a second shuffle of
+    those raw events, so ``apply_batch`` skips it for such a feed.
+    Plain parquet/stream reads report Unknown/range partitioning
+    (Spark doesn't trust on-disk layout), so normal feeds keep the
+    plain fast path.
 
     Detection is O(plan), no job: the batch's physical plan must not
     claim ``hashpartitioning(<key>...)`` as its output partitioning.
@@ -466,28 +491,14 @@ def _feed_defeats_partial_agg(df: DataFrame, key: str = "doc_id") -> bool:
         return False
 
 
-def _last_batch_was_skewed(pipe: CdcPipeline, spark: SparkSession) -> bool:
-    """Adaptive-salting predicate: was the hottest key of the most
-    recent batch above ``HOT_KEY_SHARE_THRESHOLD`` of its events?
-    Reads only the tiny metrics table; no metrics yet → not skewed."""
-    try:
-        m = pipe.metrics.read(spark)
-        last = m.agg(F.max("batch_id").alias("b")).collect()[0]["b"]
-        if last is None:
-            return False
-        row = (
-            m.filter(F.col("batch_id") == last)
-            .agg(
-                F.max("max_key_rows").alias("hot"),
-                F.sum("rows_in").alias("total"),
-            )
-            .collect()[0]
-        )
-        if not row["total"]:
-            return False
-        return (row["hot"] or 0) / row["total"] > HOT_KEY_SHARE_THRESHOLD
-    except Exception:
-        return False
+def _last_batch_was_skewed(pipe: CdcPipeline) -> bool:
+    """Metrics skew predictor: was the hottest key of the most recent
+    batch above ``HOT_KEY_SHARE_THRESHOLD`` of its events?  Reads the
+    share :func:`_write_bucket_metrics` stamps on the metrics table's
+    props — a manifest read, no Spark job.  No metrics yet (or metrics
+    written before the stamp existed) → not skewed."""
+    share = pipe.metrics.props.get("hot_key_share")
+    return share is not None and share > HOT_KEY_SHARE_THRESHOLD
 
 
 def _rebuild_rollup(
@@ -640,8 +651,15 @@ def _write_bucket_metrics(
     rows = [
         {"batch_id": batch_id, "bucket_id": b, **v} for b, v in sorted(per_bucket.items())
     ]
+    events = sum(v["rows_in"] or 0 for v in per_bucket.values())
+    hottest = max((v["max_key_rows"] or 0 for v in per_bucket.values()), default=0)
     pipe.metrics.append_rows(
-        rows, operation=f"metrics(batch={batch_id})", props={"last_batch_id": batch_id}
+        rows,
+        operation=f"metrics(batch={batch_id})",
+        props={
+            "last_batch_id": batch_id,
+            "hot_key_share": hottest / events if events else 0.0,
+        },
     )
 
 
@@ -914,6 +932,14 @@ def rollback_to_batch(
         if table.current_version() != v:
             table.rollback(v)
         restored[name] = v
+    # the target's rollback is a new commit, so a rollup that reflected
+    # the anchor's target version now reflects the target's new head:
+    # re-stamp it, or the next with_rollup batch would find it out of
+    # sync and rebuild it from a full target scan
+    head = pipe.target.current_version()
+    synced = pipe.rollup.props.get("synced_target_version")
+    if synced is not None and synced == versions.get("target") != head:
+        pipe.rollup.set_props({"synced_target_version": head})
     audit = {
         "batch_id": batch_id,
         "started_at": _now(),

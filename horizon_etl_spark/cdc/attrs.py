@@ -24,6 +24,11 @@ idempotent across batch boundaries, replay order, duplicate delivery):
 Physical strategy: one ``groupBy(key)`` with per-column conditional
 ``max_by`` aggregates — a single partial+final aggregation, same
 skew-collapsing shape as :func:`horizon_etl_spark.cdc.lww.lww_reduce`.
+Like it, a frame carrying ``_bucket`` groups by ``(_bucket, key)``:
+``apply_batch`` places a batch it predicts not skewed by bucket
+first, so the partial aggregation runs after that placement and a
+hot key's raw events would cross the shuffle; a batch predicted
+skewed keeps the unplaced reduce.
 Cross-batch state lives in the attr-LWW table's per-column assertion
 lsns + per-row delete watermark
 (:meth:`horizon_etl_spark.tables.lake.LakeTable.merge_attrs`).
@@ -33,7 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from horizon_etl_spark.tables.lake import DEL_LSN_COL, alsn_col
+from horizon_etl_spark.tables.lake import BUCKET_COL, DEL_LSN_COL, alsn_col
 
 
 def attr_lww_reduce(
@@ -53,10 +58,11 @@ def attr_lww_reduce(
     assertion lsn ``_alsn_<col>`` (null if the batch never asserted the
     column), and ``_del_lsn`` (the batch's max delete lsn, null if no
     delete).  ``with_counts`` adds ``_key_events`` (collapsed events
-    per key — the skew metric, free inside the same aggregation).
+    per key — the skew metric, free inside the same aggregation).  A
+    ``_bucket`` column is kept as a grouping column.
     Feed straight into ``LakeTable.merge_attrs``.
     """
-    reserved = {key, order, fields_col, op_col, "ts", "batch"}
+    reserved = {key, order, fields_col, op_col, "ts", "batch", BUCKET_COL}
     payload_cols = payload_cols or [c for c in df.columns if c not in reserved]
     has_fields = fields_col in df.columns
     not_delete = F.col(op_col) != delete_op
@@ -84,9 +90,10 @@ def attr_lww_reduce(
     )
     if with_counts:
         aggs.append(F.count(F.lit(1)).alias("_key_events"))
-    grouping = [key] + ([_salt_col] if _salt_col else [])
-    out = df.groupBy(*grouping).agg(*aggs)
+    placed = [BUCKET_COL] if BUCKET_COL in df.columns else []
+    out = df.groupBy(*placed, key, *([_salt_col] if _salt_col else [])).agg(*aggs)
     return out.select(
+        *placed,
         key,
         *[F.col(f"_w_{c}.v").alias(c) for c in payload_cols],
         *[F.col(f"_w_{c}.l").alias(alsn_col(c)) for c in payload_cols],
@@ -116,7 +123,7 @@ def attr_lww_reduce_salted(
     two-phase result is identical to the one-phase reduction (tested
     equivalent on random feeds).  Salt derives from the order column
     (pure function of the data → deterministic, resume-safe)."""
-    reserved = {key, order, fields_col, op_col, "ts", "batch"}
+    reserved = {key, order, fields_col, op_col, "ts", "batch", BUCKET_COL}
     payload_cols = payload_cols or [c for c in df.columns if c not in reserved]
     salted = df.withColumn(
         "_salt", F.pmod(F.xxhash64(F.col(order)), F.lit(salt_buckets))

@@ -18,6 +18,17 @@ key it sees to one row before the shuffle.  A hot key therefore ships
 at most one row per upstream partition — partial aggregation is itself
 the skew mitigation, equivalent to salting with salt = input partition.
 
+A frame that carries the target's ``_bucket`` column is reduced per
+``(_bucket, key)`` instead, and the column is kept as it is.
+``apply_batch`` places the valid events of a batch it predicts not
+skewed by bucket first (``tables.lake.place_by_bucket``), so the
+reduce needs no shuffle of its own and the winners stay placed for
+the merge's per-bucket summary.  The partial aggregation then runs
+*after* that placement: every raw event of a hot key crosses the
+shuffle to one task, so a batch predicted skewed (see
+``apply_batch``'s ``salted_lww``) keeps the unplaced ``groupBy(key)``
+and its map-side combine.
+
 ``lww_reduce_salted`` is the explicit two-phase variant
 (groupBy(key, salt) → groupBy(key)) kept for (a) demonstrating the
 strategy the north_rule names, (b) engines/plans where partial agg is
@@ -42,24 +53,28 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from horizon_etl_spark.tables.lake import BUCKET_COL
+
 
 def lww_reduce(
     df: DataFrame, key: str = "doc_id", order: str = "lsn", with_counts: bool = False
 ) -> DataFrame:
     """One surviving event per key: the one with the highest ``order``.
 
-    Output columns == input columns (winner's full row).  With
+    Output columns == input columns (winner's full row; a ``_bucket``
+    column is a grouping column, see the module notes).  With
     ``with_counts`` an extra ``_key_events`` column carries the number
     of collapsed events per key — the hot-key/skew signal, computed for
     free inside the same partial+final aggregation (no extra pass over
     the raw feed)."""
-    others = [c for c in df.columns if c != key]
+    grouping = ([BUCKET_COL] if BUCKET_COL in df.columns else []) + [key]
+    others = [c for c in df.columns if c not in grouping]
     payload = F.struct(*[F.col(c) for c in others])
     aggs = [F.max_by(payload, F.col(order)).alias("_w")]
     if with_counts:
         aggs.append(F.count(F.lit(1)).alias("_key_events"))
-    out = df.groupBy(key).agg(*aggs)
-    cols = [key, "_w.*"] + (["_key_events"] if with_counts else [])
+    out = df.groupBy(*grouping).agg(*aggs)
+    cols = [*grouping, "_w.*"] + (["_key_events"] if with_counts else [])
     return out.select(*cols)
 
 

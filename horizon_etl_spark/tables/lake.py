@@ -43,7 +43,6 @@ exactly like Iceberg's metadata layer.
 
 from __future__ import annotations
 
-import bisect
 import json
 import os
 import shutil
@@ -123,16 +122,86 @@ class _BucketSummary:
     """Per-bucket facts about one merge batch, all from one aggregation
     (:meth:`LakeTable._bucket_summary`)."""
 
-    ranges: dict[int, tuple[Any, Any]]  # bucket -> (min key, max key)
-    rows: dict[int, int]  # bucket -> batch rows (= keys: one row per key)
+    # touched bucket -> stat-bearing files whose [min, max] holds a batch key
+    in_range: dict[int, set[int]]
     probed: dict[int, set[int]]  # bucket -> files whose bloom joined the probe
     hits: dict[int, set[int]]  # bucket -> probed files some batch key hit
     aggs: dict[int, dict[str, Any]]  # bucket -> the caller's bucket_aggs values
+    misplaced: bool  # some batch row's BUCKET_COL is not its key's bucket
 
 
 def bucket_expr(key_col: str, bucket_count: int):
     """Deterministic hash bucket of the key (JVM-side, codegen'd)."""
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(bucket_count)).cast("int")
+
+
+def place_by_bucket(df: DataFrame, bucket_count: int, key_col: str | None = None) -> DataFrame:
+    """Place rows by bucket: bucket b goes to partition b mod
+    min(buckets, shuffle partitions), not to a hash of b, which would
+    put 4 of 8 buckets in one of 4 tasks.  Every bucket sits in one
+    partition, so a later ``groupBy(BUCKET_COL, ...)`` over the placed
+    rows needs no exchange of its own.  With ``key_col`` the rows are
+    first tagged with the key's ``BUCKET_COL``; otherwise they carry it."""
+    if key_col is not None:
+        df = df.withColumn(BUCKET_COL, bucket_expr(key_col, bucket_count))
+    parts = min(bucket_count, int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")))
+    return df.repartitionById(parts, F.col(BUCKET_COL))
+
+
+def _has_key_range(f: FileEntry) -> bool:
+    """A bucketed file whose footer gave [min_key, max_key] stats (only
+    string keys get them): the files the exact range test covers."""
+    return f.bucket >= 0 and f.min_key is not None and f.max_key is not None
+
+
+# Key-range text up to which the exact range test inlines the ranges
+# as a literal (no extra job, fastest); past it they ride a broadcast
+# (one small job more), since the SQL UI keeps every merge's plan text
+# (~2× these bytes) and every task carries the literal.
+RANGE_LITERAL_MAX_BYTES = 1 << 14
+_RANGES_TYPE = "array<struct<lo:string,hi:string,fid:int>>"
+
+
+def _with_range_hits(src: DataFrame, files: list[FileEntry], key_col: str) -> DataFrame:
+    """The exact range test, per batch row: ``src`` plus ``_in_range``,
+    the ids (positions in ``files``) of the files in the row's bucket
+    whose ``[min_key, max_key]`` holds the row's key, bounds inclusive
+    (null when no file has stats).  Collected per bucket by the batch
+    summary, it lets the pruner carry every file no batch key falls in,
+    including the files BETWEEN two keys, so on a key-clustered table a
+    point key rewrites ~1 file with no bloom sidecars.  The ranges come
+    as one ``from_json`` literal indexed by bucket, or past
+    ``RANGE_LITERAL_MAX_BYTES`` as one broadcast row per bucket joined
+    on it: no batch row repeats, and the batch keeps its placement."""
+    by_bucket: dict[int, list[dict[str, Any]]] = {}
+    size = 0
+    for fid, f in enumerate(files):
+        if _has_key_range(f):
+            by_bucket.setdefault(f.bucket, []).append({"lo": f.min_key, "hi": f.max_key, "fid": fid})
+            size += len(f.min_key) + len(f.max_key)
+    if not by_bucket:
+        return src.withColumn("_in_range", F.lit(None).cast("array<int>"))
+    if size <= RANGE_LITERAL_MAX_BYTES:
+        dense = [by_bucket.get(b, []) for b in range(max(by_bucket) + 1)]
+        ranges = F.get(
+            F.from_json(F.lit(json.dumps(dense)), f"array<{_RANGES_TYPE}>"), F.col(BUCKET_COL)
+        )
+    else:
+        import pyarrow as pa
+
+        # an arrow table becomes a JVM-side scan: no Python worker
+        struct = pa.struct([("lo", pa.string()), ("hi", pa.string()), ("fid", pa.int32())])
+        shipped = src.sparkSession.createDataFrame(pa.table({
+            BUCKET_COL: pa.array(list(by_bucket), pa.int32()),
+            "_ranges": pa.array(list(by_bucket.values()), pa.list_(struct)),
+        }))
+        src = src.join(F.broadcast(shipped), BUCKET_COL, "left")
+        ranges = F.col("_ranges")
+    k = F.col(key_col)
+    hits = F.transform(
+        F.filter(ranges, lambda r: (r["lo"] <= k) & (k <= r["hi"])), lambda r: r["fid"]
+    )
+    return src.withColumn("_in_range", hits).drop("_ranges")
 
 
 # Default sizing target: a bucket is one merge-write task and one unit
@@ -188,27 +257,6 @@ BLOOM_PROP = "key_bloom"
 # right plan, so the read degrades to a broadcast semi-join with
 # bucket+range-only pruning instead of failing or crawling
 READ_KEYS_ISIN_MAX = 10_000
-# Exact-key prune refinement (trickle merges): when the per-bucket
-# interval test keeps an un-probed file in a bucket whose batch holds
-# at most this many keys, collect those keys (one extra SMALL Spark
-# action: a shuffle-free projection of the refined buckets) and carry
-# every file whose [min,max] contains none — on a key-clustered table
-# this isolates ~1 file per point key with no bloom sidecars (and no
-# load tax).  The key count is the batch's exact per-bucket row count
-# (one row per key by the merge contract; a batch breaking it only
-# counts higher, so the gate gets stricter and pruning stays sound).
-# Dense/bulk batches blow the gate and skip the second action.
-PRUNE_REFINE_BUCKET_KEYS = 4_096
-PRUNE_REFINE_TOTAL_KEYS = 65_536
-# ...and the refinement must PAY: the second action re-reads the
-# batch (a cached frame under apply_batch, but a direct caller may
-# pass an unstaged validate/dedup pipeline it re-executes), so a
-# bucket only qualifies when the rows it might avoid rewriting dwarf
-# the batch keys it holds — steady-state replay batches sit at amp ≈ 1
-# and must never pay the extra pass (measured: an ungated refinement
-# cost the sf0.1 CDC bench ~40% of its apply throughput for zero
-# carried files).
-PRUNE_REFINE_MIN_AMP = 8
 # Clustering advisory (merge-time, consumed by job_maintain
 # --cluster-by-key auto): fires when a merge's copy-on-write rewrite
 # was dominated by FAT files churned for a sparse batch — mean rows
@@ -1105,10 +1153,10 @@ class LakeTable:
         within-partition sort — range partitioning on (bucket, key) is
         lexicographic, so the files it produces INSIDE each bucket hold
         pairwise-disjoint, key-sorted ranges.  The footer min/max stats
-        below then make ``_prune_for_batch``'s range test (paired with
-        its sparse exact-key refinement, which stops the batch interval
-        from sweeping files BETWEEN two keys) exact for point keys
-        (≤1 file per bucket per key) with zero read-side changes —
+        below then make ``_prune_for_batch``'s exact range test (each
+        batch key against each file range, so the files BETWEEN two
+        keys carry) isolate ≤1 file per bucket per point key with
+        zero read-side changes —
         Iceberg's sort-ordered ``rewrite_data_files``
         expressed as one extra exchange on the O(table) job that
         compaction already is.  The merge hot path keeps its one
@@ -1229,11 +1277,12 @@ class LakeTable:
         snap: dict[str, Any],
         bucket_aggs: dict[str, Column] | None = None,
     ) -> _BucketSummary:
-        """The merge's one per-bucket aggregation over a bucketed batch:
-        each touched bucket's key range and row count (the pruner's
-        inputs) plus the caller's ``bucket_aggs`` (``apply_batch``'s
-        bucket metrics), collected as O(buckets) rows by a single
-        ``groupBy``.
+        """The merge's one per-bucket aggregation over a bucketed batch,
+        collected as O(buckets) rows by a single ``groupBy``: per touched
+        bucket the files its keys fall in (the exact range test, see
+        :func:`_with_range_hits`), the caller's ``bucket_aggs``
+        (``apply_batch``'s bucket metrics), and whether any row's
+        ``BUCKET_COL`` differs from its key's bucket.
 
         Files carrying a Bloom sidecar are additionally membership-
         probed inside the SAME aggregation (batch ⋈ broadcast
@@ -1241,19 +1290,21 @@ class LakeTable:
         file ids per bucket), so a point-key trickle against a
         compacted table learns every file the batch provably misses at
         no extra Spark action.  That join repeats each batch row once
-        per probed sidecar in its bucket, so on a bloom table the row
-        count is divided back by the bucket's probed-file count, and
-        the caller's aggregates — arbitrary, so not divisible — run as
-        their own aggregation over the batch rows themselves."""
+        per probed sidecar in its bucket, which the set aggregates
+        absorb; the caller's aggregates — arbitrary, so not
+        repeat-safe — run as their own aggregation over the batch rows
+        themselves."""
         key = self.key_col
         names = list(bucket_aggs or {})
         aggs = [bucket_aggs[n].alias(n) for n in names]
-        bounds = [
-            F.min(key).alias("_mn"),
-            F.max(key).alias("_mx"),
-            F.count(F.lit(1)).alias("_n"),
-        ]
         all_files = [FileEntry.from_json(f) for f in snap["files"]]
+        ranged = _with_range_hits(src, all_files, key)
+        common = [
+            F.array_distinct(F.flatten(F.collect_set("_in_range"))).alias("_in_range"),
+            F.max(F.col(BUCKET_COL) != bucket_expr(key, snap["bucket_count"])).alias(
+                "_misplaced"
+            ),
+        ]
         # files with a k-compatible sidecar get membership probes; the
         # sidecars are one-row parquet files scanned JVM-SIDE inside the
         # probe (no Python word serialization per merge — the trickle
@@ -1294,11 +1345,11 @@ class LakeTable:
         # distinction makes sidecar loss safe: a missing/corrupt/
         # mis-sized sidecar silently drops out of the scan
         # (ignoreMissing/ignoreCorrupt + the m/k filter), its file is
-        # then NOT in `probed`, and the range-only verdict stands.
+        # then NOT in `probed`, and the range verdict stands.
         probed: dict[int, set[int]] = {}
         hits: dict[int, set[int]] = {}
         if not bloomed:
-            touched = src.groupBy(BUCKET_COL).agg(*bounds, *aggs).collect()
+            touched = ranged.groupBy(BUCKET_COL).agg(*common, *aggs).collect()
             agg_rows = touched if names else []
         else:
             spark = src.sparkSession
@@ -1325,8 +1376,8 @@ class LakeTable:
             )
             h1, h2 = _bloom_hash_exprs(key)
             probe = (
-                src.select(
-                    F.col(BUCKET_COL), F.col(key), h1.alias("_h1"), h2.alias("_h2")
+                ranged.select(
+                    BUCKET_COL, key, "_in_range", h1.alias("_h1"), h2.alias("_h2")
                 )
                 .join(F.broadcast(fm), BUCKET_COL, "left")
                 # reduce mod m before the multiply-add (same scheme as
@@ -1349,7 +1400,7 @@ class LakeTable:
             touched = (
                 probe.groupBy(BUCKET_COL)
                 .agg(
-                    *bounds,
+                    *common,
                     F.collect_set(F.col("_fid")).alias("probed"),
                     F.collect_set(F.when(hit, F.col("_fid"))).alias("hits"),
                 )
@@ -1360,17 +1411,11 @@ class LakeTable:
             agg_rows = src.groupBy(BUCKET_COL).agg(*aggs).collect() if names else []
 
         return _BucketSummary(
-            ranges={r[BUCKET_COL]: (r["_mn"], r["_mx"]) for r in touched},
-            # the left join pads a bucket without probed sidecars to one
-            # row per batch row, and repeats each row once per probed
-            # sidecar otherwise
-            rows={
-                r[BUCKET_COL]: r["_n"] // max(1, len(probed.get(r[BUCKET_COL], ())))
-                for r in touched
-            },
+            in_range={r[BUCKET_COL]: set(r["_in_range"]) for r in touched},
             probed=probed,
             hits=hits,
             aggs={r[BUCKET_COL]: {n: r[n] for n in names} for r in agg_rows},
+            misplaced=any(r["_misplaced"] for r in touched),
         )
 
     def _prune_for_batch(
@@ -1379,98 +1424,35 @@ class LakeTable:
         snap: dict[str, Any],
         summary: _BucketSummary | None = None,
     ) -> tuple[list[FileEntry], list[FileEntry]]:
-        """Bucket + min/max-key (+ optional key-Bloom) file pruning for
-        a bucketed batch, decided driver-side from the batch's
+        """Bucket + exact key-range (+ optional key-Bloom) file pruning
+        for a bucketed batch, decided driver-side from the batch's
         :meth:`_bucket_summary` (computed here when ``summary`` is
-        None): files whose bucket/key range can contain batch keys are
-        rewritten, the rest carry, and a bloom-probed file is rewritten
-        only when some batch key hit it.  Both tests are free of false
-        negatives (range: disjoint intervals share no key; bloom: every
+        None): a file in a touched bucket is rewritten unless its
+        ``[min_key, max_key]`` holds no batch key, or its bloom was
+        probed and no batch key hit it; every other file carries.  Both
+        tests are free of false negatives (range: file stats are true
+        bounds and the summary tests every batch key; bloom: every
         inserted key sets all its probe bits), so intersecting them is
         sound and prunes strictly more than either alone."""
         if summary is None:
             summary = self._bucket_summary(src, snap)
-        key = self.key_col
-        all_files = [FileEntry.from_json(f) for f in snap["files"]]
-        touched_range = summary.ranges
-        touched_keys = summary.rows
         rewrite_files: list[FileEntry] = []
         carry_files: list[FileEntry] = []
-        # bucket -> rewrite_files positions the interval test ALONE kept
-        # (bloom-probed files are already membership-exact) — the
-        # candidates for the exact-key refinement below
-        refinable: dict[int, list[int]] = {}
-        for idx, f in enumerate(all_files):
+        for idx, f in enumerate(FileEntry.from_json(j) for j in snap["files"]):
             if f.bucket == -1:
                 # unbucketed file on a keyed table (stray append): no
                 # layout info, so any non-empty batch may touch it —
                 # must rewrite, mirroring read_keys' always-scan rule
-                (rewrite_files if touched_range else carry_files).append(f)
-                continue
-            rng = touched_range.get(f.bucket)
-            overlaps = rng is not None and not (
-                f.max_key is not None
-                and f.min_key is not None
-                and (f.max_key < rng[0] or f.min_key > rng[1])
-            )
-            probed = idx in summary.probed.get(f.bucket, set())
-            if overlaps and probed:
-                overlaps = idx in summary.hits.get(f.bucket, set())
-            if overlaps:
-                if not probed and f.min_key is not None and f.max_key is not None:
-                    refinable.setdefault(f.bucket, []).append(len(rewrite_files))
-                rewrite_files.append(f)
+                keep = bool(summary.in_range)
+            elif f.bucket not in summary.in_range:
+                keep = False
             else:
-                carry_files.append(f)
-
-        # Exact-key refinement: the interval [batch-min, batch-max] per
-        # bucket sweeps in every file BETWEEN two batch keys, even on a
-        # key-clustered table whose file ranges are pairwise disjoint.
-        # For trickle-shaped buckets (key count under the gate) a
-        # second SMALL action collects the actual batch keys — a plain
-        # projection of the refined buckets, no shuffle, sorted
-        # driver-side — and carries every un-probed file whose
-        # [min,max] holds none of them.  Sound (no false carries): file
-        # stats are true bounds and the collected keys are exact, so a
-        # file containing a batch key always has some collected key
-        # inside its range.  Dense batches skip this entirely — they
-        # rewrite broadly regardless, and the gate keeps the driver's
-        # key copy O(refined buckets × PRUNE_REFINE_BUCKET_KEYS) at
-        # worst (the gate counts rows, never fewer than the keys).
-        # single-file buckets stay eligible: a sparse INSERT batch whose
-        # keys straddle a lone file's range (but live in its gaps) is
-        # exactly the wasted-rewrite case the refinement exists for
-        refine = [
-            b
-            for b, ps in refinable.items()
-            if 0 < touched_keys.get(b, 0) <= PRUNE_REFINE_BUCKET_KEYS
-            # trickle-shaped only: the avoidable rewrite must dwarf the
-            # bucket's batch keys, else the extra pass can't pay for
-            # itself (see PRUNE_REFINE_MIN_AMP)
-            and sum(int(rewrite_files[p].rows or 0) for p in ps)
-            > PRUNE_REFINE_MIN_AMP * touched_keys[b]
-        ]
-        if refine and sum(touched_keys[b] for b in refine) <= PRUNE_REFINE_TOTAL_KEYS:
-            keys_by_bucket: dict[int, list[Any]] = {b: [] for b in refine}
-            for b, k in (
-                src.filter(F.col(BUCKET_COL).isin(refine) & F.col(key).isNotNull())
-                .select(BUCKET_COL, key)
-                .collect()
-            ):
-                keys_by_bucket[b].append(k)
-            dropped: set[int] = set()
-            for b in refine:
-                ks = sorted(keys_by_bucket[b])
-                for pos in refinable[b]:
-                    f = rewrite_files[pos]
-                    i = bisect.bisect_left(ks, f.min_key)
-                    if not (i < len(ks) and ks[i] <= f.max_key):
-                        dropped.add(pos)
-            if dropped:
-                carry_files.extend(rewrite_files[p] for p in sorted(dropped))
-                rewrite_files = [
-                    f for p, f in enumerate(rewrite_files) if p not in dropped
-                ]
+                # a file without key stats (non-string key) is never
+                # range-carried
+                keep = not _has_key_range(f) or idx in summary.in_range[f.bucket]
+                if keep and idx in summary.probed.get(f.bucket, ()):
+                    keep = idx in summary.hits.get(f.bucket, ())
+            (rewrite_files if keep else carry_files).append(f)
         return rewrite_files, carry_files
 
     def _bucket_policy_advice(
@@ -1658,14 +1640,20 @@ class LakeTable:
         bucket the batch touches.  The batch may carry
         ``KEY_EVENTS_COL`` for them.
 
-        Determinism: the pruner, the optional exact-key refinement and
-        the co-group each evaluate the batch, so a batch whose rows
-        differ between evaluations could be pruned for one set of keys
-        and written for another.  A batch whose plan Spark marks
-        non-deterministic (``rand``, ``uuid``, a UDF declared
-        ``asNondeterministic`` ...), once cached data is substituted, is
-        therefore local-checkpointed first and every pass reads the same
-        rows.  The checkpoint runs the batch's own shuffle stages when it
+        Placement: a batch that already carries ``BUCKET_COL`` (the
+        winners of a batch ``apply_batch`` placed with
+        :func:`place_by_bucket`) is used as it is, so the summary's ``groupBy`` keeps that
+        placement and starts no exchange; a batch whose column turns
+        out not to match the table's bucketing (a rebucket committed
+        since it was tagged) is re-tagged and summarised again.
+
+        Determinism: the pruner and the co-group each evaluate the
+        batch, so a batch whose rows differ between evaluations could
+        be pruned for one set of keys and written for another.  A batch
+        whose plan Spark marks non-deterministic (``rand``, ``uuid``, a
+        UDF declared ``asNondeterministic`` ...), once cached data is
+        substituted, is therefore local-checkpointed first and every
+        pass reads the same rows.  The checkpoint runs the batch's own shuffle stages when it
         is taken; its blocks live on the executors, so losing one before
         the write fails the merge instead of recomputing different rows,
         and they are released with the frames that reference them.
@@ -1696,7 +1684,9 @@ class LakeTable:
 
         # --- additive schema evolution from the batch's new columns
         table_schema = StructType.fromJson(snap["schema"])
-        add = strategy.new_fields({f.name for f in table_schema.fields} | {KEY_EVENTS_COL})
+        add = strategy.new_fields(
+            {f.name for f in table_schema.fields} | {KEY_EVENTS_COL, BUCKET_COL}
+        )
         if add:
             self.evolve_schema(
                 StructType(list(table_schema.fields) + add),
@@ -1706,8 +1696,12 @@ class LakeTable:
             table_schema = StructType.fromJson(snap["schema"])
         strategy.bind(table_schema, key)
 
-        src = batch.withColumn(BUCKET_COL, bucket_expr(key, nb))
+        retag = batch.withColumn(BUCKET_COL, bucket_expr(key, nb))
+        src = batch if BUCKET_COL in batch.columns else retag
         buckets = self._bucket_summary(src, snap, bucket_aggs)
+        if buckets.misplaced:
+            src = retag
+            buckets = self._bucket_summary(src, snap, bucket_aggs)
         rewrite_files, carry_files = self._prune_for_batch(src, snap, buckets)
         cur = self._scan(spark, rewrite_files, table_schema).withColumn(
             BUCKET_COL, bucket_expr(key, nb)
@@ -1718,13 +1712,13 @@ class LakeTable:
         # is (bucket, key, its own row struct); the union fills the
         # other side's slot with a typed null.  A key has at most one
         # row per side, so the per-key first-non-null of each slot
-        # rebuilds the full-outer join row.  Bucket b goes to partition
-        # b mod parts rather than to a hash of b, which would put 4 of 8
-        # buckets in one of 4 tasks.  Every bucket still sits in one
-        # partition, so the write skips its own exchange (Spark would
-        # keep it: it does not match a by-id partitioning to a hash one).
+        # rebuilds the full-outer join row.  The rows are placed by
+        # bucket id (``place_by_bucket``), so the write skips its own
+        # exchange (Spark would keep it: it does not match a by-id
+        # partitioning to a hash one).  A union does not keep its
+        # inputs' placement, so an already-placed batch still crosses
+        # this exchange once.
         s_cols, t_cols = strategy.projections()
-        parts = min(nb, int(spark.conf.get("spark.sql.shuffle.partitions")))
         s = src.select(
             BUCKET_COL, key, F.struct(F.col(key).alias("_s_key"), *s_cols).alias("_s")
         )
@@ -1738,8 +1732,7 @@ class LakeTable:
             ).alias("_t"),
         )
         cogrouped = (
-            t.unionByName(s, allowMissingColumns=True)
-            .repartitionById(parts, F.col(BUCKET_COL))
+            place_by_bucket(t.unionByName(s, allowMissingColumns=True), nb)
             .groupBy(BUCKET_COL, key)
             .agg(
                 F.first("_t", ignorenulls=True).alias("_t"),

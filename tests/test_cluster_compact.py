@@ -6,12 +6,14 @@ option must compose with bloom sidecars and compact_buckets' hot-only
 pass."""
 
 import os
+import shutil
 
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from horizon_etl_spark.tables import lake
 from horizon_etl_spark.tables.lake import (
     BLOOM_PROP,
     BUCKET_COL,
@@ -100,11 +102,11 @@ def test_clustered_compact_disjoint_ranges_and_point_pruning(spark, tmp_table_di
     assert rewrite_post[0].rows < bucket_rows
 
 
-def test_exact_key_refinement_skips_swept_middle_files(spark, tmp_table_dir):
+def test_exact_range_test_skips_swept_middle_files(spark, tmp_table_dir):
     """A sparse batch with two far-apart keys in ONE bucket: the
-    interval [min,max] sweeps every file between them, but the
-    exact-key refinement carries the gap files — only the two files
-    actually holding the keys rewrite.  This is the trickle steady
+    interval [min,max] sweeps every file between them, but the exact
+    range test carries the gap files — only the two files actually
+    holding the keys rewrite.  This is the trickle steady
     state clustering exists for, exact WITHOUT bloom sidecars."""
     t = _mk_table(tmp_table_dir, "t")
     _interleaved(spark, t)
@@ -123,8 +125,8 @@ def test_exact_key_refinement_skips_swept_middle_files(spark, tmp_table_dir):
     carried = {f.path for f in carry if f.bucket == bucket}
     assert carried == {f.path for f in fs[1:-1]}
 
-    # the full merge converges to the same state an unrefined rewrite
-    # would produce
+    # the full merge converges to the same state a rewrite of every
+    # swept file would produce
     before = {r["k"]: r["v"] for r in t.read(spark).collect()}
     t.merge(probe)
     after = {r["k"]: r["v"] for r in t.read(spark).collect()}
@@ -177,12 +179,11 @@ def test_clustered_compact_buckets_touches_only_hot(spark, tmp_table_dir):
     assert stats2["compacted_buckets"] == 0
 
 
-def test_refinement_carries_single_swept_file_on_gap_insert(spark, tmp_table_dir):
+def test_range_test_carries_single_swept_file_on_gap_insert(spark, tmp_table_dir):
     """A sparse INSERT batch whose keys straddle a lone file's range
-    (but all lie outside it): the interval test sweeps the file in,
-    and the refinement must carry it — single-file buckets stay
-    eligible, this wasted full-file rewrite is exactly the case the
-    range-only pruner cannot see."""
+    (but all lie outside it): a batch interval would sweep the file
+    in, and the exact range test must carry it — the wasted full-file
+    rewrite an interval pruner cannot see."""
     t = LakeTable.create(
         os.path.join(tmp_table_dir, "t"), SCHEMA, key_col="k", bucket_count=1
     )
@@ -224,8 +225,8 @@ def test_prune_soundness_randomized(spark, tmp_table_dir):
     layouts and random sparse batches (present keys, gap inserts,
     out-of-range keys), every file that ACTUALLY holds a batch key must
     be in the rewrite set — the ground truth is read straight from the
-    parquet files.  This is the safety property the bloom probe, the
-    interval test, and the exact-key refinement must jointly preserve;
+    parquet files.  This is the safety property the bloom probe and
+    the exact range test must jointly preserve;
     a false carry is silent data corruption (stale row survives a
     merge it should have joined)."""
     import random
@@ -267,3 +268,215 @@ def test_cluster_by_key_requires_keyed_table(spark, tmp_table_dir):
         _mk_table(tmp_table_dir, "t").compact(
             spark, cluster_by_key=True, target_file_rows=0
         )
+
+
+# --------------------------------------------- exact range test soundness
+@pytest.fixture(scope="module")
+def evens_clustered(spark, tmp_path_factory):
+    """Keys k000000..k000598 (evens only) in 4 buckets, clustered into
+    ~15-row files: ~5 disjoint files per bucket with odd-key gaps
+    between them.  Tests merge into copies (:func:`_copy`)."""
+    t = _mk_table(str(tmp_path_factory.mktemp("evens")), "t")
+    t.merge(_batch(spark, range(0, 600, 2), lsn=1))
+    t.compact(spark, cluster_by_key=True, target_file_rows=15)
+    return t
+
+
+def _copy(t, tmp_table_dir):
+    dst = os.path.join(tmp_table_dir, "copy")
+    shutil.copytree(t.path, dst)
+    return LakeTable.load(dst)
+
+
+def _bucket_of(spark, keys, buckets=4):
+    return {
+        r["k"]: r["b"]
+        for r in spark.createDataFrame([(k,) for k in keys], "k string")
+        .select("k", bucket_expr("k", buckets).alias("b"))
+        .collect()
+    }
+
+
+def _gap_keys(spark, t):
+    """Absent (odd) keys that lie strictly between two files of their
+    own bucket: inside the bucket's key span, in no file's range."""
+    by_bucket = assert_disjoint_bucket_ranges(t)
+    odd = [f"k{i:06d}" for i in range(1, 600, 2)]
+    return [
+        k
+        for k, b in _bucket_of(spark, odd).items()
+        if by_bucket[b][0].max_key < k < by_bucket[b][-1].min_key
+        and not any(f.min_key <= k <= f.max_key for f in by_bucket[b])
+    ]
+
+
+def test_range_test_bounds_are_inclusive(spark, tmp_table_dir, evens_clustered):
+    """A key equal to a file's min_key or max_key selects that file
+    (and only it): the range test's bounds are inclusive."""
+    t = _copy(evens_clustered, tmp_table_dir)
+    by_bucket = assert_disjoint_bucket_ranges(t)
+    bucket, fs = max(by_bucket.items(), key=lambda kv: len(kv[1]))
+    assert len(fs) >= 3
+    mid = fs[1]
+    for edge in (mid.min_key, mid.max_key):
+        rewrite, carry = _prune(t, _batch(spark, [int(edge[1:])], lsn=5))
+        assert [f.path for f in rewrite] == [mid.path], edge
+        assert len(carry) == len(_files(t)) - 1
+    # both edges updated in one merge: one file rewritten, values land
+    st = t.merge(_batch(spark, [int(mid.min_key[1:]), int(mid.max_key[1:])], lsn=5))
+    assert st["rewritten_files"] == 1 and st["updated"] == 2
+    rows = {r["k"]: r["v"] for r in t.read(spark).collect()}
+    assert len(rows) == 300
+    assert rows[mid.min_key] == int(mid.min_key[1:]) and rows[mid.max_key] == int(mid.max_key[1:])
+
+
+def test_gap_only_batch_rewrites_no_file(spark, tmp_table_dir, evens_clustered):
+    """Every batch key falls between two files of its bucket: each
+    bucket's batch interval sweeps files in, yet none holds a batch
+    key, so every file carries and the merge only inserts."""
+    t = _copy(evens_clustered, tmp_table_dir)
+    gaps = _gap_keys(spark, t)
+    buckets = _bucket_of(spark, gaps)
+    # the first and last gap key of each bucket span its inner files
+    probe_keys = sorted(
+        {min(k for k in gaps if buckets[k] == b) for b in set(buckets.values())}
+        | {max(k for k in gaps if buckets[k] == b) for b in set(buckets.values())}
+    )
+    swept = [
+        f
+        for f in _files(t)
+        if any(
+            buckets[lo] == f.bucket == buckets[hi] and lo < f.min_key and f.max_key < hi
+            for lo in probe_keys
+            for hi in probe_keys
+        )
+    ]
+    assert swept
+    probe = _batch(spark, [int(k[1:]) for k in probe_keys], lsn=5)
+    rewrite, carry = _prune(t, probe)
+    assert rewrite == [] and len(carry) == len(_files(t))
+    st = t.merge(probe)
+    assert st["rewritten_files"] == 0 and st["inserted"] == len(probe_keys)
+    assert t.read(spark).count() == 300 + len(probe_keys)
+
+
+def test_non_string_key_table_never_range_carries(spark, tmp_table_dir):
+    """A long-keyed table gets no footer key stats, so the range test
+    never applies: every file in a touched bucket is rewritten, even
+    for keys that lie in no file, and only untouched buckets carry."""
+    schema = StructType(
+        [StructField("id", LongType(), False), StructField("v", LongType(), True)]
+    )
+    t = LakeTable.create(os.path.join(tmp_table_dir, "t"), schema, key_col="id", bucket_count=4)
+
+    def batch(ids, lsn):
+        return spark.createDataFrame(
+            [(i, i, "upsert", lsn) for i in ids], "id long, v long, op string, lsn long"
+        )
+
+    for block in range(3):  # adjacent blocks: 3 files per bucket
+        t.merge(batch(range(block * 100, (block + 1) * 100), lsn=block + 1))
+    files = _files(t)
+    assert files and all(f.min_key is None and f.max_key is None for f in files)
+    probe = batch([1_000_001], lsn=9)  # in no file's key span
+    (b,) = {
+        r["b"]
+        for r in probe.select(bucket_expr("id", 4).alias("b")).collect()
+    }
+    snap = t.snapshot()
+    rewrite, carry = t._prune_for_batch(probe.withColumn(BUCKET_COL, bucket_expr("id", 4)), snap)
+    assert {f.path for f in rewrite} == {f.path for f in files if f.bucket == b}
+    assert {f.path for f in carry} == {f.path for f in files if f.bucket != b}
+    st = t.merge(probe)
+    assert st["inserted"] == 1 and st["rewritten_files"] == len(rewrite)
+    assert t.read(spark).count() == 301
+
+
+def test_unprobed_bloom_files_get_the_range_test(spark, tmp_table_dir):
+    """A key_bloom table whose probe budget (``key_bloom_max_probe_mb``)
+    covers only its largest sidecar: the files past the cap are not
+    probed, and the range test alone decides them — carried when no
+    batch key falls in their range, rewritten when one does."""
+    t = _mk_table(tmp_table_dir, "t", bloom=True)
+    t.merge(_batch(spark, range(0, 600, 2), lsn=1))
+    t.compact(spark, cluster_by_key=True, target_file_rows=15)
+    files = _files(t)
+    assert all(f.bloom for f in files)
+    largest = max(files, key=lambda f: f.rows)
+    t.set_props({"key_bloom_max_probe_mb": int(largest.bloom["m"]) / 8 / 1e6})
+    gaps = _gap_keys(spark, t)
+    present = [k for k in (f.min_key for f in files) if k != largest.min_key][:3]
+    probe = _batch(spark, [int(k[1:]) for k in gaps + present], lsn=5)
+    snap = t.snapshot()
+    summary = t._bucket_summary(
+        probe.withColumn(BUCKET_COL, bucket_expr("k", snap["bucket_count"])), snap
+    )
+    assert sum(len(p) for p in summary.probed.values()) == 1
+    rewrite, carry = _prune(t, probe)
+    assert {f.min_key for f in rewrite} == set(present)
+    assert len(carry) == len(files) - len(present)
+    st = t.merge(probe)
+    assert st["updated"] == len(present) and st["inserted"] == len(gaps)
+
+
+def _newest_summary_plan(spark) -> str:
+    """The executed plan text of the newest batch summary (the plan
+    naming its ``_misplaced`` aggregate), as the SQL status store keeps
+    it."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = (execs.apply(i).physicalPlanDescription() for i in reversed(range(execs.size())))
+    return next(p for p in plans if "_misplaced" in p)
+
+
+def test_range_test_past_literal_budget_rides_broadcast(
+    spark, tmp_table_dir, evens_clustered, monkeypatch
+):
+    """Key ranges past ``RANGE_LITERAL_MAX_BYTES`` reach the summary as
+    a broadcast instead of a literal: the same files rewrite and carry,
+    and no file's bounds appear in the plan text the SQL status store
+    keeps per merge, so that text no longer grows with the table."""
+    t = _copy(evens_clustered, tmp_table_dir)
+    files = _files(t)
+    present = [f.min_key for f in files[:-1:3]] + [files[-1].max_key]
+    probe = _batch(spark, [int(k[1:]) for k in _gap_keys(spark, t)[:4] + present], lsn=5)
+
+    def decisions():
+        rewrite, carry = _prune(t, probe)
+        return sorted(f.path for f in rewrite), sorted(f.path for f in carry)
+
+    inline = decisions()
+    literal_plan = _newest_summary_plan(spark)
+    assert files[0].min_key in literal_plan and files[-1].max_key in literal_plan
+    monkeypatch.setattr(lake, "RANGE_LITERAL_MAX_BYTES", 0)
+    assert decisions() == inline
+    assert len(inline[0]) == len(present) and inline[1]
+    plan = _newest_summary_plan(spark)
+    assert "BroadcastExchange" in plan
+    assert not any(f.min_key in plan or f.max_key in plan for f in files)
+    st = t.merge(probe)
+    assert st["rewritten_files"] == len(present) and st["updated"] == len(present)
+
+
+def test_batch_with_misplaced_bucket_column_is_retagged(spark, tmp_table_dir, evens_clustered):
+    """A batch whose own ``_bucket`` column was computed for another
+    bucket count (a rebucket committed after it was tagged) is
+    re-tagged by the merge: every row lands in its key's bucket and
+    the rows it updates are found, not duplicated."""
+    t = _copy(evens_clustered, tmp_table_dir)
+    keys = [f"k{i:06d}" for i in range(0, 100, 10)]
+    bucket_of = _bucket_of(spark, keys)
+    batch = _batch(spark, [int(k[1:]) for k in keys], lsn=5).withColumn(
+        BUCKET_COL, bucket_expr("k", 8)
+    )
+    assert any(r[BUCKET_COL] != bucket_of[r["k"]] for r in batch.collect())
+    before = {f.path for f in _files(t)}
+    st = t.merge(batch.withColumn("v", F.col("v") + 1))
+    assert st["updated"] == len(keys) and st["inserted"] == 0
+    rows = {r["k"]: r["v"] for r in t.read(spark).collect()}
+    assert len(rows) == 300 and all(rows[k] == int(k[1:]) + 1 for k in keys)
+    all_keys = _bucket_of(spark, list(rows))
+    for f in _files(t):
+        if f.path not in before:
+            ks = pq.read_table(os.path.join(t.path, f.path), columns=["k"])["k"].to_pylist()
+            assert {all_keys[k] for k in ks} == {f.bucket}

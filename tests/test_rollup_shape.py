@@ -148,7 +148,10 @@ def test_rollback_to_batch_restores_driver_written_rollup(spark, tmp_path, feed)
 
     rollback_to_batch(pipe, spark, 1)
     assert rollup_rows(pipe.rollup.read(spark)) == after_1
-    # the rollback is a new target commit, so re-applying batch 2
-    # rebuilds the rollup through the same driver commit
+    # the rollback is a new target commit; the restored rollup is
+    # re-stamped against it, so re-applying batch 2 folds its deltas
+    # incrementally instead of rebuilding from a full target scan
+    assert pipe.rollup.props["synced_target_version"] == pipe.target.current_version()
     apply_batch(pipe, _batch(feed, 2, True), batch_id=2, with_rollup=True)
+    assert pipe.rollup.snapshot()["operation"] == "rollup"
     assert rollup_rows(pipe.rollup.read(spark)) == recomputed_rows(pipe, spark)
