@@ -386,103 +386,6 @@ def run_replica_bench(spark, num_events: int, num_keys: int, deltas: int = 6) ->
     return stats
 
 
-def run_bloom_bench(
-    spark, num_keys: int, strata: int = 8, trickle_keys: int = 64
-) -> dict:
-    """Key-Bloom file pruning vs the range-only pruner, on the workload
-    range pruning cannot help: POINT-key updates.  The same key
-    population loads into two tables in ``strata`` CONTIGUOUS-range
-    commits (the realistic ingest shape: time/id-ordered loads produce
-    range-local files, which range pruning carries — so BOTH tables
-    end with the identical ``strata``-files-per-bucket layout and the
-    comparison isolates the pruning decision alone).  A small
-    random-point-key trickle then hits each table twice, bracketing the
-    point-key workload space:
-
-    * ``update`` — random EXISTING keys: the range table rewrites every
-      file its per-bucket [min,max] spans (for k uniform keys per
-      bucket, E ~(k-1)/(k+1) of the stratum span), the bloomed table
-      only the file(s) actually holding each key.
-    * ``insert`` — random NEW keys interleaved between existing ones
-      (the load writes even ids, the insert trickle odd ids): every
-      rewrite the range table does here is pure waste — no existing row
-      moves — while the bloom proves the keys absent and carries
-      everything (~0 rows rewritten, modulo the documented FPR).
-
-    ``strata`` defaults to 8 = the default compact_buckets threshold,
-    i.e. the steady-state file count compaction allows a hot bucket."""
-    from pyspark.sql import functions as F
-
-    from horizon_etl_spark.cdc import schema as S
-    from horizon_etl_spark.tables.lake import BLOOM_PROP, LakeTable
-
-    root = os.path.join(tempfile.gettempdir(), "horizon_etl_bench", "bloom")
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
-    cpus = spark.sparkContext.defaultParallelism
-    buckets = max(16, cpus)
-
-    def events(ids, lsn):
-        return ids.select(
-            F.format_string("doc-%08d", F.col("id")).alias("doc_id"),
-            F.sequence(F.lit(1), F.lit(64)).alias("tokens"),
-            F.lit(64).alias("n_tok"),
-            F.lit("bench").alias("source"),
-            F.lit("upsert").alias("op"),
-            F.lit(lsn).cast("long").alias("lsn"),
-        )
-
-    def rewritten_rows(t, prev_version):
-        prev = {f["path"]: f["rows"] for f in t.snapshot(prev_version)["files"]}
-        cur = {f["path"] for f in t.snapshot()["files"]}
-        return sum(r for p, r in prev.items() if p not in cur)
-
-    # loaded keys are EVEN ids; odd ids are the never-loaded interleaved
-    # keyspace the insert trickle draws from
-    pop = spark.range(num_keys).select((F.col("id") * 2).alias("id"))
-    rand = ((F.col("id") * 2654435761) % num_keys) * 2
-    upd_ids = spark.range(trickle_keys).select(rand.alias("id")).distinct()
-    ins_ids = spark.range(trickle_keys).select((rand + 1).alias("id")).distinct()
-    # the multiplicative hash can collide: report the distinct keys the
-    # trickles actually carry (both use the same ids), not the request
-    out: dict = {"keys": num_keys, "strata": strata, "trickle_keys": upd_ids.count()}
-    for mode, props in (("bloom", {BLOOM_PROP: "true"}), ("range", None)):
-        t = LakeTable.create(
-            f"{root}/{mode}", S.TARGET_SCHEMA, key_col="doc_id",
-            bucket_count=buckets, props=props,
-        )
-        t0 = time.time()
-        step = num_keys // strata
-        for s in range(strata):
-            lo = 2 * s * step
-            hi = 2 * num_keys if s == strata - 1 else 2 * (s + 1) * step
-            t.merge(events(pop.filter((F.col("id") >= lo) & (F.col("id") < hi)), lsn=s + 1))
-        load_sec = round(time.time() - t0, 2)
-        res = {"load_sec": load_sec, "files": len(t.snapshot()["files"])}
-        for case, ids, lsn in (("update", upd_ids, 100), ("insert", ins_ids, 101)):
-            v = t.current_version()
-            t0 = time.time()
-            stats = t.merge(events(ids, lsn=lsn))
-            res[case] = {
-                "sec": round(time.time() - t0, 2),
-                "rewritten_files": stats["rewritten_files"],
-                "rewritten_rows": rewritten_rows(t, v),
-            }
-        out[mode] = res
-    b, r = out["bloom"], out["range"]
-    out["update_rows_ratio"] = (
-        round(r["update"]["rewritten_rows"] / b["update"]["rewritten_rows"], 1)
-        if b["update"]["rewritten_rows"]
-        else None
-    )
-    out["insert_rows_wasted"] = {
-        "range": r["insert"]["rewritten_rows"],
-        "bloom": b["insert"]["rewritten_rows"],
-    }
-    shutil.rmtree(root, ignore_errors=True)
-    return out
-
-
 def run_cluster_bench(
     spark, num_keys: int, trickle_keys: int = 64, splits_per_bucket: int = 8
 ) -> dict:
@@ -653,10 +556,6 @@ def main() -> None:
     replica = run_replica_bench(spark, rp_events, max(1000, rp_events // 20))
     log(f"replica: {replica}")
 
-    bl_keys = int(os.environ.get("BENCH_BLOOM_KEYS", max(10_000, num_keys // 2)))
-    bloom = run_bloom_bench(spark, bl_keys)
-    log(f"bloom: {bloom}")
-
     cl_keys = int(os.environ.get("BENCH_CLUSTER_KEYS", max(10_000, num_keys // 2)))
     cluster = run_cluster_bench(spark, cl_keys)
     log(f"cluster: {cluster}")
@@ -687,7 +586,6 @@ def main() -> None:
         "rebucket": rebucket,
         "outbox": outbox,
         "replica": replica,
-        "bloom": bloom,
         "cluster": cluster,
         "graph": graph,
     }

@@ -375,7 +375,7 @@ def connected_components(
 
     def signature(df: DataFrame) -> tuple:
         # decimal sum: a long sum of xxhash64 values overflows under
-        # ANSI mode (same pitfall as the bloom sketch hashes)
+        # ANSI mode
         row = df.agg(
             F.count(F.lit(1)).alias("n"),
             F.coalesce(

@@ -47,7 +47,6 @@ import json
 import os
 import shutil
 import uuid
-from collections import OrderedDict
 from dataclasses import dataclass
 from typing import Any, Callable
 
@@ -89,32 +88,22 @@ class FileEntry:
     rows: int
     min_key: str | None
     max_key: str | None
-    # Optional key-bloom sidecar: {"ref": <path relative to table root>,
-    # "m": <bits>, "k": <hash count>} — see the key-bloom block below.
-    bloom: dict[str, Any] | None = None
 
     def to_json(self) -> dict[str, Any]:
-        d = {
+        return {
             "path": self.path,
             "bucket": self.bucket,
             "rows": self.rows,
             "min_key": self.min_key,
             "max_key": self.max_key,
         }
-        if self.bloom:
-            d["bloom"] = self.bloom
-        return d
 
     @classmethod
     def from_json(cls, d: dict[str, Any]) -> "FileEntry":
-        return cls(
-            d["path"],
-            d["bucket"],
-            d["rows"],
-            d.get("min_key"),
-            d.get("max_key"),
-            d.get("bloom"),
-        )
+        # other fields are ignored: older manifests carry a key-bloom
+        # sidecar ref per file, which nothing reads, so a commit that
+        # rewrites the file list drops it
+        return cls(d["path"], d["bucket"], d["rows"], d.get("min_key"), d.get("max_key"))
 
 
 @dataclass
@@ -124,8 +113,6 @@ class _BucketSummary:
 
     # touched bucket -> stat-bearing files whose [min, max] holds a batch key
     in_range: dict[int, set[int]]
-    probed: dict[int, set[int]]  # bucket -> files whose bloom joined the probe
-    hits: dict[int, set[int]]  # bucket -> probed files some batch key hit
     aggs: dict[int, dict[str, Any]]  # bucket -> the caller's bucket_aggs values
     misplaced: bool  # some batch row's BUCKET_COL is not its key's bucket
 
@@ -169,7 +156,7 @@ def _with_range_hits(src: DataFrame, files: list[FileEntry], key_col: str) -> Da
     (null when no file has stats).  Collected per bucket by the batch
     summary, it lets the pruner carry every file no batch key falls in,
     including the files BETWEEN two keys, so on a key-clustered table a
-    point key rewrites ~1 file with no bloom sidecars.  The ranges come
+    point key rewrites ~1 file.  The ranges come
     as one ``from_json`` literal indexed by bucket, or past
     ``RANGE_LITERAL_MAX_BYTES`` as one broadcast row per bucket joined
     on it: no batch row repeats, and the batch keeps its placement."""
@@ -224,38 +211,9 @@ def recommended_bucket_count(
     return min(16384, max(4, 1 << math.ceil(math.log2(need))))
 
 
-# --------------------------------------------------------------- key blooms
-# Per-file key Bloom filters extend carry/rewrite pruning beyond the
-# min/max range test: a CDC trickle of POINT keys spread across the key
-# range defeats range pruning (every file's range overlaps the batch's
-# range), but a Bloom membership probe still proves most files key-free
-# and carries them.  Design mirrors Iceberg's puffin sidecars: the
-# filter is built once at bulk-write time (compact / rebucket /
-# bootstrap-overwrite, opt-in per table via the ``key_bloom`` prop),
-# stored as a sidecar under _meta/blooms/, and probed at merge time
-# inside the SAME one-pass per-bucket aggregate the range pruner
-# already runs — zero extra Spark actions on the hot path.
-#
-# Hash scheme: classic double hashing pos_i = (h1 + i*h2) mod m with
-# h1/h2 both computed BY SPARK (xxhash64) on the build and probe sides,
-# so Python never re-implements the hash.  Both sides reduce h1/h2 mod
-# m BEFORE the multiply-add (mathematically identical, and the partial
-# sums then fit in int64 — Spark 4's ANSI mode would throw on a raw
-# h1 + i*h2 long overflow); numpy's % with a positive divisor matches
-# Spark's pmod, verified by the round-trip property test.
-# 16 bits/key + 8 probes → per-probe FPR ~5.6e-4.  The parameter that
-# matters operationally is P(file falsely rewritten) ≈ 1-(1-FPR)^p for
-# p batch keys landing in the file's bucket — at p≈80 that's ~4% here
-# vs ~21% at the textbook 12 bits/6 probes, a 5× cut in copy-on-write
-# write amplification for 33% bigger sidecars.
-BLOOM_BITS_PER_KEY = 16
-BLOOM_K = 8
-BLOOM_MAX_BITS = 1 << 23  # 1 MiB cap per file (FPR degrades, stays safe)
-BLOOM_PROP = "key_bloom"
 # read_keys is a POINT-lookup API; beyond this many keys the isin()
-# literal list (and the per-key driver bloom loop) stops being the
-# right plan, so the read degrades to a broadcast semi-join with
-# bucket+range-only pruning instead of failing or crawling
+# literal list stops being the right plan, so the read degrades to a
+# broadcast semi-join instead of failing or crawling
 READ_KEYS_ISIN_MAX = 10_000
 # Clustering advisory (merge-time, consumed by job_maintain
 # --cluster-by-key auto): fires when a merge's copy-on-write rewrite
@@ -265,159 +223,6 @@ READ_KEYS_ISIN_MAX = 10_000
 # because its rewritten files are ~target_file_rows-sized even though
 # point-merge amplification never reaches 1 under copy-on-write.
 CLUSTER_ADVICE_MIN_AMP = 8
-
-
-def _bloom_hash_exprs(key_col: str) -> tuple[Column, Column]:
-    """(h1, h2) bigint hash columns for the double-hashing scheme —
-    identical expressions on the build and probe paths.
-
-    BOTH hashes are salted: plain ``xxhash64(key)`` is the bucket
-    assignment hash (bucket_expr), so within one bucket every key — and
-    every probing batch key — shares ``h1 ≡ bucket (mod bucket_count)``;
-    with m a multiple of the bucket count that packs the i=0 probe bits
-    of a file's keys into an m/bucket_count subspace whose fill is ~16×
-    the nominal rate, inflating the measured FPR ~20× over theory.
-    Salting decorrelates the bloom positions from the bucket layout."""
-    return (
-        F.xxhash64(F.lit("bloom#1"), F.col(key_col)),
-        F.xxhash64(F.lit("bloom#2"), F.col(key_col)),
-    )
-
-
-# Result schema of the bloom BUILD job: descriptors only — the filter
-# words are written to their sidecar files EXECUTOR-SIDE inside the
-# kernel and never ride back to the driver (tests assert no "words"
-# column here; the pre-round-5 design collected every file's words —
-# O(new files × 1 MiB) driver memory on a huge bootstrap/compact).
-_BLOOM_BUILD_RESULT_SCHEMA = "_file string, ref string, m long, k int"
-
-
-def _make_bloom_build_pdf(table_path: str, version: int):
-    """Grouped-map kernel factory: one file's (h1, h2) rows -> one
-    bloom SIDECAR written in the worker + one descriptor row back.
-
-    Arrow-batched; numpy bit ops only (no per-row Python).  The sidecar
-    write is atomic (tmp + os.replace) and its name is a deterministic
-    digest of the data file's bucket-dir/basename, so a speculated or
-    retried task rewrites the identical path with identical bytes —
-    idempotent.  ``table_path`` must be reachable from the executors
-    (on a cluster: a DFS/object-store mount), the same contract the
-    data-file writes already have."""
-
-    def _bloom_build_pdf(pdf):
-        import hashlib
-        import os as _os
-        import uuid as _uuid
-
-        import numpy as np
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        n = len(pdf)
-        m = min(BLOOM_MAX_BITS, max(256, ((n * BLOOM_BITS_PER_KEY + 63) // 64) * 64))
-        words = np.zeros(m // 64, dtype=np.uint64)
-        # reduce mod m first: partial sums stay < BLOOM_K*m ≤ 2^26, no
-        # overflow; numpy % with a positive divisor = Spark pmod
-        h1 = pdf["_h1"].to_numpy(dtype=np.int64) % np.int64(m)
-        h2 = pdf["_h2"].to_numpy(dtype=np.int64) % np.int64(m)
-        for i in range(BLOOM_K):
-            pos = (h1 + np.int64(i) * h2) % np.int64(m)
-            np.bitwise_or.at(
-                words,
-                pos >> 6,
-                np.left_shift(np.uint64(1), (pos & 63).astype(np.uint64)),
-            )
-        fname = pdf["_file"].iloc[0]
-        # bucket-dir/basename identifies the data file within this
-        # commit (a dynamic partition write reuses the same part-file
-        # basename in every bucket directory, so the basename alone is
-        # ambiguous); digesting it gives a stable, collision-free
-        # sidecar name per (version, data file)
-        rel_id = "/".join(fname.rstrip("/").split("/")[-2:])
-        digest = hashlib.sha1(rel_id.encode()).hexdigest()[:16]
-        ref = _os.path.join(
-            "_meta", "blooms", f"v{version:08d}-{digest}.bloom.parquet"
-        )
-        final = _os.path.join(table_path, ref)
-        _os.makedirs(_os.path.dirname(final), exist_ok=True)
-        tmp = f"{final}.tmp.{_uuid.uuid4().hex[:8]}"
-        pq.write_table(
-            pa.table(
-                {
-                    "m": pa.array([int(m)], pa.int64()),
-                    "k": pa.array([BLOOM_K], pa.int32()),
-                    "words": pa.array(
-                        [words.view(np.int64)], pa.list_(pa.int64())
-                    ),
-                }
-            ),
-            tmp,
-        )
-        _os.replace(tmp, final)
-        return pd.DataFrame(
-            {"_file": [fname], "ref": [ref], "m": [m], "k": [BLOOM_K]}
-        )
-
-    return _bloom_build_pdf
-
-
-# Sidecars are one-row parquet files (m, k, words) — the merge-time
-# probe scans them JVM-side (no Python word serialization on the hot
-# path); only the driver-side point-lookup path decodes them here.
-# Immutable once written, so cache per absolute path — bounded LRU
-# (sidecars from expired snapshots would otherwise accumulate for the
-# driver process's lifetime).
-_BLOOM_CACHE: "OrderedDict[str, list[int]]" = OrderedDict()
-_BLOOM_CACHE_STATE = {"bytes": 0, "max_bytes": 256 * 1024 * 1024}
-
-
-def _bloom_cache_evict(abs_path: str) -> None:
-    ws = _BLOOM_CACHE.pop(abs_path, None)
-    if ws is not None:
-        _BLOOM_CACHE_STATE["bytes"] -= len(ws) * 8
-
-
-def _usable_bloom_words(table_path: str, bloom: dict[str, Any]) -> "np.ndarray | None":
-    """Decode + validate one sidecar for driver-side probing; None for
-    any missing / corrupt / parameter-mismatched sidecar (the caller
-    degrades to range-only pruning).  The usability invariant (k
-    matches this engine's probe count, word length matches m, m matches
-    the manifest) lives here and in the merge path's JVM-side filter —
-    the only two consumers."""
-    if not bloom or int(bloom.get("k", -1)) != BLOOM_K:
-        return None
-    import numpy as np
-
-    abs_path = os.path.join(table_path, bloom["ref"])
-    cached = _BLOOM_CACHE.get(abs_path)
-    if cached is not None:
-        # re-validate against THIS manifest entry: a cache hit must not
-        # skip the m check (a mismatched manifest would otherwise probe
-        # out-of-range positions instead of degrading)
-        if len(cached) * 64 != int(bloom["m"]):
-            return None
-        _BLOOM_CACHE.move_to_end(abs_path)
-        return cached
-    try:
-        import pyarrow.parquet as pq
-
-        t = pq.read_table(abs_path)
-        m, k = t["m"][0].as_py(), t["k"][0].as_py()
-        # numpy array, not a list of boxed ints: the LRU's 8-bytes/word
-        # accounting is then true (a list[int] costs ~5× its nominal
-        # size and would blow past the 256 MB bound unnoticed)
-        words = np.asarray(t["words"][0].as_py(), dtype=np.int64)
-    except Exception:
-        return None
-    if k != BLOOM_K or len(words) * 64 != m or m != int(bloom["m"]):
-        return None
-    _BLOOM_CACHE[abs_path] = words
-    _BLOOM_CACHE_STATE["bytes"] += len(words) * 8
-    while _BLOOM_CACHE_STATE["bytes"] > _BLOOM_CACHE_STATE["max_bytes"] and _BLOOM_CACHE:
-        _evicted, ws = _BLOOM_CACHE.popitem(last=False)
-        _BLOOM_CACHE_STATE["bytes"] -= len(ws) * 8
-    return words
 
 
 def _footer_stats(path: str, key: str | None) -> tuple[int, str | None, str | None]:
@@ -712,42 +517,29 @@ class LakeTable:
         spark: SparkSession,
         keys: list,
         snap: dict[str, Any],
-        probe_blooms: bool = True,
         key_df: DataFrame | None = None,
     ) -> list[FileEntry]:
         """Driver-side file pruning for a point-key lookup: bucket +
-        min/max range + (when sidecars exist) bloom membership.  The
-        only Spark work is one tiny job computing the keys' xxhash64
-        values with the TABLE's key dtype (the engine never
-        re-implements the hash in Python, and hashing e.g. a long key
-        as its string form would silently probe the wrong bucket); the
-        probes themselves run in-process against the cached sidecar
-        words, so pruning cost is O(keys × files-in-their-buckets) bit
-        tests — no cluster round trip per file."""
+        min/max range.  The only Spark work is one tiny job computing the
+        keys' buckets with the TABLE's key dtype (the engine never
+        re-implements the hash in Python, and hashing e.g. a long key as
+        its string form would silently probe the wrong bucket).  Each
+        bucket's keys are sorted once and bisected per file, so pruning
+        costs O(files × log keys)."""
         import bisect
 
         key_col = snap["key_col"]
-        nb = snap["bucket_count"]
-        key_field = StructType.fromJson(snap["schema"])[key_col]
-        src = key_df if key_df is not None else spark.createDataFrame(
-            [(k,) for k in keys], StructType([key_field])
-        )
-        cols = [F.col(key_col), bucket_expr(key_col, nb).alias("_b")]
-        if probe_blooms:
-            h1e, h2e = _bloom_hash_exprs(key_col)
-            cols += [h1e.alias("_h1"), h2e.alias("_h2")]
-        rows = src.select(*cols).collect()
+        if key_df is None:
+            key_df = spark.createDataFrame(
+                [(k,) for k in keys], StructType([StructType.fromJson(snap["schema"])[key_col]])
+            )
         by_bucket: dict[int, list] = {}
-        for r in rows:
-            by_bucket.setdefault(r["_b"], []).append(r)
-        # bulk path (no bloom probes): the per-file question collapses
-        # to "does ANY key fall in [min,max]" — sort each bucket's keys
-        # once and bisect, O(files × log keys) instead of O(files × keys)
-        sorted_keys: dict[int, list] = (
-            {}
-            if probe_blooms
-            else {b: sorted(r[key_col] for r in rs) for b, rs in by_bucket.items()}
-        )
+        for r in key_df.select(
+            F.col(key_col), bucket_expr(key_col, snap["bucket_count"]).alias("_b")
+        ).collect():
+            by_bucket.setdefault(r["_b"], []).append(r[key_col])
+        for ks in by_bucket.values():
+            ks.sort()
         out: list[FileEntry] = []
         for f in [FileEntry.from_json(x) for x in snap["files"]]:
             if f.bucket == -1:
@@ -755,44 +547,12 @@ class LakeTable:
                 continue
             if f.bucket not in by_bucket:
                 continue
-            if not probe_blooms:
-                ks = sorted_keys[f.bucket]
-                if f.min_key is not None and f.max_key is not None:
-                    i = bisect.bisect_left(ks, f.min_key)
-                    if i >= len(ks) or ks[i] > f.max_key:
-                        continue
-                out.append(f)
-                continue
-            cands = by_bucket[f.bucket]
-            cands = [
-                r
-                for r in cands
-                if f.min_key is None
-                or f.max_key is None
-                or (f.min_key <= r[key_col] <= f.max_key)
-            ]
-            if not cands:
-                continue
-            words = (
-                _usable_bloom_words(self.path, f.bloom)
-                if (probe_blooms and f.bloom)
-                else None
-            )
-            if words is None:
-                out.append(f)  # no usable sidecar → range result stands
-                continue
-            m = int(f.bloom["m"])
-            hit = False
-            for r in cands:
-                h1m, h2m = r["_h1"] % m, r["_h2"] % m
-                if all(
-                    (words[p >> 6] >> (p & 63)) & 1
-                    for p in ((h1m + i * h2m) % m for i in range(BLOOM_K))
-                ):
-                    hit = True
-                    break
-            if hit:
-                out.append(f)
+            if f.min_key is not None and f.max_key is not None:
+                ks = by_bucket[f.bucket]
+                i = bisect.bisect_left(ks, f.min_key)
+                if i >= len(ks) or ks[i] > f.max_key:
+                    continue
+            out.append(f)
         return out
 
     def read_keys(
@@ -806,11 +566,11 @@ class LakeTable:
         TABLE's native key dtype (a long-keyed table takes ints, not
         their string forms) — live only, unless ``include_meta``,
         scanning ONLY the data files that can hold them: bucket +
-        min/max + bloom pruning driver-side, then an
-        explicit-schema scan of the surviving files with the key
-        predicate pushed to parquet.  At production scale this is the
-        difference between an entity lookup costing O(keys) file reads
-        and a full-table scan; the reference's per-entity get paths
+        min/max pruning driver-side, then an explicit-schema scan of the
+        surviving files with the key predicate pushed to parquet.  At
+        production scale this is the difference between an entity lookup
+        costing O(keys) file reads and a full-table scan; the
+        reference's per-entity get paths
         (/root/reference/src/core/logic/initiative_handlers.py:54-106)
         are point reads of exactly this shape."""
         snap = self.snapshot(version)
@@ -824,25 +584,14 @@ class LakeTable:
         bulk = len(keys) > READ_KEYS_ISIN_MAX
         # ONE key frame serves both the pruning job and (on the bulk
         # path) the semi-join — not two identical driver serializations
-        lk = (
-            spark.createDataFrame(
-                [(k,) for k in keys], StructType([schema[snap["key_col"]]])
-            )
-            if keys
-            else None
+        lk = spark.createDataFrame(
+            [(k,) for k in keys], StructType([schema[snap["key_col"]]])
         )
-        files = (
-            self._files_for_keys(
-                spark, keys, snap, probe_blooms=not bulk, key_df=lk
-            )
-            if keys
-            else []
-        )
+        files = self._files_for_keys(spark, keys, snap, lk) if keys else []
         df = self._scan(spark, files, schema)
         if bulk:
             # point-lookup misuse guard: a giant isin() literal list
-            # blows up the plan (and the per-key driver bloom loop is
-            # O(keys × files)); degrade to a broadcast semi-join, which
+            # blows up the plan; degrade to a broadcast semi-join, which
             # is the right plan shape for bulk key sets anyway
             df = df.join(F.broadcast(lk), snap["key_col"], "semi")
         else:
@@ -1129,7 +878,6 @@ class LakeTable:
         df: DataFrame,
         version: int,
         bucketed: bool,
-        with_blooms: bool = False,
         cluster_files: int | None = None,
         repartition: bool = True,
     ) -> list[FileEntry]:
@@ -1144,9 +892,6 @@ class LakeTable:
         partition (the merge's co-group, placed by bucket id, which
         Spark cannot match to the hash clustering and would shuffle
         again).
-        With ``with_blooms`` a per-file key Bloom sidecar is also built
-        (one column-pruned read-back job over the just-written files —
-        only callers on the bulk/opt-in paths pass it).
 
         ``cluster_files`` (compaction paths only) switches the shuffle
         to ``repartitionByRange(cluster_files, bucket, key)`` + a
@@ -1209,10 +954,6 @@ class LakeTable:
                         entries.append(
                             FileEntry(os.path.join(rel_dir, sub, fn), b, rows, mn, mx)
                         )
-            if with_blooms and entries:
-                blooms = self._build_blooms(df.sparkSession, out_dir, key, version)
-                for e in entries:
-                    e.bloom = blooms.get("/".join(e.path.split(os.sep)[-2:]))
             return entries
         df.write.mode("error").parquet(out_dir)
         entries = []
@@ -1221,54 +962,6 @@ class LakeTable:
                 rows, _, _ = _footer_stats(os.path.join(out_dir, fn), None)
                 entries.append(FileEntry(os.path.join(rel_dir, fn), -1, rows, None, None))
         return entries
-
-    def _build_blooms(
-        self, spark: SparkSession, out_dir: str, key: str, version: int
-    ) -> dict[str, dict[str, Any]]:
-        """Build one key-Bloom sidecar per just-written data file.
-
-        One extra Spark job whose input is ONLY the key column of the
-        new files (column-pruned scan, grouped by ``input_file_name``,
-        numpy bit-set kernel per file via applyInPandas) — distributed
-        and O(written rows), never a driver-side data decode.  The
-        sidecar parquet files are written EXECUTOR-SIDE inside the
-        kernel (atomic, idempotent under task retry); the driver
-        collects only {_file, ref, m, k} descriptor rows — O(new files
-        × ~100 B), never the filter words (which would be O(new files
-        × 1 MiB) on a big bootstrap/compact).  Returns
-        {"<bucket dir>/<basename>": bloom descriptor} — a dynamic
-        partition write reuses the SAME part-file basename in every
-        bucket directory, so the basename alone is ambiguous."""
-        os.makedirs(os.path.join(self.path, "_meta", "blooms"), exist_ok=True)
-        h1, h2 = _bloom_hash_exprs(key)
-        per = (
-            spark.read.option("basePath", out_dir)
-            .parquet(out_dir)
-            .select(F.input_file_name().alias("_file"), h1.alias("_h1"), h2.alias("_h2"))
-        )
-        rows = (
-            per.groupBy("_file")
-            .applyInPandas(
-                _make_bloom_build_pdf(self.path, version),
-                schema=_BLOOM_BUILD_RESULT_SCHEMA,
-            )
-            .collect()
-        )
-        out: dict[str, dict[str, Any]] = {}
-        for r in rows:
-            parts = r["_file"].rstrip("/").split("/")
-            out["/".join(parts[-2:])] = {
-                "ref": r["ref"],
-                "m": int(r["m"]),
-                "k": int(r["k"]),
-            }
-        return out
-
-    def _bloom_enabled(self, snap: dict[str, Any]) -> bool:
-        """Key blooms are an opt-in table prop (``key_bloom: "true"``) —
-        point-key CDC tables turn it on; range-local feeds don't need
-        it and skip the build job."""
-        return str(snap.get("props", {}).get(BLOOM_PROP, "")).lower() in ("true", "1")
 
     # ------------------------------------------------- shared merge plumbing
     def _bucket_summary(
@@ -1282,139 +975,24 @@ class LakeTable:
         bucket the files its keys fall in (the exact range test, see
         :func:`_with_range_hits`), the caller's ``bucket_aggs``
         (``apply_batch``'s bucket metrics), and whether any row's
-        ``BUCKET_COL`` differs from its key's bucket.
-
-        Files carrying a Bloom sidecar are additionally membership-
-        probed inside the SAME aggregation (batch ⋈ broadcast
-        bloom-meta, unrolled ``bit_get`` tests, ``collect_set`` of hit
-        file ids per bucket), so a point-key trickle against a
-        compacted table learns every file the batch provably misses at
-        no extra Spark action.  That join repeats each batch row once
-        per probed sidecar in its bucket, which the set aggregates
-        absorb; the caller's aggregates — arbitrary, so not
-        repeat-safe — run as their own aggregation over the batch rows
-        themselves."""
+        ``BUCKET_COL`` differs from its key's bucket."""
         key = self.key_col
         names = list(bucket_aggs or {})
-        aggs = [bucket_aggs[n].alias(n) for n in names]
-        all_files = [FileEntry.from_json(f) for f in snap["files"]]
-        ranged = _with_range_hits(src, all_files, key)
-        common = [
-            F.array_distinct(F.flatten(F.collect_set("_in_range"))).alias("_in_range"),
-            F.max(F.col(BUCKET_COL) != bucket_expr(key, snap["bucket_count"])).alias(
-                "_misplaced"
-            ),
-        ]
-        # files with a k-compatible sidecar get membership probes; the
-        # sidecars are one-row parquet files scanned JVM-SIDE inside the
-        # probe (no Python word serialization per merge — the trickle
-        # hot path stays driver-light).  The probe broadcasts every
-        # participating bloom, so cap the total bytes
-        # (``key_bloom_max_probe_mb`` prop) and prefer the LARGEST
-        # files — each carries the most avoidable rewrite I/O per
-        # broadcast byte; files past the cap keep the range test.
-        cap_bytes = (
-            float(snap.get("props", {}).get("key_bloom_max_probe_mb", 512)) * 1e6
+        ranged = _with_range_hits(src, [FileEntry.from_json(f) for f in snap["files"]], key)
+        touched = (
+            ranged.groupBy(BUCKET_COL)
+            .agg(
+                F.array_distinct(F.flatten(F.collect_set("_in_range"))).alias("_in_range"),
+                F.max(F.col(BUCKET_COL) != bucket_expr(key, snap["bucket_count"])).alias(
+                    "_misplaced"
+                ),
+                *[bucket_aggs[n].alias(n) for n in names],
+            )
+            .collect()
         )
-        candidates: list[tuple[int, FileEntry]] = []
-        for idx, f in enumerate(all_files):
-            bl = f.bloom
-            # suffix check keeps legacy/foreign sidecar formats (which
-            # the JVM scan would silently drop) from consuming budget
-            if (
-                bl
-                and int(bl.get("k", -1)) == BLOOM_K
-                and bl["ref"].endswith(".bloom.parquet")
-            ):
-                candidates.append((idx, f))
-        candidates.sort(key=lambda t: t[1].rows or 0, reverse=True)
-        bloomed: list[tuple[int, FileEntry]] = []
-        budget = cap_bytes
-        for idx, f in candidates:
-            cost = int(f.bloom["m"]) / 8
-            # existence check at selection: a path missing at PLANNING
-            # time throws despite ignoreMissingFiles (which only covers
-            # disappearance between listing and execution — the vacuum
-            # race the option is kept for)
-            if budget >= cost and os.path.exists(os.path.join(self.path, f.bloom["ref"])):
-                bloomed.append((idx, f))
-                budget -= cost
-
-        # probed = files whose sidecar actually joined the aggregate;
-        # hit = probed files some batch key's bits all matched.  The
-        # distinction makes sidecar loss safe: a missing/corrupt/
-        # mis-sized sidecar silently drops out of the scan
-        # (ignoreMissing/ignoreCorrupt + the m/k filter), its file is
-        # then NOT in `probed`, and the range verdict stands.
-        probed: dict[int, set[int]] = {}
-        hits: dict[int, set[int]] = {}
-        if not bloomed:
-            touched = ranged.groupBy(BUCKET_COL).agg(*common, *aggs).collect()
-            agg_rows = touched if names else []
-        else:
-            spark = src.sparkSession
-            lk = spark.createDataFrame(
-                [
-                    (os.path.basename(f.bloom["ref"]), f.bucket, idx)
-                    for idx, f in bloomed
-                ],
-                schema=f"_ref string, {BUCKET_COL} int, _fid int",
-            )
-            fm = (
-                spark.read.schema("m long, k int, words array<bigint>")
-                .option("ignoreCorruptFiles", "true")
-                .option("ignoreMissingFiles", "true")
-                .parquet(*[os.path.join(self.path, f.bloom["ref"]) for _i, f in bloomed])
-                .filter(
-                    (F.col("k") == BLOOM_K) & (F.size("words") * 64 == F.col("m"))
-                )
-                .withColumn(
-                    "_ref", F.element_at(F.split(F.input_file_name(), "/"), -1)
-                )
-                .join(F.broadcast(lk), "_ref")
-                .select(BUCKET_COL, "_fid", F.col("m").alias("_m"), F.col("words").alias("_words"))
-            )
-            h1, h2 = _bloom_hash_exprs(key)
-            probe = (
-                ranged.select(
-                    BUCKET_COL, key, "_in_range", h1.alias("_h1"), h2.alias("_h2")
-                )
-                .join(F.broadcast(fm), BUCKET_COL, "left")
-                # reduce mod m before the multiply-add (same scheme as
-                # the build kernel; keeps ANSI-mode int64 arithmetic
-                # overflow-free)
-                .withColumns(
-                    {
-                        "_h1m": F.pmod(F.col("_h1"), F.col("_m")),
-                        "_h2m": F.pmod(F.col("_h2"), F.col("_m")),
-                    }
-                )
-            )
-            hit = F.lit(True)
-            for i in range(BLOOM_K):
-                pos = F.pmod(F.col("_h1m") + F.lit(i) * F.col("_h2m"), F.col("_m"))
-                word = F.element_at(
-                    F.col("_words"), (F.shiftright(pos, 6) + 1).cast("int")
-                )
-                hit = hit & (F.bit_get(word, pos.bitwiseAND(F.lit(63))) == 1)
-            touched = (
-                probe.groupBy(BUCKET_COL)
-                .agg(
-                    *common,
-                    F.collect_set(F.col("_fid")).alias("probed"),
-                    F.collect_set(F.when(hit, F.col("_fid"))).alias("hits"),
-                )
-                .collect()
-            )
-            probed = {r[BUCKET_COL]: set(r["probed"]) for r in touched}
-            hits = {r[BUCKET_COL]: set(r["hits"]) for r in touched}
-            agg_rows = src.groupBy(BUCKET_COL).agg(*aggs).collect() if names else []
-
         return _BucketSummary(
             in_range={r[BUCKET_COL]: set(r["_in_range"]) for r in touched},
-            probed=probed,
-            hits=hits,
-            aggs={r[BUCKET_COL]: {n: r[n] for n in names} for r in agg_rows},
+            aggs={r[BUCKET_COL]: {n: r[n] for n in names} for r in touched} if names else {},
             misplaced=any(r["_misplaced"] for r in touched),
         )
 
@@ -1424,16 +1002,13 @@ class LakeTable:
         snap: dict[str, Any],
         summary: _BucketSummary | None = None,
     ) -> tuple[list[FileEntry], list[FileEntry]]:
-        """Bucket + exact key-range (+ optional key-Bloom) file pruning
-        for a bucketed batch, decided driver-side from the batch's
-        :meth:`_bucket_summary` (computed here when ``summary`` is
-        None): a file in a touched bucket is rewritten unless its
-        ``[min_key, max_key]`` holds no batch key, or its bloom was
-        probed and no batch key hit it; every other file carries.  Both
-        tests are free of false negatives (range: file stats are true
-        bounds and the summary tests every batch key; bloom: every
-        inserted key sets all its probe bits), so intersecting them is
-        sound and prunes strictly more than either alone."""
+        """Bucket + exact key-range file pruning for a bucketed batch,
+        decided driver-side from the batch's :meth:`_bucket_summary`
+        (computed here when ``summary`` is None): a file in a touched
+        bucket is rewritten unless its ``[min_key, max_key]`` holds no
+        batch key; every other file carries.  The test has no false
+        negatives: file stats are true bounds and the summary tests
+        every batch key."""
         if summary is None:
             summary = self._bucket_summary(src, snap)
         rewrite_files: list[FileEntry] = []
@@ -1450,8 +1025,6 @@ class LakeTable:
                 # a file without key stats (non-string key) is never
                 # range-carried
                 keep = not _has_key_range(f) or idx in summary.in_range[f.bucket]
-                if keep and idx in summary.probed.get(f.bucket, ()):
-                    keep = idx in summary.hits.get(f.bucket, ())
             (rewrite_files if keep else carry_files).append(f)
         return rewrite_files, carry_files
 
@@ -1757,7 +1330,6 @@ class LakeTable:
             jo.select(BUCKET_COL, key, *strategy.written_columns()),
             version,
             bucketed=True,
-            with_blooms=self._bloom_enabled(snap),
             repartition=False,
         )
         files = carry_files + new_files
@@ -1856,7 +1428,6 @@ class LakeTable:
             df.select(BUCKET_COL, *ordered),
             version,
             bucketed=True,
-            with_blooms=self._bloom_enabled(snap),
             cluster_files=cluster_files,
         )
         else:
@@ -1936,12 +1507,8 @@ class LakeTable:
         retained = versions[-keep_versions:]
         expired = versions[: -keep_versions]
         referenced: set[str] = set()
-        ref_blooms: set[str] = set()
         for v in retained:
-            for f in self.snapshot(v)["files"]:
-                referenced.add(f["path"])
-                if f.get("bloom"):
-                    ref_blooms.add(f["bloom"]["ref"])
+            referenced.update(f["path"] for f in self.snapshot(v)["files"])
 
         removed_snapshots = 0
         for v in expired:
@@ -1975,24 +1542,18 @@ class LakeTable:
                     for full in unref:
                         os.unlink(full)
                         removed_files += 1
-        # bloom sidecars are snapshot metadata, not data files — sweep
-        # the ones no retained snapshot references (same age guard: an
-        # in-flight write creates sidecars before its commit)
-        removed_blooms = 0
+        # key-bloom sidecars written by older versions: nothing reads
+        # them, so every one past the age cutoff goes
         blooms_root = os.path.join(self.path, "_meta", "blooms")
-        if os.path.isdir(blooms_root):
-            for fn in sorted(os.listdir(blooms_root)):
-                rel = os.path.join("_meta", "blooms", fn)
-                full = os.path.join(blooms_root, fn)
-                if rel not in ref_blooms and os.path.getmtime(full) <= cutoff:
-                    os.unlink(full)
-                    _bloom_cache_evict(full)
-                    removed_blooms += 1
+        for fn in os.listdir(blooms_root) if os.path.isdir(blooms_root) else []:
+            full = os.path.join(blooms_root, fn)
+            if os.path.getmtime(full) <= cutoff:
+                os.unlink(full)
+                removed_files += 1
 
         return {
             "removed_snapshots": removed_snapshots,
             "removed_files": removed_files,
-            "removed_blooms": removed_blooms,
             "retained_versions": retained,
         }
 
@@ -2032,7 +1593,6 @@ class LakeTable:
             df.select(BUCKET_COL, *ordered),
             version,
             bucketed=True,
-            with_blooms=self._bloom_enabled(snap),
             cluster_files=(
                 self._cluster_split_count(snap, target_file_rows)
                 if cluster_by_key
@@ -2116,7 +1676,6 @@ class LakeTable:
             df.select(BUCKET_COL, *ordered),
             version,
             bucketed=True,
-            with_blooms=self._bloom_enabled(snap),
             cluster_files=cluster_files,
         )
         self._commit(
@@ -2158,8 +1717,7 @@ class LakeTable:
         per-bucket key ranges are pairwise DISJOINT.  A 100 TB bucket
         is tens of GB — one file per bucket is both an oversized object
         and a full-bucket rewrite on every point-key merge; clustered,
-        the range pruner touches ~1 file per key with no bloom
-        sidecars needed (and where blooms ARE on, both tests tighten).
+        the range pruner touches ~1 file per key.
         The split count is sized driver-side from the manifest's footer
         row counts — no extra Spark job beyond repartitionByRange's
         sampling pass."""

@@ -44,3 +44,29 @@ def assert_disjoint_bucket_ranges(table, require_split=False):
         for a, b in zip(fs, fs[1:]):
             assert a.max_key < b.min_key
     return by_bucket
+
+
+def sql_clock_ms(spark) -> int:
+    """The JVM's wall clock in ms, the clock SQL executions are stamped
+    with: take it before a call, then pass it to :func:`plans_since`."""
+    return int(spark._jvm.System.currentTimeMillis())
+
+
+def plans_since(spark, since_ms: int, needle: str) -> list[str]:
+    """Executed-plan texts of the SQL executions submitted at or after
+    ``since_ms`` whose plan mentions ``needle``, newest first.  The walk
+    starts at the newest execution in the SQL status store and stops at
+    the first one older than ``since_ms``: late in a session the store
+    retains ~1,000 executions, and fetching each plan over Py4J costs
+    tens of seconds per call."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    plans = []
+    for i in reversed(range(store.executionsCount())):
+        e = store.executionsList(i, 1).apply(0)
+        if e.submissionTime() < since_ms:
+            break
+        plan = e.physicalPlanDescription()
+        if needle in plan:
+            plans.append(plan)
+    return plans

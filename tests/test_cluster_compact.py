@@ -2,8 +2,7 @@
 key-sorted ranges per bucket, so the range pruner touches ~1 file per
 point key — Iceberg's sort-ordered rewrite_data_files analogue.  State
 must round-trip exactly, later merges must still converge, and the
-option must compose with bloom sidecars and compact_buckets' hot-only
-pass."""
+option must compose with compact_buckets' hot-only pass."""
 
 import os
 import shutil
@@ -15,27 +14,22 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from horizon_etl_spark.tables import lake
 from horizon_etl_spark.tables.lake import (
-    BLOOM_PROP,
     BUCKET_COL,
     FileEntry,
     LakeTable,
     bucket_expr,
 )
 
-from conftest import assert_disjoint_bucket_ranges
+from conftest import assert_disjoint_bucket_ranges, plans_since, sql_clock_ms
 
 SCHEMA = StructType(
     [StructField("k", StringType(), False), StructField("v", LongType(), True)]
 )
 
 
-def _mk_table(tmp_table_dir, name, bloom=False, buckets=4):
+def _mk_table(tmp_table_dir, name, buckets=4):
     return LakeTable.create(
-        os.path.join(tmp_table_dir, name),
-        SCHEMA,
-        key_col="k",
-        bucket_count=buckets,
-        props={BLOOM_PROP: "true"} if bloom else None,
+        os.path.join(tmp_table_dir, name), SCHEMA, key_col="k", bucket_count=buckets
     )
 
 
@@ -107,7 +101,7 @@ def test_exact_range_test_skips_swept_middle_files(spark, tmp_table_dir):
     interval [min,max] sweeps every file between them, but the exact
     range test carries the gap files — only the two files actually
     holding the keys rewrite.  This is the trickle steady
-    state clustering exists for, exact WITHOUT bloom sidecars."""
+    state clustering exists for."""
     t = _mk_table(tmp_table_dir, "t")
     _interleaved(spark, t)
     t.compact(spark, cluster_by_key=True, target_file_rows=40)
@@ -151,14 +145,6 @@ def test_merge_after_clustered_compact_converges(spark, tmp_table_dir):
     rows = {r["k"]: r["v"] for r in t.read(spark).collect()}
     assert len(rows) == 600
     assert rows["k000301"] == 9999
-
-
-def test_clustered_compact_builds_bloom_sidecars(spark, tmp_table_dir):
-    t = _mk_table(tmp_table_dir, "t", bloom=True)
-    _interleaved(spark, t)
-    t.compact(spark, cluster_by_key=True, target_file_rows=60)
-    files = _files(t)
-    assert files and all(f.bloom for f in files)
 
 
 def test_clustered_compact_buckets_touches_only_hot(spark, tmp_table_dir):
@@ -221,21 +207,20 @@ def test_cluster_advisory_fires_and_clears(spark, tmp_table_dir):
 
 
 def test_prune_soundness_randomized(spark, tmp_table_dir):
-    """No false carries, ever: across clustered / bloomed / fragmented
-    layouts and random sparse batches (present keys, gap inserts,
-    out-of-range keys), every file that ACTUALLY holds a batch key must
-    be in the rewrite set — the ground truth is read straight from the
-    parquet files.  This is the safety property the bloom probe and
-    the exact range test must jointly preserve;
-    a false carry is silent data corruption (stale row survives a
-    merge it should have joined)."""
+    """No false carries, ever: across two clustered-then-fragmented
+    layouts (fine and coarse splits) and random sparse batches (present
+    keys, gap inserts, out-of-range keys), every file that ACTUALLY
+    holds a batch key must be in the rewrite set — the ground truth is
+    read straight from the parquet files.  This is the safety property
+    the exact range test must preserve; a false carry is silent data
+    corruption (stale row survives a merge it should have joined)."""
     import random
 
     rnd = random.Random(7)
-    for name, bloom in (("plain", False), ("bloomed", True)):
-        t = _mk_table(tmp_table_dir, name, bloom=bloom, buckets=3)
+    for name, target_file_rows in (("fine", 20), ("coarse", 55)):
+        t = _mk_table(tmp_table_dir, name, buckets=3)
         t.merge(_batch(spark, range(0, 600, 2), lsn=1))  # evens only
-        t.compact(spark, cluster_by_key=True, target_file_rows=rnd.choice([20, 55]))
+        t.compact(spark, cluster_by_key=True, target_file_rows=target_file_rows)
         # fragment: a few extra merges so buckets mix clustered + fresh files
         t.merge(_batch(spark, rnd.sample(range(0, 600, 2), 40), lsn=2))
         t.merge(_batch(spark, rnd.sample(range(0, 600, 2), 10), lsn=3))
@@ -392,43 +377,6 @@ def test_non_string_key_table_never_range_carries(spark, tmp_table_dir):
     assert t.read(spark).count() == 301
 
 
-def test_unprobed_bloom_files_get_the_range_test(spark, tmp_table_dir):
-    """A key_bloom table whose probe budget (``key_bloom_max_probe_mb``)
-    covers only its largest sidecar: the files past the cap are not
-    probed, and the range test alone decides them — carried when no
-    batch key falls in their range, rewritten when one does."""
-    t = _mk_table(tmp_table_dir, "t", bloom=True)
-    t.merge(_batch(spark, range(0, 600, 2), lsn=1))
-    t.compact(spark, cluster_by_key=True, target_file_rows=15)
-    files = _files(t)
-    assert all(f.bloom for f in files)
-    largest = max(files, key=lambda f: f.rows)
-    t.set_props({"key_bloom_max_probe_mb": int(largest.bloom["m"]) / 8 / 1e6})
-    gaps = _gap_keys(spark, t)
-    present = [k for k in (f.min_key for f in files) if k != largest.min_key][:3]
-    probe = _batch(spark, [int(k[1:]) for k in gaps + present], lsn=5)
-    snap = t.snapshot()
-    summary = t._bucket_summary(
-        probe.withColumn(BUCKET_COL, bucket_expr("k", snap["bucket_count"])), snap
-    )
-    assert sum(len(p) for p in summary.probed.values()) == 1
-    rewrite, carry = _prune(t, probe)
-    assert {f.min_key for f in rewrite} == set(present)
-    assert len(carry) == len(files) - len(present)
-    st = t.merge(probe)
-    assert st["updated"] == len(present) and st["inserted"] == len(gaps)
-
-
-def _newest_summary_plan(spark) -> str:
-    """The executed plan text of the newest batch summary (the plan
-    naming its ``_misplaced`` aggregate), as the SQL status store keeps
-    it."""
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
-    plans = (execs.apply(i).physicalPlanDescription() for i in reversed(range(execs.size())))
-    return next(p for p in plans if "_misplaced" in p)
-
-
 def test_range_test_past_literal_budget_rides_broadcast(
     spark, tmp_table_dir, evens_clustered, monkeypatch
 ):
@@ -445,13 +393,16 @@ def test_range_test_past_literal_budget_rides_broadcast(
         rewrite, carry = _prune(t, probe)
         return sorted(f.path for f in rewrite), sorted(f.path for f in carry)
 
+    since = sql_clock_ms(spark)
     inline = decisions()
-    literal_plan = _newest_summary_plan(spark)
+    # the newest batch summary's plan: the one naming its _misplaced aggregate
+    literal_plan = plans_since(spark, since, "_misplaced")[0]
     assert files[0].min_key in literal_plan and files[-1].max_key in literal_plan
     monkeypatch.setattr(lake, "RANGE_LITERAL_MAX_BYTES", 0)
+    since = sql_clock_ms(spark)
     assert decisions() == inline
     assert len(inline[0]) == len(present) and inline[1]
-    plan = _newest_summary_plan(spark)
+    plan = plans_since(spark, since, "_misplaced")[0]
     assert "BroadcastExchange" in plan
     assert not any(f.min_key in plan or f.max_key in plan for f in files)
     st = t.merge(probe)

@@ -1,8 +1,7 @@
 """Job budget per clean batch: one ``apply_batch`` must start exactly the
-Spark jobs pinned below, in whole-row and per-attribute mode, into a
-``key_bloom`` whole-row target and into a key-clustered one, with the
-change log on and off, and with the change log plus the per-source
-rollup.  The batch summary over ``apply_batch``'s winners must plan no
+Spark jobs pinned below, in whole-row and per-attribute mode and into a
+key-clustered target, with the change log on and off, and with the
+change log plus the per-source rollup.  The batch summary over ``apply_batch``'s winners must plan no
 exchange of its own.
 
 Per-batch fixed cost dominates small batches, so an extra job per batch
@@ -25,16 +24,14 @@ from horizon_etl_spark.cdc.apply import CdcPipeline, apply_batch
 from horizon_etl_spark.cdc.generator import change_feed
 from horizon_etl_spark.tables.lake import BUCKET_COL, FileEntry, bucket_expr
 
-# (target, with_change_log) -> Spark jobs for one warm, clean batch.  A
-# key_bloom target pays for the bloom probe, the bloom build and the
-# bucket metrics, which cannot ride the probe's per-sidecar join.
+from conftest import plans_since, sql_clock_ms
+
+# (target, with_change_log) -> Spark jobs for one warm, clean batch
 JOB_BUDGET = {
     ("whole_row", False): 5,
     ("whole_row", True): 7,
     ("attr", False): 5,
     ("attr", True): 7,
-    ("key_bloom", False): 11,
-    ("key_bloom", True): 13,
 }
 # (target) -> Spark jobs with the change log AND the per-source rollup:
 # the rollup adds one job, its delta collect over the cached co-group
@@ -75,8 +72,6 @@ def _warm_batch_jobs(spark, root, staged_feed, target, **apply_kw) -> int:
         return df if attr_mode else df.drop("fields")
 
     pipe = CdcPipeline.create(root, bucket_count=4, attr_lww=attr_mode)
-    if target == "key_bloom":
-        pipe.target.set_props({"key_bloom": "true"})
     # warm batch: the first merge into an empty target has no files to
     # prune or scan, so it is not the steady-state shape
     apply_batch(pipe, batch(0), batch_id=0, **apply_kw)
@@ -89,20 +84,13 @@ def _warm_batch_jobs(spark, root, staged_feed, target, **apply_kw) -> int:
     return jobs
 
 
-def _summary_nodes_above_cache(spark) -> list[str]:
-    """Node names of the newest batch summary's executed plan (the plan
-    naming its ``_misplaced`` aggregate, read from the SQL status
-    store), down to and including the cached-winners scan; AQE
-    ``Initial Plan`` sections are skipped (they repeat the plan before
-    optimization)."""
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
-    # newest first: the store lists executions by id
-    plan = next(
-        p
-        for p in (execs.apply(i).physicalPlanDescription() for i in reversed(range(execs.size())))
-        if "_misplaced" in p
-    )
+def _summary_nodes_above_cache(spark, since_ms: int) -> list[str]:
+    """Node names of the newest batch summary's executed plan since
+    ``since_ms`` (the plan naming its ``_misplaced`` aggregate, read
+    from the SQL status store), down to and including the cached-winners
+    scan; AQE ``Initial Plan`` sections are skipped (they repeat the
+    plan before optimization)."""
+    plan = plans_since(spark, since_ms, "_misplaced")[0]
     nodes, skip_below = [], None
     for line in plan.split("\n\n", 1)[0].splitlines()[1:]:
         name = line.lstrip(" :+-|")
@@ -119,9 +107,10 @@ def _summary_nodes_above_cache(spark) -> list[str]:
     return nodes
 
 
-@pytest.mark.parametrize("target", ["whole_row", "attr", "key_bloom"])
+@pytest.mark.parametrize("target", ["whole_row", "attr"])
 @pytest.mark.parametrize("with_change_log", [False, True], ids=["log_off", "log_on"])
 def test_clean_batch_job_budget(spark, tmp_path, staged_feed, target, with_change_log):
+    since = sql_clock_ms(spark)
     jobs = _warm_batch_jobs(
         spark, str(tmp_path / "p"), staged_feed, target, with_change_log=with_change_log
     )
@@ -130,8 +119,8 @@ def test_clean_batch_job_budget(spark, tmp_path, staged_feed, target, with_chang
     )
     # the batch was placed by bucket before its LWW reduce, so the
     # merge's per-bucket summary over the cached winners shuffles
-    # nothing (a key_bloom probe only broadcasts its sidecars)
-    nodes = _summary_nodes_above_cache(spark)
+    # nothing
+    nodes = _summary_nodes_above_cache(spark, since)
     assert {"TableCacheQueryStage", "InMemoryTableScan"} & {n.split(" ")[0] for n in nodes}
     assert not [n for n in nodes if n.startswith(("Exchange", "ShuffleQueryStage"))], nodes
 
@@ -209,11 +198,12 @@ def test_skewed_batch_keeps_unplaced_reduce(spark, tmp_path, staged_feed):
     assert "placed=True" in run0["notes"]  # no history yet
     assert pipe.metrics.props["hot_key_share"] > 0.3
     b1 = spark.read.parquet(os.path.join(staged_feed, "batch=1")).drop("fields")
+    since = sql_clock_ms(spark)
     j0 = _next_job_id(spark)
     run = apply_batch(pipe, b1, batch_id=1, with_change_log=False)
     jobs = _next_job_id(spark) - j0
     assert "salted=False placed=False" in run["notes"]
     assert jobs == JOB_BUDGET[("whole_row", False)] + 1, f"skewed batch started {jobs} Spark jobs"
-    nodes = _summary_nodes_above_cache(spark)
+    nodes = _summary_nodes_above_cache(spark, since)
     assert [n for n in nodes if n.startswith(("Exchange", "ShuffleQueryStage"))], nodes
     assert pipe.metrics.props["hot_key_share"] < 0.05

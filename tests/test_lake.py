@@ -7,12 +7,18 @@ from pyspark.sql import Row, functions as F
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
+    LongType,
     StringType,
     StructField,
     StructType,
 )
 
-from horizon_etl_spark.tables.lake import LSN_COL, TOMBSTONE_COL, LakeTable
+from horizon_etl_spark.tables.lake import (
+    LSN_COL,
+    TOMBSTONE_COL,
+    FileEntry,
+    LakeTable,
+)
 
 SCHEMA = StructType(
     [
@@ -469,3 +475,209 @@ def test_commits_stamp_stats_version(spark, tmp_table_dir):
         bucket_count=2,
     )
     assert t.snapshot()["stats_version"] == STATS_FILE_ROWS
+
+
+# ------------------------------------------------ point lookups (read_keys)
+KV_SCHEMA = StructType(
+    [StructField("k", StringType(), False), StructField("v", LongType(), True)]
+)
+
+
+def _kv_table(tmp_table_dir, name, buckets=4):
+    return LakeTable.create(
+        os.path.join(tmp_table_dir, name), KV_SCHEMA, key_col="k", bucket_count=buckets
+    )
+
+
+def _kv_batch(spark, lo, hi, lsn, op="upsert"):
+    return spark.range(lo, hi).select(
+        F.format_string("k%06d", F.col("id")).alias("k"),
+        F.col("id").alias("v"),
+        F.lit(op).alias("op"),
+        F.lit(lsn).cast("long").alias("lsn"),
+    )
+
+
+def _files(t):
+    return [FileEntry.from_json(f) for f in t.snapshot()["files"]]
+
+
+def _keys_in_file(t, entry):
+    import pyarrow.parquet as pq
+
+    return set(
+        pq.read_table(os.path.join(t.path, entry.path), columns=["k"])["k"].to_pylist()
+    )
+
+
+def test_read_keys_point_lookup_scans_only_holding_files(spark, tmp_table_dir):
+    t = _kv_table(tmp_table_dir, "t", buckets=4)
+    t.merge(_kv_batch(spark, 0, 400, 1))
+    t.merge(_kv_batch(spark, 400, 800, 2))
+    t.merge(_kv_batch(spark, 150, 151, 9, op="delete"))
+    # values equal the filtered full read
+    got = {r["k"]: r["v"] for r in t.read_keys(spark, ["k000010", "k000700", "k000150", "k999999"]).collect()}
+    assert got == {"k000010": 10, "k000700": 700}  # deleted + absent keys drop
+    # pruning: the lookup scans only files that can hold the keys
+    snap = t.snapshot()
+    pruned = t._files_for_keys(spark, ["k000010"], snap)
+    holders = [f for f in _files(t) if "k000010" in _keys_in_file(t, f)]
+    assert {f.path for f in holders} <= {f.path for f in pruned}
+    assert len(pruned) <= 2  # the range test keeps it near the single holding file
+    # absent-but-in-range key ("k0001505" sorts between k000150 and
+    # k000151): the range test cannot prove it absent, so the lookup
+    # scans the one file of its bucket whose range holds it
+    assert len(t._files_for_keys(spark, ["k0001505"], snap)) <= 1
+    # out-of-range key and empty lookup cost nothing
+    assert t._files_for_keys(spark, ["k999999"], snap) == []
+    assert t.read_keys(spark, []).count() == 0
+
+
+def test_schema_evolution_then_point_lookup(spark, tmp_table_dir):
+    t = _kv_table(tmp_table_dir, "t")
+    t.merge(_kv_batch(spark, 0, 200, 1))
+    evolved = _kv_batch(spark, 100, 300, 2).withColumn("extra", F.col("v") * 2)
+    t.merge(evolved)  # additive evolution
+    rows = {r["k"]: r for r in t.read(spark).collect()}
+    assert len(rows) == 300
+    assert rows["k000150"]["extra"] == 300 and rows["k000050"]["extra"] is None
+    # point lookup still prunes and returns the evolved column
+    got = t.read_keys(spark, ["k000250"]).collect()
+    assert len(got) == 1 and got[0]["extra"] == 500
+
+
+def test_read_keys_native_long_key_dtype(spark, tmp_table_dir):
+    t = LakeTable.create(
+        os.path.join(tmp_table_dir, "lk"),
+        StructType([StructField("id", LongType(), False), StructField("v", LongType(), True)]),
+        key_col="id",
+        bucket_count=4,
+    )
+    t.merge(
+        spark.range(0, 300).select(
+            F.col("id"), (F.col("id") * 10).alias("v"),
+            F.lit("upsert").alias("op"), F.lit(1).cast("long").alias("lsn"),
+        )
+    )
+    got = {r["id"]: r["v"] for r in t.read_keys(spark, [7, 250, 999]).collect()}
+    assert got == {7: 70, 250: 2500}
+
+
+def test_merge_rewrites_stray_unbucketed_file(spark, tmp_table_dir):
+    t = _kv_table(tmp_table_dir, "t")
+    t.merge(_kv_batch(spark, 0, 50, 1))
+    # stray append lands keyed rows in an unbucketed (bucket=-1) file
+    stray = spark.createDataFrame(
+        [("k900000", 1, 1, False)], "k string, v long, _lsn long, _tombstone boolean"
+    )
+    t.append(stray)
+    assert any(f.bucket == -1 for f in _files(t))
+    # an update for the stray key must rewrite that file, not duplicate
+    t.merge(_kv_batch(spark, 900000, 900001, 5))
+    rows = [r for r in t.read(spark).collect() if r["k"] == "k900000"]
+    assert len(rows) == 1 and rows[0]["v"] == 900000
+    assert not any(f.bucket == -1 for f in _files(t))
+    # and read_keys sees exactly the merged row
+    got = t.read_keys(spark, ["k900000"]).collect()
+    assert len(got) == 1 and got[0]["v"] == 900000
+
+
+def test_read_keys_bulk_fallback_broadcast_semi_join(spark, tmp_table_dir):
+    """Beyond READ_KEYS_ISIN_MAX keys the point-lookup degrades
+    gracefully: broadcast semi-join instead of a giant isin() literal."""
+    t = _kv_table(tmp_table_dir, "t", buckets=4)
+    t.merge(_kv_batch(spark, 0, 2000, 1))
+    keys = [f"k{i:06d}" for i in range(50_000)]  # 2k present, 48k absent
+    df = t.read_keys(spark, keys)
+    assert df.count() == 2000
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LeftSemi" in plan and "Broadcast" in plan
+    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+    # small lists keep the literal-pushdown point plan
+    small = t.read_keys(spark, ["k000010"])
+    assert small.count() == 1
+    assert "LeftSemi" not in small._jdf.queryExecution().executedPlan().toString()
+
+
+def test_read_keys_unkeyed_table_raises(spark, tmp_table_dir):
+    t = LakeTable.create(
+        os.path.join(tmp_table_dir, "nk"), KV_SCHEMA, key_col=None, bucket_count=1
+    )
+    with pytest.raises(ValueError, match="keyed table"):
+        t.read_keys(spark, ["k000001"])
+
+
+def test_legacy_key_bloom_manifest_works_as_plain_table(spark, tmp_table_dir):
+    """A table written when per-file key-Bloom sidecars existed: its
+    manifest carries a ``bloom`` ref per file and the ``key_bloom``
+    props, and the sidecars sit under ``_meta/blooms``.  Every sidecar
+    here claims NO key (all-zero words), so any code still probing one
+    would carry a file the batch must rewrite and duplicate its row.
+    Read, point lookups, a merge and a compaction must equal a plain
+    twin's; the merge's head drops the refs; vacuum deletes the
+    sidecars."""
+    import json
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    twin = _kv_table(tmp_table_dir, "twin")
+    twin.merge(_kv_batch(spark, 0, 400, 1))
+    twin.merge(_kv_batch(spark, 400, 800, 2))
+    shutil.copytree(twin.path, os.path.join(tmp_table_dir, "legacy"))
+    legacy = LakeTable.load(os.path.join(tmp_table_dir, "legacy"))
+    head = legacy.snapshot()
+    version = head["version"] + 1
+    os.makedirs(os.path.join(legacy.path, "_meta", "blooms"))
+    files = []
+    for i, f in enumerate(head["files"]):
+        ref = os.path.join("_meta", "blooms", f"v{version:08d}-{i:016x}.bloom.parquet")
+        pq.write_table(
+            pa.table({
+                "m": pa.array([256], pa.int64()),
+                "k": pa.array([8], pa.int32()),
+                "words": pa.array([[0, 0, 0, 0]], pa.list_(pa.int64())),
+            }),
+            os.path.join(legacy.path, ref),
+        )
+        files.append({**f, "bloom": {"ref": ref, "m": 256, "k": 8}})
+    with open(legacy._snap_path(version), "w") as fh:
+        json.dump(
+            {
+                **head,
+                "version": version,
+                "parent": head["version"],
+                "files": files,
+                "props": {"key_bloom": "true", "key_bloom_max_probe_mb": 512},
+                "operation": "compact",
+                "summary": {},
+            },
+            fh,
+        )
+
+    def same(read):
+        assert sorted(read(legacy).collect()) == sorted(read(twin).collect())
+
+    keys = ["k000010", "k000100", "k000700", "k0001505", "k999999"]
+    same(lambda t: t.read(spark))
+    same(lambda t: t.read_keys(spark, keys))
+    # updates of held keys plus an insert inside a file's key range
+    batch = spark.createDataFrame(
+        [("k000100", -1, "upsert", 3), ("k000700", -7, "upsert", 3), ("k0001505", 5, "upsert", 3)],
+        "k string, v long, op string, lsn long",
+    )
+    pick = ("inserted", "updated", "rewritten_files", "carried_files")
+    st_legacy, st_twin = legacy.merge(batch), twin.merge(batch)
+    assert [st_legacy[k] for k in pick] == [st_twin[k] for k in pick]
+    assert st_legacy["updated"] == 2 and st_legacy["inserted"] == 1
+    assert not any("bloom" in f for f in legacy.snapshot()["files"])
+    same(lambda t: t.read(spark))
+    same(lambda t: t.read_keys(spark, keys))
+    for t in (legacy, twin):
+        t.compact(spark)
+    same(lambda t: t.read(spark))
+    legacy.vacuum(keep_versions=1, min_age_seconds=0)
+    assert os.listdir(os.path.join(legacy.path, "_meta", "blooms")) == []
+    same(lambda t: t.read(spark))
+    same(lambda t: t.read_keys(spark, keys))

@@ -23,6 +23,8 @@ from horizon_etl_spark.cdc import schema as S
 from horizon_etl_spark.cdc.attrs import attr_lww_reduce
 from horizon_etl_spark.tables.lake import FileEntry, LakeTable, bucket_expr
 
+from conftest import plans_since, sql_clock_ms
+
 WHOLE_ROW = StructType(
     [
         StructField("doc_id", StringType(), False),
@@ -106,21 +108,6 @@ def _final_plan_nodes(plan: str) -> list[str]:
     return nodes
 
 
-def _write_plans(spark, out_prefix: str) -> list[str]:
-    """Executed plans of the retained SQL executions that mention
-    ``out_prefix`` (a fresh commit directory: only its write does)."""
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    store = spark._jsparkSession.sharedState().statusStore()
-    execs = store.executionsList()
-    plans = []
-    for i in range(execs.size()):
-        e = execs.apply(i)
-        plan = e.physicalPlanDescription()
-        if out_prefix in plan:
-            plans.append(plan)
-    return plans
-
-
 @pytest.mark.parametrize("with_log", [False, True], ids=["log_off", "log_on"])
 @pytest.mark.parametrize("mode", ["whole_row", "attr"])
 def test_merge_write_is_one_shuffle_one_sorted_file_per_bucket(
@@ -154,6 +141,7 @@ def test_merge_write_is_one_shuffle_one_sorted_file_per_bucket(
         batch = _row_batch(spark, [("update", k, 2, -1, "y") for k in batch_keys])
     before = {f["path"] for f in table.snapshot()["files"]}
 
+    since = sql_clock_ms(spark)
     stats = _merge(table, mode, batch, sink, batch_id=1)
 
     snap = table.snapshot()
@@ -167,8 +155,9 @@ def test_merge_write_is_one_shuffle_one_sorted_file_per_bucket(
         assert (f.min_key, f.max_key) == (ks[0], ks[-1])
         assert {bucket_of[k] for k in ks} == {f.bucket}
 
+    # the merge's fresh commit directory: only its write mentions it
     out_prefix = os.path.join(table.path, "data", f"commit-{snap['version']:08d}-")
-    plans = _write_plans(spark, out_prefix)
+    plans = plans_since(spark, since, out_prefix)
     assert len(plans) == 1
     nodes = _final_plan_nodes(plans[0])
     assert len([n for n in nodes if n.startswith("Exchange")]) == 1, nodes

@@ -207,15 +207,13 @@ def _asserts_n_tok(e):
     return e["op"] != "delete" and (e["fields"] is None or "n_tok" in e["fields"])
 
 
-@pytest.mark.parametrize("mode", ["whole_row", "attr", "key_bloom"])
+@pytest.mark.parametrize("mode", ["whole_row", "attr"])
 def test_bucket_metrics_equal_batch_recompute(spark, tmp_table_dir, mode):
     """Every (batch_id, bucket_id) metrics row equals a recomputation
     from the batch's own events: events in, distinct keys, hottest-key
     events and winner bytes (n_tok of the key's LWW winner — the latest
     event in whole-row mode, the latest event asserting n_tok in
-    per-attribute mode).  On a key_bloom target, range-split into
-    several bloomed files per bucket, the later batches run the
-    bloom-probe path, whose join repeats batch rows per sidecar."""
+    per-attribute mode)."""
     nb, num_batches = 4, 3
     feed = change_feed(spark, 1_200, 150, seed=5, num_batches=num_batches, max_len=8)
     if mode == "attr":
@@ -229,17 +227,9 @@ def test_bucket_metrics_equal_batch_recompute(spark, tmp_table_dir, mode):
     pipe = CdcPipeline.create(
         os.path.join(tmp_table_dir, "p"), bucket_count=nb, attr_lww=mode == "attr"
     )
-    if mode == "key_bloom":
-        pipe.target.set_props({"key_bloom": "true"})
     for b in range(num_batches):
         run = apply_batch(pipe, feed.filter(F.col("batch") == b), batch_id=b)
         assert run["quarantined"] == 0
-        if mode == "key_bloom" and b == 0:
-            # several bloomed files per bucket, so the probe join repeats
-            # each later batch row once per sidecar
-            pipe.target.compact(
-                spark, cluster_by_key=True, target_file_rows=10, drop_tombstones=False
-            )
     # the merge batch carries the metrics' per-key event counts; they
     # must never reach the target's schema
     assert "_key_events" not in pipe.target.read(spark).columns

@@ -245,24 +245,6 @@ def main() -> int:
     bench.log(f"rebucket10x: {rb}")
     shutil.rmtree(root, ignore_errors=True)
 
-    # --- key-bloom pruning at a size where rows/file is real (~2k rows
-    # per stratum file, ~16k rows per bucket): the update/insert trickle
-    # write-amplification gap vs range-only pruning, same protocol as
-    # bench.py's bloom section at 50x its keys
-    bloom = bench.run_bloom_bench(spark, 500_000, trickle_keys=64)
-    bench.log(f"bloom10x: {bloom}")
-
-    # --- the same trickle at 10x the FILE count (strata=80 → 2,560
-    # files across 32 buckets vs the 256 every prior bloom number used):
-    # the un-compacted-backlog shape, where the probe must broadcast 10x
-    # the sidecar words (exercising the key_bloom_max_probe_mb budget)
-    # and range pruning's false-overlap tax multiplies with every extra
-    # file a bucket span carries
-    bloom_files = bench.run_bloom_bench(
-        spark, 250_000, strata=80, trickle_keys=64
-    )
-    bench.log(f"bloom10x_files: {bloom_files}")
-
     # --- replica catch-up at 10x the sf0.1 section's events (2M attr
     # events across a 6-delta outbox backlog): the O(1)-Spark-jobs
     # consumer claim re-measured where the merge is bandwidth-real
@@ -282,8 +264,6 @@ def main() -> int:
     sections = {
         "cdc10x": cdc,
         "rebucket10x": rb,
-        "bloom10x": bloom,
-        "bloom10x_files": bloom_files,
         "replica10x": replica,
         "cluster10x": cluster,
         "graph10x": graph,
