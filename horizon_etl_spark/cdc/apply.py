@@ -31,7 +31,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from horizon_etl_spark.cdc import schema as S
-from horizon_etl_spark.cdc.lww import lww_reduce, lww_reduce_salted
+from horizon_etl_spark.cdc.lww import lww_reduce
 from horizon_etl_spark.tables.lake import (
     BUCKET_COL,
     KEY_EVENTS_COL,
@@ -105,7 +105,7 @@ def _now():
     return datetime.now(timezone.utc).replace(tzinfo=None)
 
 
-HOT_KEY_SHARE_THRESHOLD = 0.05  # hottest key > 5% of batch events → salt
+HOT_KEY_SHARE_THRESHOLD = 0.05  # hottest key > 5% of batch events → unplaced reduce
 
 # Tables covered by coordinated pipeline rollback.  ``runs`` is the
 # audit log and is deliberately NOT rolled back (rollbacks must stay
@@ -118,35 +118,25 @@ def apply_batch(
     pipe: CdcPipeline,
     batch: DataFrame,
     batch_id: int,
-    salted_lww: bool | str = False,
-    salt_buckets: int = 32,
     collect_metrics: bool = True,
     with_change_log: bool = True,
     with_rollup: bool = False,
-    persist_source: bool = False,
     whitelist: tuple[str, ...] | None = None,
     vocab_size: int | None = None,
 ) -> dict[str, Any]:
     """Apply one micro-batch of change events; returns the run stats row.
 
-    ``salted_lww``: False (plain max_by), True (explicit two-phase
-    salted reduction), or ``"auto"`` — salt when the batch is predicted
-    skewed: the PREVIOUS batch's hottest-key event share (which rides
-    the LWW shuffle for free) exceeded ``HOT_KEY_SHARE_THRESHOLD``, or
-    the feed's plan is already hash-partitioned on the key.  Change
-    feeds have temporal locality, so last batch's skew is the best
-    available predictor (requires ``collect_metrics``; a first batch
-    with no such plan runs plain).  The same prediction chooses the
-    plain reduce's shape: a batch predicted not skewed is placed by
-    target bucket before its reduce (one shuffle fewer in the merge's
-    summary); a skewed one keeps the unplaced reduce, whose partial
-    aggregation combines a hot key's events map-side.
-
-    ``persist_source``: cache the decoded+tagged batch.  Clean feeds
-    make exactly one pass either way (the quarantine scan only runs
-    when bad rows exist); caching pays off for expensive decodes
-    (JSON/Avro WAL tails) on DIRTY feeds, where it saves the second
-    decode of the quarantine pass.
+    The LWW reduce's shape is chosen per batch, with no option: a batch
+    predicted not skewed is placed by target bucket before its reduce
+    (one shuffle fewer in the merge's summary); a batch predicted
+    skewed keeps the unplaced reduce, whose partial aggregation
+    combines a hot key's events map-side.  Skewed means the PREVIOUS
+    batch's hottest-key event share (which rides the LWW shuffle for
+    free) exceeded ``HOT_KEY_SHARE_THRESHOLD`` — change feeds have
+    temporal locality, so last batch's skew is the best available
+    predictor (requires ``collect_metrics``) — or the feed's plan is
+    already hash-partitioned on the key.  The run row's notes say
+    ``placed=``.
 
     Per-attribute mode is inferred from the target table: an
     ``attr_lww`` target routes the batch through ``attr_lww_reduce`` →
@@ -166,15 +156,15 @@ def apply_batch(
         batch = batch.drop("batch")
 
     # Bandwidth-lean plan: ONE full pass over the raw batch on the
-    # clean-feed fast path (whole-batch caching only when the decode is
-    # the dominant cost, see ``persist_source``):
+    # clean-feed fast path:
     #   pass 1: LWW reduction materialized into the persisted
     #           `winners` (≤1 small row per key); input/valid counts
     #           ride the SAME job via an Observation placed below the
     #           validity filter, and per-key event counts for the skew
     #           metrics ride the same shuffle (`with_counts`).  Unless
-    #           salted, the valid events are placed by target bucket
-    #           first (`place_by_bucket`) and reduced per (bucket, key):
+    #           predicted skewed, the valid events are placed by target
+    #           bucket first (`place_by_bucket`) and reduced per
+    #           (bucket, key):
     #           the winners keep that placement, so the merge's
     #           per-bucket summary starts no shuffle of its own
     #   pass 2: quarantine write — ONLY when the observed counts say
@@ -188,8 +178,6 @@ def apply_batch(
         vocab_size,
     )
     tagged, counts = _tag_and_count(batch, reason, f"apply_batch_{batch_id}")
-    if persist_source:
-        tagged = tagged.persist()
     winners = None
     stats: dict[str, Any] | None = None
     try:
@@ -197,37 +185,26 @@ def apply_batch(
         # (doc_id, lsn) rows are byte-identical, so max_by keeps exactly
         # one; cross-batch dups are killed by the merge lsn-guard.
         valid = tagged.filter(F.col("_reason").isNull()).drop("_reason", "ts")
-        # skew predictors, both free of Spark jobs: the metrics one
-        # (temporal locality: last batch's hot-key share) OR'd with the
-        # PLAN-level one, so the FIRST batch of a key-partitioned feed
-        # is already caught — the metrics signal needs one skewed batch
-        # to exist first
-        skewed = _last_batch_was_skewed(pipe) or _feed_defeats_partial_agg(valid)
-        if salted_lww == "auto":
-            salted_lww = skewed
         # the bucket placement runs before the reduce, so it ships every
         # raw event of a hot key to one task with no map-side combine:
-        # a skewed feed keeps the unplaced reduce (whose partial
-        # aggregation does combine, or which the existing key
+        # a batch predicted skewed keeps the unplaced reduce (whose
+        # partial aggregation does combine, or which the existing key
         # partitioning already serves), and the merge tags its winners
-        # with the bucket instead, as it does for the salted reductions
-        placed = not (salted_lww or skewed)
+        # with the bucket instead.  Both predictors are free of Spark
+        # jobs: the metrics one (temporal locality: last batch's
+        # hot-key share) OR'd with the PLAN-level one, so the FIRST
+        # batch of a key-partitioned feed is already caught — the
+        # metrics signal needs one skewed batch to exist first
+        placed = not (_last_batch_was_skewed(pipe) or _feed_defeats_partial_agg(valid))
         if placed:
             valid = place_by_bucket(valid, target_snap["bucket_count"], "doc_id")
         if attr_mode:
-            from horizon_etl_spark.cdc.attrs import (
-                attr_lww_reduce,
-                attr_lww_reduce_salted,
-            )
+            from horizon_etl_spark.cdc.attrs import attr_lww_reduce
 
-            reducer = attr_lww_reduce_salted if salted_lww else attr_lww_reduce
-            kwargs = {"salt_buckets": salt_buckets} if salted_lww else {}
-            winners = reducer(valid, with_counts=True, **kwargs).persist()
+            winners = attr_lww_reduce(valid, with_counts=True).persist()
         else:
-            reducer = lww_reduce_salted if salted_lww else lww_reduce
-            kwargs = {"salt_buckets": salt_buckets} if salted_lww else {}
-            winners = reducer(
-                valid, key="doc_id", order="lsn", with_counts=True, **kwargs
+            winners = lww_reduce(
+                valid, key="doc_id", order="lsn", with_counts=True
             ).persist()
 
         # No explicit materialize: the FIRST downstream action over the
@@ -308,8 +285,7 @@ def apply_batch(
             "notes": (
                 f"v{stats['version']} ins={stats['inserted']} upd={stats['updated']} "
                 f"del={stats['deleted']} rewrote={stats['rewritten_files']} "
-                f"carried={stats['carried_files']} salted={bool(salted_lww)} "
-                f"placed={placed}"
+                f"carried={stats['carried_files']} placed={placed}"
             ),
             # per-table snapshot anchor for rollback_to_batch (cheap:
             # driver-side directory listings, no data scan)
@@ -343,8 +319,6 @@ def apply_batch(
             pass
         raise
     finally:
-        if persist_source:
-            tagged.unpersist()
         if winners is not None:
             winners.unpersist()
         # merge kept the join cached because WE asked (persist_join):
@@ -468,8 +442,8 @@ def _feed_defeats_partial_agg(df: DataFrame, key: str = "doc_id") -> bool:
         # parse the JVM Partitioning object instead of regexing its
         # string form — a multi-column hashpartitioning does NOT
         # satisfy the agg's single-key distribution (Spark still
-        # inserts the Exchange), so it must not trigger the salted
-        # path; only HashPartitioning over exactly [key] counts.
+        # inserts the Exchange), so it must not keep the batch
+        # unplaced; only HashPartitioning over exactly [key] counts.
         cls = jpart.getClass().getSimpleName()
         if cls == "PartitioningCollection":
             parts = jpart.partitionings()
@@ -625,8 +599,8 @@ def _maintain_rollup(
 def _bucket_metric_aggs() -> dict[str, Column]:
     """Per-partition lineage (north_rule 'per-partition lineage + metrics'):
     per target bucket — events in, distinct keys, hottest-key event
-    count (the skew signal that motivates salted LWW), winner payload
-    bytes.  Aggregates over the already-reduced winners (whose
+    count (the skew signal that keeps the next batch's reduce
+    unplaced), winner payload bytes.  Aggregates over the already-reduced winners (whose
     ``_key_events`` rode the LWW shuffle), evaluated by the merge's one
     per-bucket aggregation — no pass of their own."""
     return {
@@ -723,11 +697,9 @@ def reprocess_quarantine(
 def replay(
     pipe: CdcPipeline,
     feed: DataFrame,
-    salted_lww: bool = False,
     collect_metrics: bool = True,
     with_change_log: bool = True,
     with_rollup: bool = False,
-    persist_source: bool = False,
 ) -> list[dict[str, Any]]:
     """Batch-mode replay of a whole feed, honoring its ``batch`` column
     (feeds without one apply as a single batch 0).  Used by tests and
@@ -735,38 +707,24 @@ def replay(
     uses the same kernel.  (An earlier ``num_batches`` parameter that
     silently DISABLED batch splitting when set was removed — drop the
     ``batch`` column instead to force single-batch apply.)"""
-    results = []
     if "batch" in feed.columns:
         batch_ids = sorted(
             r["batch"] for r in feed.select("batch").distinct().collect()
         )
-        for b in batch_ids:
-            results.append(
-                apply_batch(
-                    pipe,
-                    feed.filter(F.col("batch") == b).drop("batch"),
-                    batch_id=int(b),
-                    salted_lww=salted_lww,
-                    collect_metrics=collect_metrics,
-                    with_change_log=with_change_log,
-                    with_rollup=with_rollup,
-                    persist_source=persist_source,
-                )
-            )
+        batches = [(b, feed.filter(F.col("batch") == b)) for b in batch_ids]
     else:
-        results.append(
-            apply_batch(
-                pipe,
-                feed.drop("batch") if "batch" in feed.columns else feed,
-                batch_id=0,
-                salted_lww=salted_lww,
-                collect_metrics=collect_metrics,
-                with_change_log=with_change_log,
-                with_rollup=with_rollup,
-                persist_source=persist_source,
-            )
+        batches = [(0, feed)]
+    return [
+        apply_batch(
+            pipe,
+            batch,
+            batch_id=int(b),
+            collect_metrics=collect_metrics,
+            with_change_log=with_change_log,
+            with_rollup=with_rollup,
         )
-    return results
+        for b, batch in batches
+    ]
 
 
 # run-row batch_id for the initial snapshot load; real WAL batches are >= 0

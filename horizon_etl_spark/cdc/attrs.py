@@ -28,7 +28,9 @@ Like it, a frame carrying ``_bucket`` groups by ``(_bucket, key)``:
 ``apply_batch`` places a batch it predicts not skewed by bucket
 first, so the partial aggregation runs after that placement and a
 hot key's raw events would cross the shuffle; a batch predicted
-skewed keeps the unplaced reduce.
+skewed keeps the unplaced reduce.  It is the only attr reducer: max_by
+over assertion lsns and max over delete watermarks already combine
+map-side, so no salted two-phase variant is needed.
 Cross-batch state lives in the attr-LWW table's per-column assertion
 lsns + per-row delete watermark
 (:meth:`horizon_etl_spark.tables.lake.LakeTable.merge_attrs`).
@@ -50,7 +52,6 @@ def attr_lww_reduce(
     op_col: str = "op",
     delete_op: str = "delete",
     with_counts: bool = False,
-    _salt_col: str | None = None,
 ) -> DataFrame:
     """Collapse one batch to one row per key with per-attribute winners.
 
@@ -91,67 +92,9 @@ def attr_lww_reduce(
     if with_counts:
         aggs.append(F.count(F.lit(1)).alias("_key_events"))
     placed = [BUCKET_COL] if BUCKET_COL in df.columns else []
-    out = df.groupBy(*placed, key, *([_salt_col] if _salt_col else [])).agg(*aggs)
+    out = df.groupBy(*placed, key).agg(*aggs)
     return out.select(
         *placed,
-        key,
-        *[F.col(f"_w_{c}.v").alias(c) for c in payload_cols],
-        *[F.col(f"_w_{c}.l").alias(alsn_col(c)) for c in payload_cols],
-        DEL_LSN_COL,
-        *(["_key_events"] if with_counts else []),
-    )
-
-
-def attr_lww_reduce_salted(
-    df: DataFrame,
-    key: str = "doc_id",
-    order: str = "lsn",
-    payload_cols: list[str] | None = None,
-    fields_col: str = "fields",
-    op_col: str = "op",
-    delete_op: str = "delete",
-    salt_buckets: int = 32,
-    with_counts: bool = False,
-) -> DataFrame:
-    """Explicit two-phase salted variant of :func:`attr_lww_reduce` —
-    the attr-mode twin of ``lww_reduce_salted`` (SURVEY.md §4), for
-    plans where Catalyst's partial aggregation is defeated (a feed
-    already hash-partitioned on the key).  Phase 1 reduces
-    (key, salt) groups; phase 2 combines the ≤``salt_buckets``
-    per-attribute partials per key — max_by over assertion lsns and
-    max over delete watermarks are associative+commutative, so the
-    two-phase result is identical to the one-phase reduction (tested
-    equivalent on random feeds).  Salt derives from the order column
-    (pure function of the data → deterministic, resume-safe)."""
-    reserved = {key, order, fields_col, op_col, "ts", "batch", BUCKET_COL}
-    payload_cols = payload_cols or [c for c in df.columns if c not in reserved]
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(order)), F.lit(salt_buckets))
-    )
-    p1 = attr_lww_reduce(
-        salted,
-        key=key,
-        order=order,
-        payload_cols=payload_cols,
-        fields_col=fields_col,
-        op_col=op_col,
-        delete_op=delete_op,
-        with_counts=with_counts,
-        _salt_col="_salt",
-    )
-    aggs = []
-    for c in payload_cols:
-        aggs.append(
-            F.max_by(
-                F.struct(F.col(alsn_col(c)).alias("l"), F.col(c).alias("v")),
-                F.col(alsn_col(c)),
-            ).alias(f"_w_{c}")
-        )
-    aggs.append(F.max(DEL_LSN_COL).alias(DEL_LSN_COL))
-    if with_counts:
-        aggs.append(F.sum("_key_events").cast("long").alias("_key_events"))
-    out = p1.groupBy(key).agg(*aggs)
-    return out.select(
         key,
         *[F.col(f"_w_{c}.v").alias(c) for c in payload_cols],
         *[F.col(f"_w_{c}.l").alias(alsn_col(c)) for c in payload_cols],

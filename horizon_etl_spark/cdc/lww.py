@@ -25,15 +25,13 @@ skewed by bucket first (``tables.lake.place_by_bucket``), so the
 reduce needs no shuffle of its own and the winners stay placed for
 the merge's per-bucket summary.  The partial aggregation then runs
 *after* that placement: every raw event of a hot key crosses the
-shuffle to one task, so a batch predicted skewed (see
-``apply_batch``'s ``salted_lww``) keeps the unplaced ``groupBy(key)``
-and its map-side combine.
-
-``lww_reduce_salted`` is the explicit two-phase variant
-(groupBy(key, salt) → groupBy(key)) kept for (a) demonstrating the
-strategy the north_rule names, (b) engines/plans where partial agg is
-defeated (e.g. after an exchange already hash-partitioned the feed by
-key).  Both are tested equivalent; bench.py measures both.
+shuffle to one task, so a batch predicted skewed keeps the unplaced
+``groupBy(key)`` and its map-side combine.  A feed already
+hash-partitioned on the key is predicted skewed too: its own
+partitioning serves the unplaced reduce, so no raw event is shuffled
+twice.  An explicit two-phase ``(key, salt)`` reduce would not help
+there: the key partitioning already satisfies that grouping, so every
+event of a hot key stays in one task (BENCH.md "Hot-key skew").
 
 A window (`row_number() over (partition by key order by lsn desc)`)
 would sort every partition and ship *all* rows of a hot key to one
@@ -77,43 +75,3 @@ def lww_reduce(
     cols = [*grouping, "_w.*"] + (["_key_events"] if with_counts else [])
     return out.select(*cols)
 
-
-def lww_reduce_salted(
-    df: DataFrame,
-    key: str = "doc_id",
-    order: str = "lsn",
-    salt_buckets: int = 32,
-    with_counts: bool = False,
-) -> DataFrame:
-    """Explicit two-phase salted LWW (SURVEY.md §4 'salted two-phase LWW').
-
-    Phase 1 reduces (key, salt) groups — hot keys are split across
-    ``salt_buckets`` reducers; phase 2 reduces the ≤salt_buckets
-    survivors per key.  Salt is derived from the order column (pure
-    function of the data → deterministic, resume-safe).
-    """
-    others = [c for c in df.columns if c != key]
-    payload = F.struct(*[F.col(c) for c in others])
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(order)), F.lit(salt_buckets))
-    )
-    aggs = [F.max_by(payload, F.col(order)).alias("_w")]
-    if with_counts:
-        aggs.append(F.count(F.lit(1)).alias("_part_events"))
-    phase1 = (
-        salted.groupBy(key, "_salt")
-        .agg(*aggs)
-        .select(key, F.col("_w.*"), *(["_part_events"] if with_counts else []))
-    )
-    if not with_counts:
-        return lww_reduce(phase1, key=key, order=order)
-    others2 = [c for c in phase1.columns if c not in (key, "_part_events")]
-    payload2 = F.struct(*[F.col(c) for c in others2])
-    return (
-        phase1.groupBy(key)
-        .agg(
-            F.max_by(payload2, F.col(order)).alias("_w"),
-            F.sum("_part_events").alias("_key_events"),
-        )
-        .select(key, "_w.*", "_key_events")
-    )

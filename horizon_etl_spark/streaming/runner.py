@@ -29,10 +29,8 @@ def run_stream(
     checkpoint_dir: str,
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
-    salted_lww: bool | str = False,
     collect_metrics: bool = True,
     with_rollup: bool = False,
-    persist_source: bool = False,
     feed_format: str = "parquet",
     feed_schema=None,
     batch_hook=None,
@@ -105,10 +103,8 @@ def run_stream(
             pipe,
             df,
             batch_id=batch_id,
-            salted_lww=salted_lww,
             collect_metrics=collect_metrics,
             with_rollup=with_rollup,
-            persist_source=persist_source,
             vocab_size=vocab_size,
         )
 

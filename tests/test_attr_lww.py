@@ -163,33 +163,6 @@ def test_random_feed_any_batching_converges(spark, tmp_table_dir):
         assert_matches_oracle(t, spark, rows)
 
 
-def test_salted_attr_reduce_equivalent(spark):
-    """The two-phase salted attr reduction must be bit-identical to the
-    one-phase reduction on any feed (associative+commutative partials),
-    including the _key_events counts — same contract as
-    lww_reduce_salted vs lww_reduce."""
-    from horizon_etl_spark.cdc.attrs import attr_lww_reduce_salted
-
-    rng = random.Random(55)
-    rows = []
-    for lsn in range(1, 250):
-        # hot key: half of all events hit d0 (the salting target)
-        k = "d0" if rng.random() < 0.5 else f"d{rng.randrange(1, 12)}"
-        r = rng.random()
-        if r < 0.12:
-            rows.append(("delete", k, lsn, None, None, None))
-        else:
-            fields = None if r < 0.4 else ["score"] if r < 0.7 else ["label"]
-            rows.append(("update", k, lsn, rng.randrange(100), f"v{lsn}", fields))
-    df = feed_df(spark, rows)
-    plain = attr_lww_reduce(df, with_counts=True)
-    salted = attr_lww_reduce_salted(df, salt_buckets=8, with_counts=True)
-    assert sorted(plain.columns) == sorted(salted.columns)
-    p = sorted(map(str, plain.select(*sorted(plain.columns)).collect()))
-    s = sorted(map(str, salted.select(*sorted(plain.columns)).collect()))
-    assert p == s
-
-
 def test_attr_mode_stream_end_to_end(spark, tmp_table_dir):
     """Full ingest path in attr mode: partial-update events streamed as
     file drops through run_stream → validate/quarantine → attr reduce →
@@ -401,12 +374,7 @@ def test_attr_pipeline_rollup_and_change_log(spark, tmp_table_dir):
         feed_schema,
     )
     apply_batch(pipe, b0, batch_id=0, with_rollup=True, collect_metrics=False)
-    # second batch through the SALTED attr reducer — exercises the
-    # apply_batch dispatch; result must be identical to plain
-    apply_batch(
-        pipe, b1, batch_id=1, with_rollup=True, collect_metrics=False,
-        salted_lww=True, salt_buckets=4,
-    )
+    apply_batch(pipe, b1, batch_id=1, with_rollup=True, collect_metrics=False)
 
     def recomputed():
         return {

@@ -3,7 +3,7 @@
 from pyspark.sql import functions as F
 
 from horizon_etl_spark.cdc.generator import change_feed, corrupt_feed
-from horizon_etl_spark.cdc.lww import lww_reduce, lww_reduce_salted
+from horizon_etl_spark.cdc.lww import lww_reduce
 from horizon_etl_spark.cdc.validate import split_valid
 
 
@@ -42,11 +42,9 @@ def test_split_valid_reasons(spark):
     assert nd.filter(~F.col("source").isin("books", "code", "crawl", "wiki")).count() == 0
 
 
-def test_lww_plain_equals_salted_equals_window(spark):
+def test_lww_plain_equals_window(spark):
     feed = change_feed(spark, 3000, 60, seed=7).drop("batch", "ts")
     a = lww_reduce(feed).orderBy("doc_id")
-    b = lww_reduce_salted(feed, salt_buckets=8).orderBy("doc_id")
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
     # window-based oracle
     from pyspark.sql.window import Window
 
@@ -68,15 +66,16 @@ def test_lww_collapses_duplicates(spark):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
-def test_auto_salting_reacts_to_skew(spark, tmp_path):
-    """salted_lww='auto': batch 0 runs plain (no metrics yet); after a
-    heavily skewed batch, the next batch salts; after a uniform batch,
-    it returns to plain."""
+def test_placement_reacts_to_skew(spark, tmp_path):
+    """Batch 0 is placed by bucket (no metrics yet); after a heavily
+    skewed batch, the next batch keeps the unplaced reduce; after a
+    uniform batch, it is placed again.  State equals the oracle."""
     from horizon_etl_spark.cdc.apply import CdcPipeline, apply_batch
+    from horizon_etl_spark.cdc.oracle import assert_frames_equal, expected_final
 
     pipe = CdcPipeline.create(str(tmp_path / "p"), bucket_count=4)
     hot = change_feed(spark, 3000, 50, seed=3, zipf_s=2.0, num_batches=1,
-                      min_len=2, max_len=8, dup_frac=0.0)
+                      min_len=2, max_len=8, dup_frac=0.0).drop("batch")
     # truly uniform: every event its own key (hot share = 1/N)
     uniform = (
         spark.range(0, 3000)
@@ -90,24 +89,31 @@ def test_auto_salting_reacts_to_skew(spark, tmp_path):
             F.lit(None).cast("timestamp").alias("ts"),
         )
     )
+    batches = [
+        hot,
+        uniform.withColumn("lsn", F.col("lsn") + 10_000),
+        hot.withColumn("lsn", F.col("lsn") + 20_000),
+    ]
 
-    r0 = apply_batch(pipe, hot, batch_id=0, salted_lww="auto")
-    assert "salted=False" in r0["notes"]  # no metrics before the first batch
-    r1 = apply_batch(pipe, uniform.withColumn("lsn", F.col("lsn") + 10_000),
-                     batch_id=1, salted_lww="auto")
-    assert "salted=True" in r1["notes"]  # previous batch was skewed
-    r2 = apply_batch(pipe, hot.withColumn("lsn", F.col("lsn") + 20_000),
-                     batch_id=2, salted_lww="auto")
-    assert "salted=False" in r2["notes"]  # previous batch was uniform
+    r0 = apply_batch(pipe, batches[0], batch_id=0)
+    assert "placed=True" in r0["notes"]  # no metrics before the first batch
+    r1 = apply_batch(pipe, batches[1], batch_id=1)
+    assert "placed=False" in r1["notes"]  # previous batch was skewed
+    r2 = apply_batch(pipe, batches[2], batch_id=2)
+    assert "placed=True" in r2["notes"]  # previous batch was uniform
+
+    feed = batches[0].unionByName(batches[1]).unionByName(batches[2])
+    assert_frames_equal(pipe.target.read(spark), expected_final(feed))
 
 
-def test_auto_salting_plan_detector_fires_on_batch_zero(spark, tmp_path):
+def test_placement_plan_detector_fires_on_batch_zero(spark, tmp_path):
     """PLAN-level skew predictor: a feed whose lineage is already
     hash-partitioned on the key defeats pre-shuffle partial aggregation
-    (the measured 2.7× degradation case) — with salted_lww='auto' the
-    FIRST batch must salt, before any metrics history exists.  A
+    (the measured 2.7× degradation case), and the bucket placement
+    would shuffle its raw events a second time — so the FIRST batch
+    must stay unplaced, before any metrics history exists.  A
     multi-column partitioning does NOT satisfy the agg distribution and
-    must stay plain; result state is identical either way."""
+    is placed; result state is identical either way."""
     from horizon_etl_spark.cdc.apply import CdcPipeline, apply_batch
     from horizon_etl_spark.cdc.oracle import expected_final
 
@@ -115,14 +121,12 @@ def test_auto_salting_plan_detector_fires_on_batch_zero(spark, tmp_path):
                        min_len=2, max_len=8, dup_frac=0.0)
 
     pipe_a = CdcPipeline.create(str(tmp_path / "a"), bucket_count=4)
-    r0 = apply_batch(pipe_a, feed.repartition("doc_id"), batch_id=0,
-                     salted_lww="auto")
-    assert "salted=True" in r0["notes"]  # plan detector, batch 0
+    r0 = apply_batch(pipe_a, feed.repartition("doc_id"), batch_id=0)
+    assert "placed=False" in r0["notes"]  # plan detector, batch 0
 
     pipe_b = CdcPipeline.create(str(tmp_path / "b"), bucket_count=4)
-    r1 = apply_batch(pipe_b, feed.repartition("doc_id", "lsn"), batch_id=0,
-                     salted_lww="auto")
-    assert "salted=False" in r1["notes"]  # multi-col partitioning: plain
+    r1 = apply_batch(pipe_b, feed.repartition("doc_id", "lsn"), batch_id=0)
+    assert "placed=True" in r1["notes"]  # multi-col partitioning: placed
 
     oracle = expected_final(feed)
     for pipe in (pipe_a, pipe_b):

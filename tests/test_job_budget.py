@@ -202,7 +202,7 @@ def test_skewed_batch_keeps_unplaced_reduce(spark, tmp_path, staged_feed):
     j0 = _next_job_id(spark)
     run = apply_batch(pipe, b1, batch_id=1, with_change_log=False)
     jobs = _next_job_id(spark) - j0
-    assert "salted=False placed=False" in run["notes"]
+    assert "placed=False" in run["notes"]
     assert jobs == JOB_BUDGET[("whole_row", False)] + 1, f"skewed batch started {jobs} Spark jobs"
     nodes = _summary_nodes_above_cache(spark, since)
     assert [n for n in nodes if n.startswith(("Exchange", "ShuffleQueryStage"))], nodes

@@ -5,7 +5,6 @@ Final state must be identical (token-array equality) after:
   (b) K-batch incremental with cross-batch duplicate re-delivery,
   (c) K-batch with a whole batch re-applied (crash/retry simulation),
   (d) batches applied OUT of order,
-  (e) salted-LWW variant,
 and counts must reconcile input == applied-side + deduped + quarantined.
 """
 
@@ -71,13 +70,6 @@ def test_out_of_order_batches_converge(spark, tmp_table_dir):
     pipe = CdcPipeline.create(os.path.join(tmp_table_dir, "p"), bucket_count=8)
     for b in (2, 0, 3, 1):  # adversarial batch order
         apply_batch(pipe, feed.filter(F.col("batch") == b).drop("batch"), b)
-    assert_frames_equal(_final(pipe, spark), expected_final(feed))
-
-
-def test_salted_lww_path_matches(spark, tmp_table_dir):
-    feed = _feed(spark, 2)
-    pipe = CdcPipeline.create(os.path.join(tmp_table_dir, "p"), bucket_count=8)
-    replay(pipe, feed, salted_lww=True)
     assert_frames_equal(_final(pipe, spark), expected_final(feed))
 
 

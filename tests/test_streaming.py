@@ -64,7 +64,7 @@ def test_stream_restart_from_checkpoint(spark, tmp_table_dir):
 
 def test_stream_json_tail_with_rollup(spark, tmp_table_dir):
     """Debezium/WAL-style JSON text tail (feed_format=json) with
-    persist_source caching and incremental rollup maintenance."""
+    incremental rollup maintenance."""
     feed = change_feed(spark, 3000, 150, seed=11, num_batches=3, min_len=4, max_len=32)
     src = os.path.join(tmp_table_dir, "feed")
     for b in sorted(r[0] for r in feed.select("batch").distinct().collect()):
@@ -79,7 +79,6 @@ def test_stream_json_tail_with_rollup(spark, tmp_table_dir):
         os.path.join(tmp_table_dir, "ckpt"),
         max_files_per_trigger=1,
         feed_format="json",
-        persist_source=True,
         with_rollup=True,
     )
     # ts survives the JSON round-trip as a column but values may lose

@@ -110,3 +110,15 @@ def test_spark_submit_pyfiles_bootstrap_and_tail(spark, tmp_path):
     )
     assert out2["target_version"] == before
     assert_frames_equal(CdcPipeline.load(root).target.read(spark), expected_final(feed))
+
+
+def test_job_apply_has_no_plan_knobs():
+    """The LWW reduce's shape is the engine's choice: job_apply takes no
+    salting flag, and argparse rejects the removed ``--salted-lww``."""
+    from tools.job_apply import parse_args
+
+    base = ["--pipeline-root", "p", "--feed", "f", "--checkpoint", "c"]
+    assert parse_args(base).pipeline_root == "p"
+    with pytest.raises(SystemExit) as exc:
+        parse_args(base + ["--salted-lww", "on"])
+    assert exc.value.code == 2

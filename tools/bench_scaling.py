@@ -48,10 +48,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SCRATCH = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
 
 WORKLOADS = {
-    "light": {"events": 8_000_000, "max_len": 64, "persist_source": False},
-    # persist_source off since the single-pass kernel: clean feeds decode
-    # once either way, and the cache write itself is bandwidth-dense
-    "heavy": {"events": 3_000_000, "max_len": 512, "persist_source": False},
+    "light": {"events": 8_000_000, "max_len": 64},
+    "heavy": {"events": 3_000_000, "max_len": 512},
 }
 
 RUN_SNIPPET = r"""
@@ -87,15 +85,13 @@ shutil.rmtree(root, ignore_errors=True)
 
 # warmup: small slice through the full kernel (JIT/codegen/broadcast paths)
 warm = CdcPipeline.create(root + "/warm", bucket_count=32)
-replay(warm, staged.limit(20000), collect_metrics=True, with_change_log=False,
-       persist_source={persist_source})
+replay(warm, staged.limit(20000), collect_metrics=True, with_change_log=False)
 
 results = []
 for trial in range({trials}):
     pipe = CdcPipeline.create(root + f"/t{{trial}}", bucket_count=32)
     t0 = time.time()
-    runs = replay(pipe, staged, collect_metrics=True, with_change_log=False,
-                  persist_source={persist_source})
+    runs = replay(pipe, staged, collect_metrics=True, with_change_log=False)
     dt = time.time() - t0
     n = sum(r["input_rows"] for r in runs)
     results.append({{"apply_sec": round(dt, 2), "events": n, "eps": round(n / dt, 1)}})
@@ -106,10 +102,10 @@ spark.stop()
 """
 
 
-def run_level(execs: int, events: int, max_len: int, persist_source: bool, trials: int):
+def run_level(execs: int, events: int, max_len: int, trials: int):
     code = RUN_SNIPPET.format(
         repo=REPO, execs=execs, events=events, max_len=max_len,
-        persist_source=persist_source, trials=trials, scratch=SCRATCH,
+        trials=trials, scratch=SCRATCH,
     )
     p = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True, timeout=3000
@@ -133,8 +129,8 @@ def main():
     for name in args.workloads.split(","):
         w = WORKLOADS[name]
         print(f"== workload {name}: {w} ==", file=sys.stderr, flush=True)
-        lo = run_level(1, w["events"], w["max_len"], w["persist_source"], args.trials)
-        hi = run_level(4, w["events"], w["max_len"], w["persist_source"], args.trials)
+        lo = run_level(1, w["events"], w["max_len"], args.trials)
+        hi = run_level(4, w["events"], w["max_len"], args.trials)
         t_n = statistics.median(r["apply_sec"] for r in lo)
         t_4n = statistics.median(r["apply_sec"] for r in hi)
         events = lo[0]["events"]
@@ -142,7 +138,6 @@ def main():
         report["workloads"][name] = {
             "events": events,
             "max_len": w["max_len"],
-            "persist_source": w["persist_source"],
             "trials_n": lo,
             "trials_4n": hi,
             "median_sec_n": t_n,

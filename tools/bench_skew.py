@@ -1,7 +1,7 @@
 """Hot-key skew micro-bench: LWW reduction strategies on a heavily
 skewed feed (bounded-zipf s=2.0 → the hottest doc receives a large
 share of all events), demonstrating why the engine's reduction is an
-aggregate and what the salted two-phase variant buys.
+aggregate.
 
 Strategies:
   window  — row_number() over (partition by key order by lsn desc):
@@ -11,13 +11,14 @@ Strategies:
             aggregation collapses each key to ≤1 row per upstream
             partition before the shuffle — skew never reaches a single
             reducer.
-  salted  — explicit two-phase (key, salt) → (key) reduction for plans
-            where partial aggregation is defeated (e.g. the feed
-            arrives already hash-partitioned by key, which Catalyst
-            exploits by skipping the partial phase).
+  plain_prepartitioned — the same reduce over a feed already
+            hash-partitioned by key: the feed's own exchange satisfies
+            the grouping, so the partial phase runs after it and every
+            event of the hot key reaches one task.
 
 Usage: python tools/bench_skew.py [events] [zipf_s]
-Prints one JSON line.
+Prints one JSON line: seconds per strategy and, in ``exchanges``, the
+number of Exchange nodes in each strategy's executed plan.
 """
 
 from __future__ import annotations
@@ -35,13 +36,20 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from horizon_etl_spark.cdc.generator import change_feed
-from horizon_etl_spark.cdc.lww import lww_reduce, lww_reduce_salted
+from horizon_etl_spark.cdc.lww import lww_reduce
 from horizon_etl_spark.session import build_session
 
 
 def window_lww(df, key="doc_id", order="lsn"):
     w = Window.partitionBy(key).orderBy(F.desc(order))
     return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
+
+
+def exchange_count(df) -> int:
+    """Exchange nodes in the executed (pre-adaptive) plan of ``df``."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    nodes = (line.lstrip(" :+-*()0123456789") for line in plan.splitlines())
+    return sum(1 for n in nodes if n.startswith("Exchange"))
 
 
 def main():
@@ -67,19 +75,19 @@ def main():
         "hottest_key_events": hot["count"],
         "hottest_share": round(hot["count"] / events, 3),
         "strategies": {},
+        "exchanges": {},
     }
 
     # pre-partitioned variant: repartition by key first, which lets
-    # Catalyst skip partial aggregation — the case salting exists for
+    # Catalyst skip the pre-shuffle partial aggregation
     pre = df.repartition(16, "doc_id")
 
     for name, fn, src in [
         ("window", window_lww, df),
         ("plain_maxby", lww_reduce, df),
-        ("salted_two_phase", lww_reduce_salted, df),
         ("plain_prepartitioned", lww_reduce, pre),
-        ("salted_prepartitioned", lww_reduce_salted, pre),
     ]:
+        out["exchanges"][name] = exchange_count(fn(src))
         fn(src).write.mode("overwrite").parquet(scratch + "_out")  # warm
         t0 = time.time()
         fn(src).write.mode("overwrite").parquet(scratch + "_out")

@@ -42,12 +42,6 @@ def parse_args(argv):
     ap.add_argument("--bucket-count", type=int, default=16)
     ap.add_argument("--attr-lww", action="store_true")
     ap.add_argument("--with-rollup", action="store_true")
-    ap.add_argument(
-        "--salted-lww",
-        default="auto",
-        choices=["auto", "on", "off"],
-        help="hot-key salting for the LWW reduction (auto = advisory-triggered)",
-    )
     ap.add_argument("--max-files-per-trigger", type=int, default=None)
     ap.add_argument(
         "--vocab-size",
@@ -103,14 +97,12 @@ def main(argv=None) -> int:
             with_rollup=args.with_rollup,
         )
 
-    salted = {"auto": "auto", "on": True, "off": False}[args.salted_lww]
     run_stream(
         spark,
         pipe,
         args.feed,
         args.checkpoint,
         max_files_per_trigger=args.max_files_per_trigger,
-        salted_lww=salted,
         with_rollup=args.with_rollup,
         feed_format=args.feed_format,
         vocab_size=args.vocab_size,
