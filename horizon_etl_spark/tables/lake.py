@@ -122,12 +122,21 @@ def bucket_expr(key_col: str, bucket_count: int):
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(bucket_count)).cast("int")
 
 
+def _check_bucket_count(bucket_count: int) -> None:
+    """A layout needs at least one bucket; bucket -1 is the unbucketed
+    file marker, so a non-positive count would also collide with it."""
+    if bucket_count < 1:
+        raise ValueError(f"bucket_count must be >= 1, got {bucket_count}")
+
+
 def place_by_bucket(df: DataFrame, bucket_count: int, key_col: str | None = None) -> DataFrame:
     """Place rows by bucket: bucket b goes to partition b mod
     min(buckets, shuffle partitions), not to a hash of b, which would
     put 4 of 8 buckets in one of 4 tasks.  Every bucket sits in one
     partition, so a later ``groupBy(BUCKET_COL, ...)`` over the placed
-    rows needs no exchange of its own.  With ``key_col`` the rows are
+    rows needs no exchange of its own, and a write of them produces one
+    file per bucket (this is the placement of every bucketed write
+    except a range-clustered rewrite).  With ``key_col`` the rows are
     first tagged with the key's ``BUCKET_COL``; otherwise they carry it."""
     if key_col is not None:
         df = df.withColumn(BUCKET_COL, bucket_expr(key_col, bucket_count))
@@ -396,6 +405,7 @@ class LakeTable:
         props: dict[str, Any] | None = None,
         attr_lww: bool = False,
     ) -> "LakeTable":
+        _check_bucket_count(bucket_count)
         t = cls(path)
         os.makedirs(t._snap_dir, exist_ok=True)
         os.makedirs(os.path.join(path, "data"), exist_ok=True)
@@ -473,6 +483,34 @@ class LakeTable:
             os.link(tmp, self._snap_path(version))
         finally:
             os.unlink(tmp)
+
+    def _commit_next(
+        self,
+        snap: dict[str, Any],
+        operation: str,
+        summary: dict[str, Any],
+        props: dict[str, Any] | None = None,
+        **fields: Any,
+    ) -> int:
+        """Commit the version after ``snap``: ``snap`` with ``fields``
+        replaced (``files``, ``schema``, ``bucket_count`` ...), ``props``
+        merged into its props, and this commit's ``operation`` and
+        ``summary``.  Every commit after ``create`` goes through here.
+        Returns the new version."""
+        version = snap["version"] + 1
+        self._commit(
+            version,
+            {
+                **snap,
+                **fields,
+                "version": version,
+                "parent": snap["version"],
+                "props": {**snap.get("props", {}), **(props or {})},
+                "operation": operation,
+                "summary": summary,
+            },
+        )
+        return version
 
     # ------------------------------------------------------------------ read
     def _scan(
@@ -610,24 +648,17 @@ class LakeTable:
         ``props`` entries are merged into the snapshot props (e.g. the
         change-log batch high-watermark that makes appends idempotent)."""
         snap = self.snapshot()
-        version = snap["version"] + 1
         schema = StructType.fromJson(snap["schema"])
         df = df.select([F.col(f.name).cast(f.dataType) for f in schema.fields])
-        new_files = self._write_data(df, version, bucketed=False)
+        new_files = self._write_data(df, snap["version"] + 1)
         files = [FileEntry.from_json(f) for f in snap["files"]] + new_files
-        self._commit(
-            version,
-            {
-                **snap,
-                "version": version,
-                "parent": snap["version"],
-                "files": [f.to_json() for f in files],
-                "props": {**snap.get("props", {}), **(props or {})},
-                "operation": operation,
-                "summary": {"appended_files": len(new_files)},
-            },
+        return self._commit_next(
+            snap,
+            operation,
+            {"appended_files": len(new_files)},
+            props,
+            files=[f.to_json() for f in files],
         )
-        return version
 
     def append_rows(
         self,
@@ -682,21 +713,13 @@ class LakeTable:
         rel_path = os.path.join(rel_dir, "part-00000.parquet")
         pq.write_table(table, os.path.join(self.path, rel_path))
         kept = [] if replace else [FileEntry.from_json(f) for f in snap["files"]]
-        self._commit(
-            version,
-            {
-                **snap,
-                "version": version,
-                "parent": snap["version"],
-                "files": [
-                    f.to_json() for f in kept + [FileEntry(rel_path, -1, len(rows), None, None)]
-                ],
-                "props": {**snap.get("props", {}), **(props or {})},
-                "operation": operation,
-                "summary": {} if replace else {"appended_files": 1},
-            },
+        return self._commit_next(
+            snap,
+            operation,
+            {} if replace else {"appended_files": 1},
+            props,
+            files=[f.to_json() for f in kept + [FileEntry(rel_path, -1, len(rows), None, None)]],
         )
-        return version
 
     def read_rows(self) -> list[dict[str, Any]]:
         """Driver-side read of a small unkeyed table (pyarrow, no Spark
@@ -775,22 +798,12 @@ class LakeTable:
                 # null-constraint propagation fold isNotNull filters
                 # to true over pre-evolution rows
                 merged.append(StructField(f.name, f.dataType, True))
-        version = snap["version"] + 1
-        self._commit(
-            version,
-            {
-                **snap,
-                "version": version,
-                "parent": snap["version"],
-                "schema": StructType(merged).jsonValue(),
-                "operation": operation,
-                "summary": {
-                    "added": [f.name for f in merged if f.name not in old_names],
-                    "widened": widened,
-                },
-            },
+        return self._commit_next(
+            snap,
+            operation,
+            {"added": [f.name for f in merged if f.name not in old_names], "widened": widened},
+            schema=StructType(merged).jsonValue(),
         )
-        return version
 
     # ------------------------------------------------------------- rollback
     def rollback(self, to_version: int) -> int:
@@ -813,18 +826,9 @@ class LakeTable:
                 f"(current {snap['version']})"
             )
         target = self.snapshot(to_version)  # raises if expired
-        version = snap["version"] + 1
-        self._commit(
-            version,
-            {
-                **target,
-                "version": version,
-                "parent": snap["version"],
-                "operation": "rollback",
-                "summary": {"to_version": to_version},
-            },
+        return self._commit_next(
+            {**target, "version": snap["version"]}, "rollback", {"to_version": to_version}
         )
-        return version
 
     # --------------------------------------------------- incremental scan
     def read_appends(
@@ -873,94 +877,41 @@ class LakeTable:
         return self._scan(spark, new_files, schema)
 
     # ----------------------------------------------------------------- write
-    def _write_data(
-        self,
-        df: DataFrame,
-        version: int,
-        bucketed: bool,
-        cluster_files: int | None = None,
-        repartition: bool = True,
-    ) -> list[FileEntry]:
-        """Write df to a fresh commit directory; return file entries.
+    def _write_data(self, df: DataFrame, version: int) -> list[FileEntry]:
+        """Write df, exactly as the caller placed it, to a fresh commit
+        directory; return file entries.
 
-        When ``bucketed``, df must carry BUCKET_COL; output is
-        partitioned by it so each file belongs to exactly one bucket,
-        and per-file row counts + min/max key are collected for pruning.
-        It is hash-repartitioned by bucket first, so each bucket is one
-        write task and one file; ``repartition=False`` skips that
-        exchange for a df whose every bucket already sits in exactly one
-        partition (the merge's co-group, placed by bucket id, which
-        Spark cannot match to the hash clustering and would shuffle
-        again).
-
-        ``cluster_files`` (compaction paths only) switches the shuffle
-        to ``repartitionByRange(cluster_files, bucket, key)`` + a
-        within-partition sort — range partitioning on (bucket, key) is
-        lexicographic, so the files it produces INSIDE each bucket hold
-        pairwise-disjoint, key-sorted ranges.  The footer min/max stats
-        below then make ``_prune_for_batch``'s exact range test (each
-        batch key against each file range, so the files BETWEEN two
-        keys carry) isolate ≤1 file per bucket per point key with
-        zero read-side changes —
-        Iceberg's sort-ordered ``rewrite_data_files``
-        expressed as one extra exchange on the O(table) job that
-        compaction already is.  The merge hot path keeps its one
-        bucket exchange: a range exchange there would add a sampling
-        pass per micro-batch for ranges the next merge immediately
-        fragments.
+        A df carrying BUCKET_COL is written partitioned by it, so each
+        file belongs to exactly one bucket, and per-file row counts +
+        min/max key are collected for pruning.  The caller places the
+        rows first: the merge's co-group and :meth:`_rewrite` place them
+        by bucket id (:func:`place_by_bucket`, one write task and one
+        file per bucket), and a clustered rewrite range-splits them.  A
+        df without BUCKET_COL (blind appends) becomes unbucketed files.
         """
         rel_dir = os.path.join("data", f"commit-{version:08d}-{uuid.uuid4().hex[:8]}")
         out_dir = os.path.join(self.path, rel_dir)
-        if bucketed:
-            key = self.key_col
-            if cluster_files:
-                shuffled = df.repartitionByRange(
-                    int(cluster_files), F.col(BUCKET_COL), F.col(key)
-                ).sortWithinPartitions(BUCKET_COL, key)
-            elif repartition:
-                shuffled = df.repartition(F.col(BUCKET_COL))
-            else:
-                shuffled = df
-            (
-                shuffled
-                .write.partitionBy(BUCKET_COL)
-                .mode("error")
-                .parquet(out_dir)
-            )
-            has_data = any(
-                sub.startswith(f"{BUCKET_COL}=") for sub in os.listdir(out_dir)
-            )
-            if not has_data:
-                return []
-            # per-file pruning stats from the PARQUET FOOTERS the write
-            # just produced — driver-side metadata reads, no second
-            # Spark job over the merged plan (the previous per-bucket
-            # groupBy cost a full extra action per merge) and no data
-            # decode.  Same design as Iceberg manifests: the writer
-            # already collected min/max/row-count per file.  Writer-side
-            # truncation of string stats is CONSERVATIVE (min prefix ≤
-            # min, incremented prefix ≥ max), so pruning stays safe;
-            # missing stats degrade to None = never pruned.
-            entries: list[FileEntry] = []
-            for sub in sorted(os.listdir(out_dir)):
-                if not sub.startswith(f"{BUCKET_COL}="):
-                    continue
-                b = int(sub.split("=", 1)[1])
-                for fn in sorted(os.listdir(os.path.join(out_dir, sub))):
-                    if fn.endswith(".parquet"):
-                        rows, mn, mx = _footer_stats(
-                            os.path.join(out_dir, sub, fn), key
-                        )
-                        entries.append(
-                            FileEntry(os.path.join(rel_dir, sub, fn), b, rows, mn, mx)
-                        )
-            return entries
-        df.write.mode("error").parquet(out_dir)
-        entries = []
-        for fn in sorted(os.listdir(out_dir)):
-            if fn.endswith(".parquet"):
-                rows, _, _ = _footer_stats(os.path.join(out_dir, fn), None)
-                entries.append(FileEntry(os.path.join(rel_dir, fn), -1, rows, None, None))
+        bucketed = BUCKET_COL in df.columns
+        (df.write.partitionBy(BUCKET_COL) if bucketed else df.write).mode("error").parquet(out_dir)
+        key = self.key_col if bucketed else None
+        # per-file pruning stats from the PARQUET FOOTERS the write
+        # just produced — driver-side metadata reads, no second
+        # Spark job over the merged plan (the previous per-bucket
+        # groupBy cost a full extra action per merge) and no data
+        # decode.  Same design as Iceberg manifests: the writer
+        # already collected min/max/row-count per file.  Writer-side
+        # truncation of string stats is CONSERVATIVE (min prefix ≤
+        # min, incremented prefix ≥ max), so pruning stays safe;
+        # missing stats degrade to None = never pruned.
+        entries: list[FileEntry] = []
+        for dirpath, _dirs, names in sorted(os.walk(out_dir)):
+            if bucketed == (dirpath == out_dir):
+                continue  # a bucketed write's files sit in its BUCKET_COL=b dirs
+            sub = os.path.relpath(dirpath, self.path)
+            b = int(sub.rsplit("=", 1)[1]) if bucketed else -1
+            for fn in sorted(n for n in names if n.endswith(".parquet")):
+                rows, mn, mx = _footer_stats(os.path.join(dirpath, fn), key)
+                entries.append(FileEntry(os.path.join(sub, fn), b, rows, mn, mx))
         return entries
 
     # ------------------------------------------------- shared merge plumbing
@@ -1286,9 +1237,8 @@ class LakeTable:
         # other side's slot with a typed null.  A key has at most one
         # row per side, so the per-key first-non-null of each slot
         # rebuilds the full-outer join row.  The rows are placed by
-        # bucket id (``place_by_bucket``), so the write skips its own
-        # exchange (Spark would keep it: it does not match a by-id
-        # partitioning to a hash one).  A union does not keep its
+        # bucket id (``place_by_bucket``), which is the placement the
+        # write takes as it is.  A union does not keep its
         # inputs' placement, so an already-placed batch still crosses
         # this exchange once.
         s_cols, t_cols = strategy.projections()
@@ -1327,10 +1277,7 @@ class LakeTable:
             },
         )
         new_files = self._write_data(
-            jo.select(BUCKET_COL, key, *strategy.written_columns()),
-            version,
-            bucketed=True,
-            repartition=False,
+            jo.select(BUCKET_COL, key, *strategy.written_columns()), version
         )
         files = carry_files + new_files
 
@@ -1372,17 +1319,7 @@ class LakeTable:
             "carried_files": len(carry_files),
         }
         self._bucket_policy_advice(snap, files, summary)
-        self._commit(
-            version,
-            {
-                **snap,
-                "version": version,
-                "parent": snap["version"],
-                "files": [f.to_json() for f in files],
-                "operation": strategy.operation,
-                "summary": summary,
-            },
-        )
+        self._commit_next(snap, strategy.operation, summary, files=[f.to_json() for f in files])
         return {
             "version": version,
             "inserted": stats["inserted"],
@@ -1406,47 +1343,15 @@ class LakeTable:
         df: DataFrame,
         operation: str = "overwrite",
         props: dict[str, Any] | None = None,
-        cluster_files: int | None = None,
     ) -> int:
-        """Replace all data (used by compaction and bulk loads).
+        """Replace all data with ``df`` (bulk loads, bootstrap) through
+        :meth:`_rewrite`.
 
         ``props`` entries are merged into the snapshot's props — e.g.
         derived tables record the source-table version they reflect, so
         a crash between source commit and derived commit is detectable.
-        ``cluster_files`` (keyed tables only) range-clusters the output
-        by (bucket, key) into that many sorted file splits — see
-        :meth:`compact`'s ``cluster_by_key``.
         """
-        snap = self.snapshot()
-        version = snap["version"] + 1
-        schema = StructType.fromJson(snap["schema"])
-        key = snap["key_col"]
-        if key is not None:
-            df = df.withColumn(BUCKET_COL, bucket_expr(key, snap["bucket_count"]))
-            ordered = [f.name for f in schema.fields]
-            new_files = self._write_data(
-            df.select(BUCKET_COL, *ordered),
-            version,
-            bucketed=True,
-            cluster_files=cluster_files,
-        )
-        else:
-            if cluster_files:
-                raise ValueError("cluster_files requires a keyed table")
-            new_files = self._write_data(df.select([f.name for f in schema.fields]), version, bucketed=False)
-        self._commit(
-            version,
-            {
-                **snap,
-                "version": version,
-                "parent": snap["version"],
-                "files": [f.to_json() for f in new_files],
-                "props": {**snap.get("props", {}), **(props or {})},
-                "operation": operation,
-                "summary": {},
-            },
-        )
-        return version
+        return self._rewrite(df.sparkSession, self.snapshot(), operation, df, props=props)
 
     @property
     def props(self) -> dict[str, Any]:
@@ -1458,20 +1363,7 @@ class LakeTable:
         ``target_rows_per_bucket`` on a live table so the next merge's
         bucket advisory uses the new policy).  The file set is
         unchanged, so the commit qualifies for ``read_appends``."""
-        snap = self.snapshot()
-        version = snap["version"] + 1
-        self._commit(
-            version,
-            {
-                **snap,
-                "version": version,
-                "parent": snap["version"],
-                "props": {**snap.get("props", {}), **props},
-                "operation": "set_props",
-                "summary": {"set": sorted(props)},
-            },
-        )
-        return version
+        return self._commit_next(self.snapshot(), "set_props", {"set": sorted(props)}, props)
 
     def vacuum(
         self, keep_versions: int = 2, min_age_seconds: float = 3600.0
@@ -1580,38 +1472,18 @@ class LakeTable:
         per bucket and a following clustered sweep would rewrite the
         whole table a second time."""
         snap = self.snapshot()
-        key = snap["key_col"]
-        if key is None:
+        if snap["key_col"] is None:
             raise ValueError("rebucket requires a keyed table")
-        schema = StructType.fromJson(snap["schema"])
-        df = self.read(spark, include_meta=True).withColumn(
-            BUCKET_COL, bucket_expr(key, new_bucket_count)
+        return self._rewrite(
+            spark,
+            snap,
+            "rebucket",
+            [FileEntry.from_json(f) for f in snap["files"]],
+            bucket_count=new_bucket_count,
+            cluster_by_key=cluster_by_key,
+            target_file_rows=target_file_rows,
+            summary={"from_buckets": snap["bucket_count"], "to_buckets": new_bucket_count},
         )
-        version = snap["version"] + 1
-        ordered = [f.name for f in schema.fields]
-        new_files = self._write_data(
-            df.select(BUCKET_COL, *ordered),
-            version,
-            bucketed=True,
-            cluster_files=(
-                self._cluster_split_count(snap, target_file_rows)
-                if cluster_by_key
-                else None
-            ),
-        )
-        self._commit(
-            version,
-            {
-                **snap,
-                "version": version,
-                "parent": snap["version"],
-                "bucket_count": new_bucket_count,
-                "files": [f.to_json() for f in new_files],
-                "operation": "rebucket",
-                "summary": {"from_buckets": snap["bucket_count"], "to_buckets": new_bucket_count},
-            },
-        )
-        return version
 
     def compact_buckets(
         self,
@@ -1644,10 +1516,8 @@ class LakeTable:
         and they never trip the file-count test (often 1 file/bucket) —
         so the sweep stays O(offending buckets), never O(table)."""
         snap = self.snapshot()
-        key = snap["key_col"]
-        if key is None:
+        if snap["key_col"] is None:
             raise ValueError("compact_buckets requires a keyed table")
-        schema = StructType.fromJson(snap["schema"])
         all_files = [FileEntry.from_json(f) for f in snap["files"]]
         per_bucket: dict[int, int] = {}
         for f in all_files:
@@ -1656,49 +1526,26 @@ class LakeTable:
         if cluster_by_key:
             fat = 2 * self._target_file_rows(snap, target_file_rows)
             hot |= {f.bucket for f in all_files if f.bucket != -1 and (f.rows or 0) > fat}
-        if not hot:
-            return {"compacted_buckets": 0, "rewritten_files": 0, "carried_files": len(all_files)}
         rewrite = [f for f in all_files if f.bucket in hot]
         carry = [f for f in all_files if f.bucket not in hot]
-        cluster_files = (
-            self._cluster_split_count(snap, target_file_rows, files=rewrite)
-            if cluster_by_key
-            else None
-        )
-        df = self._scan(spark, rewrite, schema).withColumn(
-            BUCKET_COL, bucket_expr(key, snap["bucket_count"])
-        )
-        if drop_tombstones and TOMBSTONE_COL in df.columns:
-            df = df.filter(~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)))
-        version = snap["version"] + 1
-        ordered = [f.name for f in schema.fields]
-        new_files = self._write_data(
-            df.select(BUCKET_COL, *ordered),
-            version,
-            bucketed=True,
-            cluster_files=cluster_files,
-        )
-        self._commit(
-            version,
-            {
-                **snap,
-                "version": version,
-                "parent": snap["version"],
-                "files": [f.to_json() for f in carry + new_files],
-                "operation": "compact_buckets",
-                "summary": {
-                    "compacted_buckets": len(hot),
-                    "rewritten_files": len(rewrite),
-                    "new_files": len(new_files),
-                    "carried_files": len(carry),
-                },
-            },
-        )
-        return {
+        stats = {
             "compacted_buckets": len(hot),
             "rewritten_files": len(rewrite),
             "carried_files": len(carry),
         }
+        if hot:
+            self._rewrite(
+                spark,
+                snap,
+                "compact_buckets",
+                rewrite,
+                carry=carry,
+                drop_tombstones=drop_tombstones,
+                cluster_by_key=cluster_by_key,
+                target_file_rows=target_file_rows,
+                summary=stats,
+            )
+        return stats
 
     def compact(
         self,
@@ -1721,38 +1568,87 @@ class LakeTable:
         The split count is sized driver-side from the manifest's footer
         row counts — no extra Spark job beyond repartitionByRange's
         sampling pass."""
-        cluster_files = (
-            self._cluster_split_count(self.snapshot(), target_file_rows)
-            if cluster_by_key
-            else None
-        )
-        df = self.read(spark, include_meta=True)
-        if drop_tombstones and TOMBSTONE_COL in df.columns:
-            df = df.filter(~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)))
-        return self.overwrite(
-            df.drop(BUCKET_COL), operation="compact", cluster_files=cluster_files
+        snap = self.snapshot()
+        return self._rewrite(
+            spark,
+            snap,
+            "compact",
+            [FileEntry.from_json(f) for f in snap["files"]],
+            drop_tombstones=drop_tombstones,
+            cluster_by_key=cluster_by_key,
+            target_file_rows=target_file_rows,
         )
 
-    def _cluster_split_count(
+    def _rewrite(
         self,
+        spark: SparkSession,
         snap: dict[str, Any],
-        target_file_rows: int | None,
-        files: list[FileEntry] | None = None,
+        operation: str,
+        source: DataFrame | list[FileEntry],
+        carry: list[FileEntry] | None = None,
+        drop_tombstones: bool = False,
+        bucket_count: int | None = None,
+        cluster_by_key: bool = False,
+        target_file_rows: int | None = None,
+        props: dict[str, Any] | None = None,
+        summary: dict[str, Any] | None = None,
     ) -> int:
-        """Range-split count for a clustered rewrite of ``files``
-        (default: the whole snapshot), from manifest footer row counts.
-        Tombstoned rows inflate the estimate slightly when the caller
-        drops them — harmless (marginally smaller files)."""
-        if snap["key_col"] is None:
-            raise ValueError("cluster_by_key requires a keyed table")
-        entries = (
-            files
-            if files is not None
-            else [FileEntry.from_json(f) for f in snap["files"]]
+        """The one copy-on-write rewrite behind :meth:`overwrite`,
+        :meth:`compact`, :meth:`compact_buckets` and :meth:`rebucket`:
+        the rows of ``source`` (a frame, or the files being replaced,
+        scanned here), less tombstones if ``drop_tombstones``, are
+        placed, written once and committed with the ``carry`` files in
+        one snapshot whose layout is ``bucket_count`` buckets (default:
+        the table's).  The commit summary records ``new_files``.
+
+        Placement on a keyed table is by bucket id
+        (:func:`place_by_bucket`: one write task and one file per
+        bucket).  ``cluster_by_key`` replaces it with
+        ``repartitionByRange(n, bucket, key)`` + a within-partition
+        sort, ``n`` sized from the replaced files' footer row counts
+        over ``target_file_rows`` — range partitioning on (bucket, key)
+        is lexicographic, so the files it produces INSIDE each bucket
+        hold pairwise-disjoint, key-sorted ranges.  The footer min/max
+        stats then make ``_prune_for_batch``'s exact range test (each
+        batch key against each file range, so the files BETWEEN two
+        keys carry) isolate ≤1 file per bucket per point key with zero
+        read-side changes — Iceberg's sort-ordered
+        ``rewrite_data_files`` expressed as one extra exchange on the
+        O(table) job that compaction already is.  The merge hot path
+        keeps its one bucket exchange: a range exchange there would add
+        a sampling pass per micro-batch for ranges the next merge
+        immediately fragments.  Tombstoned rows inflate the split
+        estimate slightly when they are dropped — harmless (marginally
+        smaller files)."""
+        key = snap["key_col"]
+        nb = snap["bucket_count"] if bucket_count is None else bucket_count
+        _check_bucket_count(nb)
+        schema = StructType.fromJson(snap["schema"])
+        df = source if isinstance(source, DataFrame) else self._scan(spark, source, schema)
+        if drop_tombstones and TOMBSTONE_COL in df.columns:
+            df = df.filter(~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)))
+        df = df.select([f.name for f in schema.fields])
+        if cluster_by_key:
+            if key is None:
+                raise ValueError("cluster_by_key requires a keyed table")
+            rows = sum(int(f.rows or 0) for f in source)
+            splits = max(1, -(-rows // self._target_file_rows(snap, target_file_rows)))
+            df = (
+                df.withColumn(BUCKET_COL, bucket_expr(key, nb))
+                .repartitionByRange(splits, F.col(BUCKET_COL), F.col(key))
+                .sortWithinPartitions(BUCKET_COL, key)
+            )
+        elif key is not None:
+            df = place_by_bucket(df, nb, key)
+        new_files = self._write_data(df, snap["version"] + 1)
+        return self._commit_next(
+            snap,
+            operation,
+            {**(summary or {}), "new_files": len(new_files)},
+            props,
+            files=[f.to_json() for f in (carry or []) + new_files],
+            bucket_count=nb,
         )
-        total = sum(int(f.rows or 0) for f in entries)
-        target = self._target_file_rows(snap, target_file_rows)
-        return max(1, -(-total // target))
 
     @staticmethod
     def _target_file_rows(

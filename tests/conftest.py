@@ -70,3 +70,20 @@ def plans_since(spark, since_ms: int, needle: str) -> list[str]:
         if needle in plan:
             plans.append(plan)
     return plans
+
+
+def final_plan_nodes(plan: str) -> list[str]:
+    """Node names of an executed plan's tree, skipping every AQE
+    ``Initial Plan`` section (it repeats the pre-optimization plan)."""
+    nodes, skip_from = [], None
+    for line in plan.split("\n\n", 1)[0].splitlines()[1:]:
+        name = line.lstrip(" :+-|")
+        indent = len(line) - len(name)
+        if skip_from is not None and indent >= skip_from:
+            continue
+        skip_from = None
+        if name.startswith("== Initial Plan =="):
+            skip_from = indent
+        elif not name.startswith("=="):
+            nodes.append(name)
+    return nodes

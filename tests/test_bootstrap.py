@@ -175,9 +175,9 @@ def test_bootstrap_plan_has_no_join(spark, tmp_table_dir):
 
     orig = lake.LakeTable._write_data
 
-    def spy(self, df, version, bucketed, **kw):
+    def spy(self, df, version):
         captured.append(df._jdf.queryExecution().executedPlan().toString())
-        return orig(self, df, version, bucketed, **kw)
+        return orig(self, df, version)
 
     lake.LakeTable._write_data = spy
     try:

@@ -7,14 +7,34 @@ the outbox export mode, against oracle-checked state."""
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from horizon_etl_spark.cdc.apply import CdcPipeline, apply_batch
 from horizon_etl_spark.cdc.generator import change_feed
 from horizon_etl_spark.cdc.oracle import assert_frames_equal, expected_final
-from tools import job_export, job_maintain
+from tools import job_apply, job_export, job_maintain
 
 from conftest import assert_disjoint_bucket_ranges
+
+
+def test_job_clis_reject_non_positive_bucket_counts():
+    """A bucket count below 1 is refused at argparse (exit 2), before any
+    Spark session or table is touched."""
+    apply_base = ["--pipeline-root", "p", "--feed", "f", "--checkpoint", "c"]
+    assert job_apply.parse_args(apply_base + ["--bucket-count", "8"]).bucket_count == 8
+    for argv in (
+        apply_base + ["--bucket-count", "0"],
+        apply_base + ["--bucket-count", "-4"],
+        ["--pipeline-root", "p", "--rebucket", "0"],
+        ["--pipeline-root", "p", "--rebucket", "-4"],
+        ["--pipeline-root", "p", "--rebucket", "many"],
+    ):
+        with pytest.raises(SystemExit) as exc:
+            (job_apply if "--feed" in argv else job_maintain).parse_args(argv)
+        assert exc.value.code == 2, argv
+    for ok in ("auto", "off", "16"):
+        assert job_maintain.parse_args(["--pipeline-root", "p", "--rebucket", ok]).rebucket == ok
 
 
 def test_set_props_is_metadata_only_commit(spark, tmp_table_dir):

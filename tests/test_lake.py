@@ -242,6 +242,26 @@ def test_rebucket_preserves_data_and_prunes_correctly(spark, tmp_table_dir):
     assert t.read(spark).count() == 200
 
 
+def test_non_positive_bucket_counts_are_rejected(spark, tmp_table_dir):
+    """A bucket count below 1 would commit a layout every later merge
+    fails on, and bucket -1 marks unbucketed files: create and rebucket
+    reject it before writing anything."""
+    with pytest.raises(ValueError, match="bucket_count"):
+        LakeTable.create(os.path.join(tmp_table_dir, "zero"), SCHEMA, key_col="doc_id", bucket_count=0)
+    assert not os.path.exists(os.path.join(tmp_table_dir, "zero"))
+    t = LakeTable.create(
+        os.path.join(tmp_table_dir, "t"), SCHEMA, key_col="doc_id", bucket_count=4
+    )
+    t.merge(batch_df(spark, [("insert", f"k{i:02d}", i, [i], "wiki") for i in range(20)]))
+    version, data = t.current_version(), sorted(os.listdir(os.path.join(t.path, "data")))
+    for bad in (0, -4):
+        with pytest.raises(ValueError, match="bucket_count"):
+            t.rebucket(spark, bad)
+    assert t.current_version() == version and t.bucket_count == 4
+    assert sorted(os.listdir(os.path.join(t.path, "data"))) == data
+    assert t.read(spark).count() == 20
+
+
 def test_compact_buckets_rewrites_only_hot_buckets(spark, tmp_table_dir):
     t = LakeTable.create(
         os.path.join(tmp_table_dir, "t"), SCHEMA, key_col="doc_id", bucket_count=8

@@ -23,7 +23,7 @@ from horizon_etl_spark.cdc import schema as S
 from horizon_etl_spark.cdc.attrs import attr_lww_reduce
 from horizon_etl_spark.tables.lake import FileEntry, LakeTable, bucket_expr
 
-from conftest import plans_since, sql_clock_ms
+from conftest import final_plan_nodes, plans_since, sql_clock_ms
 
 WHOLE_ROW = StructType(
     [
@@ -91,23 +91,6 @@ def _create(root, mode, bucket_count, log_schema=None):
     return table, sink
 
 
-def _final_plan_nodes(plan: str) -> list[str]:
-    """Node names of an executed plan's tree, skipping every AQE
-    ``Initial Plan`` section (it repeats the pre-optimization plan)."""
-    nodes, skip_from = [], None
-    for line in plan.split("\n\n", 1)[0].splitlines()[1:]:
-        name = line.lstrip(" :+-|")
-        indent = len(line) - len(name)
-        if skip_from is not None and indent >= skip_from:
-            continue
-        skip_from = None
-        if name.startswith("== Initial Plan =="):
-            skip_from = indent
-        elif not name.startswith("=="):
-            nodes.append(name)
-    return nodes
-
-
 @pytest.mark.parametrize("with_log", [False, True], ids=["log_off", "log_on"])
 @pytest.mark.parametrize("mode", ["whole_row", "attr"])
 def test_merge_write_is_one_shuffle_one_sorted_file_per_bucket(
@@ -159,7 +142,7 @@ def test_merge_write_is_one_shuffle_one_sorted_file_per_bucket(
     out_prefix = os.path.join(table.path, "data", f"commit-{snap['version']:08d}-")
     plans = plans_since(spark, since, out_prefix)
     assert len(plans) == 1
-    nodes = _final_plan_nodes(plans[0])
+    nodes = final_plan_nodes(plans[0])
     assert len([n for n in nodes if n.startswith("Exchange")]) == 1, nodes
     assert not [n for n in nodes if "Join" in n], nodes
 

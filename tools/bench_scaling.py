@@ -154,10 +154,17 @@ def main():
         write_markdown(report, args.out)
 
 
+SECTION_HEADING = "# BENCH — CDC apply scaling evidence"
+
+
 def write_markdown(report: dict, path: str) -> None:
+    """Write the scaling section into ``path``: it replaces the lines
+    from its ``SECTION_HEADING`` line up to the next top-level heading,
+    or is appended when the file has no such section.  Every other
+    section of the file is kept as it is."""
     w = report["workloads"]
     lines = [
-        "# BENCH — CDC apply scaling evidence (N vs 4N executors)",
+        f"{SECTION_HEADING} (N vs 4N executors)",
         "",
         "Same job, same input, same config; only the executor count",
         "changes (`local-cluster[N,1,6g]`, real separate executor JVMs).",
@@ -200,8 +207,18 @@ def write_markdown(report: dict, path: str) -> None:
         "magnitude higher, and grows with executor count at the",
         "efficiency shown above.",
     ]
+    old: list[str] = []
+    if os.path.exists(path):
+        with open(path) as f:
+            old = f.read().splitlines()
+    start = next((i for i, ln in enumerate(old) if ln.startswith(SECTION_HEADING)), len(old))
+    end = next((i for i in range(start + 1, len(old)) if old[i].startswith("# ")), len(old))
+    if 0 < start == len(old):
+        lines = [""] + lines  # appended below the file's last section
+    if end < len(old):
+        lines = lines + [""]  # the next section keeps its blank line above
     with open(path, "w") as f:
-        f.write("\n".join(lines) + "\n")
+        f.write("\n".join(old[:start] + lines + old[end:]) + "\n")
 
 
 if __name__ == "__main__":

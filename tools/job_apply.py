@@ -31,6 +31,13 @@ import json
 import sys
 
 
+def _bucket_count(s: str) -> int:
+    n = int(s)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"bucket count must be >= 1, got {n}")
+    return n
+
+
 def parse_args(argv):
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--pipeline-root", required=True)
@@ -39,7 +46,7 @@ def parse_args(argv):
     ap.add_argument(
         "--feed-format", default="parquet", choices=["parquet", "json", "csv", "xlsx"]
     )
-    ap.add_argument("--bucket-count", type=int, default=16)
+    ap.add_argument("--bucket-count", type=_bucket_count, default=16)
     ap.add_argument("--attr-lww", action="store_true")
     ap.add_argument("--with-rollup", action="store_true")
     ap.add_argument("--max-files-per-trigger", type=int, default=None)

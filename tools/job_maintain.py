@@ -35,12 +35,19 @@ import json
 import sys
 
 
+def _rebucket(s: str) -> str:
+    if s not in ("auto", "off") and not (s.isdigit() and int(s) >= 1):
+        raise argparse.ArgumentTypeError(f"expected auto, off or a bucket count >= 1, got {s!r}")
+    return s
+
+
 def parse_args(argv):
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--pipeline-root", required=True)
     ap.add_argument(
         "--rebucket",
         default="auto",
+        type=_rebucket,
         help="'auto' = follow the merge-time advisory; 'off'; or an explicit count",
     )
     ap.add_argument("--max-files-per-bucket", type=int, default=8)
