@@ -287,31 +287,18 @@ def apply_batch(
                 f"del={stats['deleted']} rewrote={stats['rewritten_files']} "
                 f"carried={stats['carried_files']} placed={placed}"
             ),
-            # per-table snapshot anchor for rollback_to_batch (cheap:
-            # driver-side directory listings, no data scan)
-            "versions": json.dumps(
-                {
-                    name: getattr(pipe, name).current_version()
-                    for name in ROLLBACK_TABLES
-                }
-            ),
+            "versions": _versions_anchor(pipe),
         }
         pipe.runs.append_rows([run], operation=f"run(batch={batch_id})")
         return run
     except Exception:
+        # the run-row writer fills the counts and anchor it omits with null
         failed = {
             "batch_id": batch_id,
             "started_at": started,
             "finished_at": _now(),
             "status": "failed",
-            "input_rows": None,
-            "applied": None,
-            "deduped": None,
-            "quarantined": None,
-            "skipped_stale": None,
-            "delete_noop": None,
             "notes": "exception during apply",
-            "versions": None,
         }
         try:
             pipe.runs.append_rows([failed])
@@ -326,6 +313,13 @@ def apply_batch(
         # maintenance evaluating the change images — has run
         if stats is not None and stats.get("persisted_join") is not None:
             stats["persisted_join"].unpersist()
+
+
+def _versions_anchor(pipe: CdcPipeline) -> str:
+    """A run row's per-table snapshot versions, the anchor
+    :func:`rollback_to_batch` restores (driver-side directory listings,
+    no data scan)."""
+    return json.dumps({name: getattr(pipe, name).current_version() for name in ROLLBACK_TABLES})
 
 
 def _write_quarantine(
@@ -829,9 +823,7 @@ def bootstrap(
         "skipped_stale": 0,
         "delete_noop": 0,
         "notes": f"initial snapshot load at lsn={as_of_lsn}",
-        "versions": json.dumps(
-            {name: getattr(pipe, name).current_version() for name in ROLLBACK_TABLES}
-        ),
+        "versions": _versions_anchor(pipe),
     }
     pipe.runs.append_rows([run], operation="run(bootstrap)")
     return {
@@ -903,12 +895,6 @@ def rollback_to_batch(
         "started_at": _now(),
         "finished_at": _now(),
         "status": "rollback",
-        "input_rows": None,
-        "applied": None,
-        "deduped": None,
-        "quarantined": None,
-        "skipped_stale": None,
-        "delete_noop": None,
         "notes": f"rolled back to post-batch-{batch_id} snapshots",
         "versions": json.dumps(restored),
     }

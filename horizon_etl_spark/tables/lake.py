@@ -43,6 +43,7 @@ exactly like Iceberg's metadata layer.
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 import shutil
@@ -111,8 +112,7 @@ class _BucketSummary:
     """Per-bucket facts about one merge batch, all from one aggregation
     (:meth:`LakeTable._bucket_summary`)."""
 
-    # touched bucket -> stat-bearing files whose [min, max] holds a batch key
-    in_range: dict[int, set[int]]
+    keys: dict[int, list]  # touched bucket -> its sorted batch keys ([] if no file has stats)
     aggs: dict[int, dict[str, Any]]  # bucket -> the caller's bucket_aggs values
     misplaced: bool  # some batch row's BUCKET_COL is not its key's bucket
 
@@ -144,60 +144,33 @@ def place_by_bucket(df: DataFrame, bucket_count: int, key_col: str | None = None
     return df.repartitionById(parts, F.col(BUCKET_COL))
 
 
-def _has_key_range(f: FileEntry) -> bool:
-    """A bucketed file whose footer gave [min_key, max_key] stats (only
-    string keys get them): the files the exact range test covers."""
-    return f.bucket >= 0 and f.min_key is not None and f.max_key is not None
-
-
-# Key-range text up to which the exact range test inlines the ranges
-# as a literal (no extra job, fastest); past it they ride a broadcast
-# (one small job more), since the SQL UI keeps every merge's plan text
-# (~2× these bytes) and every task carries the literal.
-RANGE_LITERAL_MAX_BYTES = 1 << 14
-_RANGES_TYPE = "array<struct<lo:string,hi:string,fid:int>>"
-
-
-def _with_range_hits(src: DataFrame, files: list[FileEntry], key_col: str) -> DataFrame:
-    """The exact range test, per batch row: ``src`` plus ``_in_range``,
-    the ids (positions in ``files``) of the files in the row's bucket
-    whose ``[min_key, max_key]`` holds the row's key, bounds inclusive
-    (null when no file has stats).  Collected per bucket by the batch
-    summary, it lets the pruner carry every file no batch key falls in,
-    including the files BETWEEN two keys, so on a key-clustered table a
-    point key rewrites ~1 file.  The ranges come
-    as one ``from_json`` literal indexed by bucket, or past
-    ``RANGE_LITERAL_MAX_BYTES`` as one broadcast row per bucket joined
-    on it: no batch row repeats, and the batch keeps its placement."""
-    by_bucket: dict[int, list[dict[str, Any]]] = {}
-    size = 0
-    for fid, f in enumerate(files):
-        if _has_key_range(f):
-            by_bucket.setdefault(f.bucket, []).append({"lo": f.min_key, "hi": f.max_key, "fid": fid})
-            size += len(f.min_key) + len(f.max_key)
-    if not by_bucket:
-        return src.withColumn("_in_range", F.lit(None).cast("array<int>"))
-    if size <= RANGE_LITERAL_MAX_BYTES:
-        dense = [by_bucket.get(b, []) for b in range(max(by_bucket) + 1)]
-        ranges = F.get(
-            F.from_json(F.lit(json.dumps(dense)), f"array<{_RANGES_TYPE}>"), F.col(BUCKET_COL)
-        )
-    else:
-        import pyarrow as pa
-
-        # an arrow table becomes a JVM-side scan: no Python worker
-        struct = pa.struct([("lo", pa.string()), ("hi", pa.string()), ("fid", pa.int32())])
-        shipped = src.sparkSession.createDataFrame(pa.table({
-            BUCKET_COL: pa.array(list(by_bucket), pa.int32()),
-            "_ranges": pa.array(list(by_bucket.values()), pa.list_(struct)),
-        }))
-        src = src.join(F.broadcast(shipped), BUCKET_COL, "left")
-        ranges = F.col("_ranges")
-    k = F.col(key_col)
-    hits = F.transform(
-        F.filter(ranges, lambda r: (r["lo"] <= k) & (k <= r["hi"])), lambda r: r["fid"]
-    )
-    return src.withColumn("_in_range", hits).drop("_ranges")
+def _split_by_keys(
+    files: list[FileEntry], keys_by_bucket: dict[int, list]
+) -> tuple[list[FileEntry], list[FileEntry]]:
+    """The one range test of point reads and merges: ``files`` split
+    into (hit, miss) for ``keys_by_bucket`` (touched bucket -> its keys,
+    sorted).  An unbucketed file (no layout info) hits if any bucket is
+    touched; a file of an untouched bucket misses; a file without
+    ``[min_key, max_key]`` stats (only string keys get them) hits; any
+    other file hits iff a key of its bucket lies in its range, bounds
+    inclusive — one ``bisect_left`` per file, so on a key-clustered
+    table the files BETWEEN two keys miss.  No false misses: the stats
+    are true bounds and every key is tested."""
+    hit: list[FileEntry] = []
+    miss: list[FileEntry] = []
+    for f in files:
+        if f.bucket == -1:
+            keep = bool(keys_by_bucket)
+        elif f.bucket not in keys_by_bucket:
+            keep = False
+        elif f.min_key is None or f.max_key is None:
+            keep = True
+        else:
+            ks = keys_by_bucket[f.bucket]
+            i = bisect.bisect_left(ks, f.min_key)
+            keep = i < len(ks) and ks[i] <= f.max_key
+        (hit if keep else miss).append(f)
+    return hit, miss
 
 
 # Default sizing target: a bucket is one merge-write task and one unit
@@ -557,15 +530,12 @@ class LakeTable:
         snap: dict[str, Any],
         key_df: DataFrame | None = None,
     ) -> list[FileEntry]:
-        """Driver-side file pruning for a point-key lookup: bucket +
-        min/max range.  The only Spark work is one tiny job computing the
-        keys' buckets with the TABLE's key dtype (the engine never
+        """Driver-side file pruning for a point-key lookup: the keys'
+        buckets, then :func:`_split_by_keys`, the range test the merge
+        uses.  The only Spark work is one tiny job computing the keys'
+        buckets with the TABLE's key dtype (the engine never
         re-implements the hash in Python, and hashing e.g. a long key as
-        its string form would silently probe the wrong bucket).  Each
-        bucket's keys are sorted once and bisected per file, so pruning
-        costs O(files × log keys)."""
-        import bisect
-
+        its string form would silently probe the wrong bucket)."""
         key_col = snap["key_col"]
         if key_df is None:
             key_df = spark.createDataFrame(
@@ -578,20 +548,7 @@ class LakeTable:
             by_bucket.setdefault(r["_b"], []).append(r[key_col])
         for ks in by_bucket.values():
             ks.sort()
-        out: list[FileEntry] = []
-        for f in [FileEntry.from_json(x) for x in snap["files"]]:
-            if f.bucket == -1:
-                out.append(f)  # unbucketed file: no layout info, scan it
-                continue
-            if f.bucket not in by_bucket:
-                continue
-            if f.min_key is not None and f.max_key is not None:
-                ks = by_bucket[f.bucket]
-                i = bisect.bisect_left(ks, f.min_key)
-                if i >= len(ks) or ks[i] > f.max_key:
-                    continue
-            out.append(f)
-        return out
+        return _split_by_keys([FileEntry.from_json(x) for x in snap["files"]], by_bucket)[0]
 
     def read_keys(
         self,
@@ -923,26 +880,25 @@ class LakeTable:
     ) -> _BucketSummary:
         """The merge's one per-bucket aggregation over a bucketed batch,
         collected as O(buckets) rows by a single ``groupBy``: per touched
-        bucket the files its keys fall in (the exact range test, see
-        :func:`_with_range_hits`), the caller's ``bucket_aggs``
+        bucket its sorted batch keys (for :func:`_split_by_keys`; only
+        when some file has key stats), the caller's ``bucket_aggs``
         (``apply_batch``'s bucket metrics), and whether any row's
         ``BUCKET_COL`` differs from its key's bucket."""
-        key = self.key_col
+        key = snap["key_col"]
         names = list(bucket_aggs or {})
-        ranged = _with_range_hits(src, [FileEntry.from_json(f) for f in snap["files"]], key)
+        ranged = any(f.get("min_key") is not None for f in snap["files"])
         touched = (
-            ranged.groupBy(BUCKET_COL)
+            src.groupBy(BUCKET_COL)
             .agg(
-                F.array_distinct(F.flatten(F.collect_set("_in_range"))).alias("_in_range"),
-                F.max(F.col(BUCKET_COL) != bucket_expr(key, snap["bucket_count"])).alias(
-                    "_misplaced"
-                ),
+                (F.array_sort(F.collect_list(key)) if ranged else F.array()).alias("_keys"),
+                F.max(F.col(BUCKET_COL) != bucket_expr(key, snap["bucket_count"]))
+                .alias("_misplaced"),
                 *[bucket_aggs[n].alias(n) for n in names],
             )
             .collect()
         )
         return _BucketSummary(
-            in_range={r[BUCKET_COL]: set(r["_in_range"]) for r in touched},
+            keys={r[BUCKET_COL]: r["_keys"] for r in touched},
             aggs={r[BUCKET_COL]: {n: r[n] for n in names} for r in touched} if names else {},
             misplaced=any(r["_misplaced"] for r in touched),
         )
@@ -953,31 +909,11 @@ class LakeTable:
         snap: dict[str, Any],
         summary: _BucketSummary | None = None,
     ) -> tuple[list[FileEntry], list[FileEntry]]:
-        """Bucket + exact key-range file pruning for a bucketed batch,
-        decided driver-side from the batch's :meth:`_bucket_summary`
-        (computed here when ``summary`` is None): a file in a touched
-        bucket is rewritten unless its ``[min_key, max_key]`` holds no
-        batch key; every other file carries.  The test has no false
-        negatives: file stats are true bounds and the summary tests
-        every batch key."""
+        """(rewrite, carry) for a bucketed batch: :func:`_split_by_keys`
+        over its :meth:`_bucket_summary` (computed here if not given)."""
         if summary is None:
             summary = self._bucket_summary(src, snap)
-        rewrite_files: list[FileEntry] = []
-        carry_files: list[FileEntry] = []
-        for idx, f in enumerate(FileEntry.from_json(j) for j in snap["files"]):
-            if f.bucket == -1:
-                # unbucketed file on a keyed table (stray append): no
-                # layout info, so any non-empty batch may touch it —
-                # must rewrite, mirroring read_keys' always-scan rule
-                keep = bool(summary.in_range)
-            elif f.bucket not in summary.in_range:
-                keep = False
-            else:
-                # a file without key stats (non-string key) is never
-                # range-carried
-                keep = not _has_key_range(f) or idx in summary.in_range[f.bucket]
-            (rewrite_files if keep else carry_files).append(f)
-        return rewrite_files, carry_files
+        return _split_by_keys([FileEntry.from_json(j) for j in snap["files"]], summary.keys)
 
     def _bucket_policy_advice(
         self, snap: dict[str, Any], files: list[FileEntry], summary: dict[str, Any]
@@ -1057,8 +993,12 @@ class LakeTable:
         the write, the lineage sink, ``persist_join`` and the commit are
         shared with :meth:`merge_attrs` — see :meth:`_merge_core`.
         """
+        snap = self.snapshot()
+        if snap.get("attr_lww"):
+            # whole-row LWW would null _del_lsn and the _alsn_* columns
+            raise ValueError("merge cannot write an attr_lww table: use merge_attrs")
         return self._merge_core(
-            self.snapshot(),
+            snap,
             _RowLww(batch, op_col, lsn_col, delete_op),
             change_log_sink,
             change_log_extra,
@@ -1138,9 +1078,10 @@ class LakeTable:
         bucket_aggs: dict[str, Column] | None,
     ) -> dict[str, Any]:
         """The one keyed-MERGE skeleton behind :meth:`merge` and
-        :meth:`merge_attrs`: evolve → prune + scan → one bucket-clustered
-        co-group of table and batch rows → stats riding the data write →
-        lineage sink → commit.
+        :meth:`merge_attrs`: evolve → batch summary → prune (the range
+        test of :meth:`read_keys`, :func:`_split_by_keys`) + scan → one
+        bucket-clustered co-group of table and batch rows → stats riding
+        the data write → lineage sink → commit.
 
         The co-group is the merge's only shuffle: both sides are
         repartitioned by bucket id together and grouped per key, which
@@ -1158,8 +1099,8 @@ class LakeTable:
         (the sink frame and the row-image ``change_log``).
 
         Per-bucket aggregates: ``bucket_aggs`` maps names to aggregate
-        columns over the batch; they are evaluated by the pruner's one
-        per-bucket aggregation (:meth:`_bucket_summary`) and come back
+        columns over the batch; they ride the summary's one per-bucket
+        aggregation (:meth:`_bucket_summary`) and come back
         as ``bucket_aggs`` — ``{bucket: {name: value}}`` for every
         bucket the batch touches.  The batch may carry
         ``KEY_EVENTS_COL`` for them.
@@ -1609,10 +1550,9 @@ class LakeTable:
         over ``target_file_rows`` — range partitioning on (bucket, key)
         is lexicographic, so the files it produces INSIDE each bucket
         hold pairwise-disjoint, key-sorted ranges.  The footer min/max
-        stats then make ``_prune_for_batch``'s exact range test (each
-        batch key against each file range, so the files BETWEEN two
-        keys carry) isolate ≤1 file per bucket per point key with zero
-        read-side changes — Iceberg's sort-ordered
+        stats then let :func:`_split_by_keys` (the files BETWEEN two keys
+        carry) isolate ≤1 file per bucket per point key, for merges and
+        reads alike — Iceberg's sort-ordered
         ``rewrite_data_files`` expressed as one extra exchange on the
         O(table) job that compaction already is.  The merge hot path
         keeps its one bucket exchange: a range exchange there would add

@@ -4,6 +4,7 @@ sequential-fold oracle regardless of batching, order, or redelivery."""
 import os
 import random
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -114,6 +115,24 @@ def test_delete_wipes_and_blocks_older_asserts(spark, tmp_table_dir):
     apply_batches(t, spark, [[("update", "a", 8, 42, None, ["score"])]])
     r = t.read(spark).collect()[0]
     assert r["score"] == 42 and r["label"] is None
+
+
+def test_whole_row_merge_on_attr_table_is_refused(spark, tmp_table_dir):
+    """``merge`` on an attr_lww table raises and commits nothing: its
+    whole-row rule would take ``_del_lsn`` and the ``_alsn_*`` columns
+    for payload and null them, so a delete would drop the watermark and
+    a stale per-attribute assertion below it would revive the row."""
+    t = make_table(tmp_table_dir)
+    apply_batches(t, spark, [[("update", "a", 1, 1, "x", None)]])
+    version = t.current_version()
+    delete = spark.createDataFrame([("a", "delete", 10)], "doc_id string, op string, lsn long")
+    with pytest.raises(ValueError, match="attr_lww"):
+        t.merge(delete)
+    assert t.current_version() == version
+    # the same delete through merge_attrs keeps the watermark
+    apply_batches(t, spark, [[("delete", "a", 10, None, None, None)]])
+    apply_batches(t, spark, [[("update", "a", 7, 2, None, ["score"])]])
+    assert t.read(spark).count() == 0
 
 
 def test_redelivery_idempotent(spark, tmp_table_dir):

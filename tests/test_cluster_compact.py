@@ -12,7 +12,6 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from horizon_etl_spark.tables import lake
 from horizon_etl_spark.tables.lake import (
     BUCKET_COL,
     FileEntry,
@@ -231,6 +230,9 @@ def test_prune_soundness_randomized(spark, tmp_table_dir):
             rewrite, carry = _prune(t, batch)
             keys = {f"k{i:06d}" for i in ids}
             rewrite_paths = {f.path for f in rewrite}
+            # the point read of the same keys scans exactly those files
+            read_paths = {f.path for f in t._files_for_keys(spark, sorted(keys), t.snapshot())}
+            assert read_paths == rewrite_paths
             for f in rewrite + carry:
                 file_keys = set(
                     pq.read_table(os.path.join(t.path, f.path), columns=["k"])[
@@ -377,36 +379,30 @@ def test_non_string_key_table_never_range_carries(spark, tmp_table_dir):
     assert t.read(spark).count() == 301
 
 
-def test_range_test_past_literal_budget_rides_broadcast(
-    spark, tmp_table_dir, evens_clustered, monkeypatch
-):
-    """Key ranges past ``RANGE_LITERAL_MAX_BYTES`` reach the summary as
-    a broadcast instead of a literal: the same files rewrite and carry,
-    and no file's bounds appear in the plan text the SQL status store
-    keeps per merge, so that text no longer grows with the table."""
+def test_range_test_keeps_file_bounds_out_of_the_plan(spark, tmp_table_dir, evens_clustered):
+    """The range test runs on the driver over each touched bucket's
+    sorted keys, which the batch summary collects: no file's bounds
+    enter the summary's plan, so the plan text the SQL status store
+    keeps per merge does not grow with the table, and nothing is
+    broadcast.  Files holding a batch key rewrite, all others carry."""
     t = _copy(evens_clustered, tmp_table_dir)
     files = _files(t)
+    holders = files[:-1:3] + [files[-1]]
     present = [f.min_key for f in files[:-1:3]] + [files[-1].max_key]
-    probe = _batch(spark, [int(k[1:]) for k in _gap_keys(spark, t)[:4] + present], lsn=5)
-
-    def decisions():
-        rewrite, carry = _prune(t, probe)
-        return sorted(f.path for f in rewrite), sorted(f.path for f in carry)
+    gaps = _gap_keys(spark, t)[:4]
+    probe = _batch(spark, [int(k[1:]) for k in gaps + present], lsn=5)
 
     since = sql_clock_ms(spark)
-    inline = decisions()
+    rewrite, carry = _prune(t, probe)
     # the newest batch summary's plan: the one naming its _misplaced aggregate
-    literal_plan = plans_since(spark, since, "_misplaced")[0]
-    assert files[0].min_key in literal_plan and files[-1].max_key in literal_plan
-    monkeypatch.setattr(lake, "RANGE_LITERAL_MAX_BYTES", 0)
-    since = sql_clock_ms(spark)
-    assert decisions() == inline
-    assert len(inline[0]) == len(present) and inline[1]
     plan = plans_since(spark, since, "_misplaced")[0]
-    assert "BroadcastExchange" in plan
+    assert "BroadcastExchange" not in plan
     assert not any(f.min_key in plan or f.max_key in plan for f in files)
+    assert sorted(f.path for f in rewrite) == sorted(f.path for f in holders)
+    assert len(carry) == len(files) - len(holders) > 0
     st = t.merge(probe)
     assert st["rewritten_files"] == len(present) and st["updated"] == len(present)
+    assert st["inserted"] == len(gaps) > 0
 
 
 def test_batch_with_misplaced_bucket_column_is_retagged(spark, tmp_table_dir, evens_clustered):
